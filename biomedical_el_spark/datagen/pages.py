@@ -14,7 +14,7 @@ via spark.range + mapInPandas (scales to any row count; no driver-side
 data), deterministic under retries (no RNG state, pure f(id)).
 
 The skew variant maps a fraction of ALL rows to entity 0 — the 'hot block'
-fixture exercising salting + AQE skew handling (SURVEY.md §4.1).
+fixture exercising the block-size cap + AQE skew handling (SURVEY.md §4.1).
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
-"""Deterministic hashing primitives: MinHash signatures, LSH band keys,
-SimHash, rolling-hash document fingerprints.
+"""Deterministic hashing primitives: LSH band keys, rolling-hash document
+fingerprints, md5-packed node ids.
 
 All pure `pyspark.sql.functions` expressions — JVM-side, no Python in the
 hot path, fully deterministic under task retries (BASELINE invariant: never
@@ -11,7 +11,8 @@ entities (utils_e2e_span.py:340-461, FAISS declared but dead at :8,:265-270).
 MinHash-LSH banding is the horizontally-scalable analogue: two records
 sharing any band key become a candidate pair without an all-pairs join.
 
-Two hash modes:
+The SQL MinHash signature itself lives in `blocking.shingle_blocks`, in
+two hash modes:
   - "xxhash64" (default): Spark's built-in 64-bit xxHash — fastest, codegen.
   - "md5": byte-identical in DuckDB → used by oracle-checked queries.
 """
@@ -20,36 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def minhash_signature(
-    shingle_col: Column, num_hashes: int = 16, mode: str = "xxhash64"
-) -> Column:
-    """MinHash signature of an array<string> of shingles.
-
-    Returns array<bigint> (xxhash64 mode) or array<string> (md5 mode, hex
-    minima — lexicographic min over hex digests is a valid uniform minhash
-    because md5 output is uniform).  One pass per seed; Catalyst folds the
-    transforms into a single projection.
-    """
-    if mode == "xxhash64":
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda s: F.array_min(
-                F.transform(shingle_col, lambda x: F.xxhash64(s, x))
-            ),
-        )
-    if mode == "md5":
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda s: F.array_min(
-                F.transform(
-                    shingle_col,
-                    lambda x: F.md5(F.concat(s.cast("string"), F.lit(":"), x)),
-                )
-            ),
-        )
-    raise ValueError(f"unknown minhash mode: {mode}")
 
 
 def band_keys(sig_col: Column, bands: int, rows: int) -> Column:
@@ -73,35 +44,6 @@ def hex_prefix_to_long(hex_col: Column, chars: int = 8) -> Column:
     return F.conv(F.substring(hex_col, 1, chars), 16, 10).cast("bigint")
 
 
-def simhash_bits(token_col: Column, bits: int = 16) -> Column:
-    """Per-token ±1 votes for a `bits`-bit SimHash, from md5 nibbles.
-
-    Returns array<int> of length `bits` with entries ±1.  Aggregate with
-    explode + groupBy(doc).sum per bit position (map-side partial agg), then
-    `simhash_from_votes`.  Portable to DuckDB (same md5 nibbles).
-    """
-    assert bits <= 32
-    h = F.md5(token_col)
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(bits)),
-        lambda k: F.when(F.substring(h, k, 1) >= "8", 1).otherwise(-1),
-    )
-
-
-def simhash_from_votes(votes_col: Column) -> Column:
-    """array<bigint> of summed votes → simhash value: bit k set iff
-    vote_k > 0."""
-    return F.aggregate(
-        F.zip_with(
-            votes_col,
-            F.sequence(F.lit(0), F.size(votes_col) - 1),
-            lambda v, k: F.when(v > 0, F.shiftleft(F.lit(1), k)).otherwise(0),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
 def rolling_fingerprint(token_col: Column, modulus: int = 1_000_000_007) -> Column:
     """Order-sensitive polynomial rolling hash over tokens (document
     fingerprint):  h = fold(tokens, 0, acc*31 + tokhash mod M) where
@@ -115,12 +57,6 @@ def rolling_fingerprint(token_col: Column, modulus: int = 1_000_000_007) -> Colu
             acc * 31 + hex_prefix_to_long(F.md5(t)), F.lit(modulus)
         ),
     )
-
-
-def stable_salt(key_col: Column, buckets: int) -> Column:
-    """Deterministic salt in [0, buckets): pmod(xxhash64(key), buckets).
-    Used to split hot LSH blocks (north_star: 'salting of hot blocks')."""
-    return F.pmod(F.xxhash64(key_col), F.lit(buckets)).cast("int")
 
 
 def _md5_chunk32(hex_col: Column, pos: int) -> Column:

@@ -56,28 +56,13 @@ def minhash_batch(
     3-shingles.  Docs with <3 tokens fall back to token-level hashes;
     empty docs get the sentinel signature (all-identical ⇒ they block
     together, which is semantically right: empty pages ARE duplicates)."""
-    sig, _ = minhash_batch_shingles(texts, num_hashes, seed, emit_shingles=False)
-    return sig
-
-
-def minhash_batch_shingles(
-    texts: pd.Series,
-    num_hashes: int = 32,
-    seed: int = 42,
-    emit_shingles: bool = True,
-) -> tuple[np.ndarray, list | None]:
-    """minhash_batch plus the per-doc DISTINCT shingle hashes the kernel
-    already holds — [N] lists of int64 — so the TF-IDF rare-shingle
-    channel can reuse this pass instead of re-tokenizing raw text
-    JVM-side (the A/B'd +69% channel overhead was mostly that rework)."""
     enc = texts.fillna("").astype(str).str.lower().str.encode("utf-8")
     lens = np.fromiter((len(x) for x in enc), np.int64, count=len(enc))
     n = len(enc)
     out = np.full((n, num_hashes), _SENTINEL, dtype=np.uint64)
-    empty = [np.zeros(0, np.int64)] * n if emit_shingles else None
     total = int(lens.sum())
     if n == 0 or total == 0:
-        return out, empty
+        return out
 
     buf = np.frombuffer(b"".join(enc), dtype=np.uint8)
     seg = np.repeat(np.arange(n, dtype=np.int64), lens)
@@ -88,7 +73,7 @@ def minhash_batch_shingles(
     tok_start = is_tok & (~prev_is_tok | (prev_seg != seg))
     T = int(tok_start.sum())
     if T == 0:
-        return out, empty
+        return out
 
     tid = np.cumsum(tok_start) - 1  # token id per byte (valid where is_tok)
     tok_seg = seg[tok_start]
@@ -162,15 +147,4 @@ def minhash_batch_shingles(
             mins = np.minimum.reduceat(v1, rel)
             out[d0 : d1 + 1, i] = np.where(cc, mins, _SENTINEL)
         pos, d0 = end, d1 + 1
-    if not emit_shingles:
-        return out, None
-    # per-doc DISTINCT shingle hashes (sh is already grouped by doc):
-    # lexsort inside each doc, mask first occurrences, split by doc
-    order = np.lexsort((sh, sh_seg))
-    s2, g2 = sh[order], sh_seg[order]
-    first = np.ones(len(s2), dtype=bool)
-    if len(s2) > 1:
-        first[1:] = (s2[1:] != s2[:-1]) | (g2[1:] != g2[:-1])
-    s3, g3 = s2[first].view(np.int64), g2[first]
-    splits = np.cumsum(np.bincount(g3, minlength=n))[:-1]
-    return out, np.split(s3, splits)
+    return out

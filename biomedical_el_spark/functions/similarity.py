@@ -28,7 +28,8 @@ def cosine_expr(a: Column, b: Column) -> Column:
     share sentinel minhash signatures so they DO block together into
     scored pairs) — under Spark 4's default ANSI mode an unguarded
     dot/(na*nb) would throw DIVIDE_BY_ZERO and kill the scoring stage.
-    Convention: 0.0, matching `cosine_udf`."""
+    Convention: 0.0, matching the flagship scorer's numpy cosine
+    (`scoring._score_kernels_udf`)."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -41,20 +42,6 @@ def cosine_expr(a: Column, b: Column) -> Column:
         F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
     )
     return F.when(na * nb == 0, F.lit(0.0)).otherwise(dot / (na * nb))
-
-
-@F.pandas_udf(T.DoubleType())
-def cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batched cosine: stack Arrow list columns into [N, d] and einsum —
-    the Spark analogue of the reference's torch.bmm dot scorer
-    (modeling_e2e_span.py:227-232)."""
-    av = np.stack(a.to_numpy())
-    bv = np.stack(b.to_numpy())
-    dots = np.einsum("ij,ij->i", av, bv)
-    norms = np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        out = np.where(norms > 0, dots / norms, 0.0)
-    return pd.Series(out)
 
 
 @F.pandas_udf(T.DoubleType())

@@ -77,13 +77,6 @@ def tokens(col: Column) -> Column:
     return F.filter(F.split(F.trim(col), _WS), lambda t: t != F.lit(""))
 
 
-def word_tokens(col: Column) -> Column:
-    """BPE-ish word/punct tokenization: words, numbers, or single punct
-    marks (BasicTokenizer punctuation isolation,
-    tokenization_bert.py:398-433) — JVM-side regexp_extract_all."""
-    return F.regexp_extract_all(col, F.lit(r"[a-z0-9]+|[^a-z0-9\s]"), 0)
-
-
 def shingles(tok: Column, k: int = 3) -> Column:
     """k-shingles over a token array → array<string> of space-joined
     k-grams.  Pure higher-order functions: sequence + transform + slice.
@@ -143,23 +136,6 @@ def wordpiece_tokens(col: Column, vocab: list[str], max_word_chars: int = 100) -
 
     _fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return F.pandas_udf(T.ArrayType(T.StringType()))(_fn)(col)
-
-
-def char_ngrams(col: Column, n: int = 3) -> Column:
-    """Character n-grams of a string → array<string> (used by the Jaccard
-    scorer and the hash-projection embedder's SQL-side variant)."""
-    ln = F.length(col)
-    return F.when(ln < n, F.array(col)).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), ln - (n - 1)),
-            lambda i: F.substring(col, i, n),
-        )
-    )
-
-
-def token_count(col: Column) -> Column:
-    """Token count — whitespace tokens (text-analysis op)."""
-    return F.size(tokens(col))
 
 
 def stopword_ratio(tok: Column, stopwords: list[str]) -> Column:

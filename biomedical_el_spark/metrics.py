@@ -43,22 +43,13 @@ def score_histogram(scored: DataFrame, score_col: str = "score", buckets: int = 
     )
 
 
-def gold_at_blocking_keys(gold_pairs: DataFrame, blocks: DataFrame) -> DataFrame:
-    """Restrict labeled pairs to those sharing ≥1 blocking key — the north
-    metric's conditioning ('pairwise F1 ≥ 0.99 on labeled pairs AT FIXED
-    BLOCKING KEYS', BASELINE.json): blocking recall is scored separately
-    from pairwise-decision quality."""
-    a = blocks.select(F.col("url").alias("url_a"), "block_key")
-    b = blocks.select(F.col("url").alias("url_b"), "block_key")
-    shared = a.join(b, "block_key").select("url_a", "url_b").distinct()
-    return gold_pairs.join(shared, ["url_a", "url_b"], "left_semi")
-
-
 def pairwise_f1_at_blocks(
     pred_pairs: DataFrame, gold_pairs: DataFrame, blocks: DataFrame
 ) -> dict[str, float]:
-    """The conditioned north metric: BOTH pred and gold restricted to
-    pairs sharing ≥1 blocking key, then pairwise F1."""
+    """The conditioned north metric ('pairwise F1 ≥ 0.99 on labeled pairs
+    AT FIXED BLOCKING KEYS', BASELINE.json): BOTH pred and gold restricted
+    to pairs sharing ≥1 blocking key, then pairwise F1 — blocking recall
+    is scored separately from pairwise-decision quality."""
     a = blocks.select(F.col("url").alias("url_a"), "block_key")
     b = blocks.select(F.col("url").alias("url_b"), "block_key")
     shared = a.join(b, "block_key").select("url_a", "url_b").distinct()

@@ -1,17 +1,19 @@
-"""Stage 1 — candidate blocking.
+"""Stage 1 — candidate blocking, as SQL column pipelines.
 
 Replaces the reference's candidate generation (utils_e2e_span.py:340-461:
 random sampling, TF-IDF, or brute-force dot-product top-k over all 29k
-entities) with two distributed blocking families that never materialize the
-all-pairs join (SURVEY.md J3):
+entities) with distributed blocking that never materializes the all-pairs
+join (SURVEY.md J3):
 
   1. MinHash-LSH over k-shingled text (`shingle_blocks`)
-  2. random-hyperplane LSH over embeddings (`embedding_blocks`)
+  2. rarest-shingle TF-IDF keys (`tfidf_blocks`)
 
 Both emit the narrow relation (url, block_key) — the equi-join key that
 turns O(n²) similarity search into per-block joins.  At 10^12 docs the
 explode output is wide but *narrow-schema*; Catalyst prunes every other
-page column at the scan because these are pure column pipelines.
+page column at the scan because these are pure column pipelines.  The
+flagship derives its MinHash band keys and hyperplane buckets from the
+features table instead (`features.band_keys_from_sig`, `plans/linkage.py`).
 """
 
 from __future__ import annotations
@@ -21,7 +23,6 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing as H
 from ..functions import text as X
-from ..functions.embedder import embed_text, hyperplane_lsh_udf
 
 
 def shingle_blocks(
@@ -77,25 +78,6 @@ def shingle_blocks(
     )
 
 
-def embedding_blocks(
-    pages: DataFrame,
-    num_planes: int = 8,
-    seed: int = 42,
-    id_col: str = "url",
-    text_col: str = "text",
-    vec_col: str | None = None,
-) -> DataFrame:
-    """pages → (url, block_key) via the embedding tower: batched encoder
-    forward (pandas UDF) → random-hyperplane sign bucket.  The second
-    recall channel of north_star's dual blocking design."""
-    if vec_col is None:
-        df = pages.select(F.col(id_col).alias("url"), embed_text(F.col(text_col)).alias("vec"))
-    else:
-        df = pages.select(F.col(id_col).alias("url"), F.col(vec_col).alias("vec"))
-    key = hyperplane_lsh_udf(num_planes, seed)(F.col("vec"))
-    return df.select("url", F.concat(F.lit("hp|"), key.cast("string")).alias("block_key"))
-
-
 def tfidf_blocks(
     pages: DataFrame,
     k_shingle: int = 3,
@@ -143,39 +125,3 @@ def tfidf_blocks(
         .filter(F.col("rnk") <= top_w)
         .select("url", F.col("sh").alias("block_key"), "df")
     )
-
-
-def tfidf_blocks_from_features(
-    features: DataFrame, top_w: int = 2, sh_col: str = "sh"
-) -> DataFrame:
-    """The TF-IDF rare-shingle channel over a features table that already
-    carries per-doc distinct shingle HASHES (page_features
-    emit_shingles=True) — same SELECTION RULE as `tfidf_blocks` (df≥2
-    filter, per-url top-`top_w` rarest, deterministic (df, key)
-    tie-break) applied to the minhash kernel's byte-level 3-shingle
-    hashes rather than `tfidf_blocks`' text shingles: the selected keys
-    (and hence candidate blocks) can differ on tie order — (df,
-    int64-hash) here vs (df, string) there — and on any tokenization
-    divergence.  The emitted block_key is the raw bigint hash, NOT
-    namespaced like run_linkage's tfidf channel keys; namespace it
-    before unioning into a multi-channel block set.  Emits (url,
-    block_key:bigint, df)."""
-    from pyspark.sql import Window
-
-    doc_sh = features.select("url", F.explode(sh_col).alias("shk"))
-    dfreq = doc_sh.groupBy("shk").agg(F.count("*").alias("df")).filter(
-        F.col("df") >= 2
-    )
-    win = Window.partitionBy("url").orderBy("df", "shk")
-    return (
-        doc_sh.join(dfreq, "shk")
-        .withColumn("rnk", F.row_number().over(win))
-        .filter(F.col("rnk") <= top_w)
-        .select("url", F.col("shk").alias("block_key"), "df")
-    )
-
-
-def block_stats(blocks: DataFrame) -> DataFrame:
-    """Per-block size distribution — the skew observability input for
-    salting decisions and the score-distribution metrics table."""
-    return blocks.groupBy("block_key").agg(F.count("*").alias("block_size"))

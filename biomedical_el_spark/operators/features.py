@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.embedder import DIM, _embed_batch
-from ..functions.minhash_np import minhash_batch_shingles
+from ..functions.minhash_np import minhash_batch
 
 
 def _quantize(vecs: np.ndarray) -> list:
@@ -54,10 +54,9 @@ def page_features(
     id_col: str = "url",
     text_col: str = "text",
     normalize_accents: bool = False,
-    emit_shingles: bool = False,
 ) -> DataFrame:
-    """Compute (url, vec, sig, prefix[, sh]) in one scalar-iterator pandas
-    UDF over Arrow batches — model/config init once per worker.
+    """Compute (url, vec, sig, prefix) in one scalar-iterator pandas UDF
+    over Arrow batches — model/config init once per worker.
 
     normalize_accents=True NFD-strips combining marks (reference
     BasicTokenizer semantics, tokenization_bert.py:345-356) INSIDE the
@@ -66,61 +65,38 @@ def page_features(
     score identically.  Off by default: the stored page text stays
     byte-identical (input_hint invariant), and normalization is a
     key-derivation choice for non-English corpora, not an ingest mutation.
-
-    emit_shingles=True adds `sh array<bigint>`: the per-doc DISTINCT
-    shingle hashes the minhash kernel already computes — the TF-IDF
-    rare-shingle channel reads these instead of re-tokenizing raw text
-    (its measured +69% overhead was mostly that rework).
     """
-    sh_field = ", sh array<bigint>" if emit_shingles else ""
-
     if normalize_accents:
         from ..functions.text import strip_accents_batch
 
-        @F.pandas_udf(f"vec array<tinyint>, sig array<int>, prefix string{sh_field}")
+        @F.pandas_udf("vec array<tinyint>, sig array<int>, prefix string")
         def feats_norm(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
             for texts in batches:
                 texts = strip_accents_batch(texts)
                 vecs = _embed_batch(texts, DIM)
-                sigs, shs = minhash_batch_shingles(
-                    texts, num_hashes, seed, emit_shingles=emit_shingles
-                )
-                cols = {
+                sigs = minhash_batch(texts, num_hashes, seed)
+                yield pd.DataFrame({
                     "vec": _quantize(vecs),
                     "sig": _sig32(sigs),
                     "prefix": texts.str.slice(0, prefix_len),
-                }
-                if emit_shingles:
-                    cols["sh"] = shs
-                yield pd.DataFrame(cols)
+                })
 
-        out_cols = ["url", "f.vec", "f.sig", "f.prefix"]
-        if emit_shingles:
-            out_cols.append("f.sh")
         return pages.select(
             F.col(id_col).alias("url"), feats_norm(F.col(text_col)).alias("f")
-        ).select(*out_cols)
+        ).select("url", "f.vec", "f.sig", "f.prefix")
 
-    @F.pandas_udf(f"vec array<tinyint>, sig array<int>{sh_field}")
+    @F.pandas_udf("vec array<tinyint>, sig array<int>")
     def feats(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for texts in batches:
             vecs = _embed_batch(texts, DIM)
-            sigs, shs = minhash_batch_shingles(
-                texts, num_hashes, seed, emit_shingles=emit_shingles
-            )
-            cols = {"vec": _quantize(vecs), "sig": _sig32(sigs)}
-            if emit_shingles:
-                cols["sh"] = shs
-            yield pd.DataFrame(cols)
+            sigs = minhash_batch(texts, num_hashes, seed)
+            yield pd.DataFrame({"vec": _quantize(vecs), "sig": _sig32(sigs)})
 
-    out_cols = ["url", "f.vec", "f.sig", "prefix"]
-    if emit_shingles:
-        out_cols.append("f.sh")
     return pages.select(
         F.col(id_col).alias("url"),
         feats(F.col(text_col)).alias("f"),
         F.substring(F.col(text_col), 1, prefix_len).alias("prefix"),
-    ).select(*out_cols)
+    ).select("url", "f.vec", "f.sig", "prefix")
 
 
 def band_keys_from_sig(
@@ -144,7 +120,15 @@ def band_keys_from_sig(
     share a band key iff that band of their signatures matches; direct
     int hashing cannot LOSE a collision pair the string form had, and
     any new 64-bit collision only adds a scored candidate).  Measured
-    round 6 at 250k pages/32c: band-key projection 0.88 s → 0.20 s."""
+    round 6 at 250k pages/32c: band-key projection 0.88 s → 0.20 s.
+
+    Scope of the no-loss claims: they compare keys made by ONE band-key
+    formula.  Round 6 replaced the string form with this int hashing, so
+    every key VALUE changed.  The streaming store persists block_key
+    (streaming/incremental.py), and a store written before round 6 and
+    resumed after it silently misses every pair that needs an old key to
+    meet a new one.  Such stores must be rebuilt from their pages; the
+    store carries no version marker yet."""
     keys = F.array(
         *[
             F.xxhash64(
@@ -158,14 +142,3 @@ def band_keys_from_sig(
         ]
     )
     return features.select("url", F.explode(keys).alias("block_key"))
-
-
-def sig_jaccard_expr(a, b):
-    """MinHash Jaccard estimate from two signatures: fraction of agreeing
-    components — JVM-side zip_with/aggregate, unbiased, ±1/sqrt(len) s.e."""
-    agree = F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return agree.cast("double") / F.size(a).cast("double")

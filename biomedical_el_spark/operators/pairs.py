@@ -9,52 +9,14 @@ domains).  Controls, all deterministic:
     With `escape="star"` they still contribute b−1 hub pairs (linear
     cost) so genuinely-duplicate hot blocks keep their recall via
     transitive closure; with escape=None they are excluded outright.
-  - salting of the url→features hydration join (`salted_feature_join`):
-    hot keys are split via pmod(xxhash64(url), S) so no single reducer
-    receives a whole hot block (north_star: 'salting of hot blocks').
-  - AQE skew-join splitting stays on as the runtime backstop (session.py).
+  - AQE skew-join splitting (session.py) splits hot urls in the
+    url→features hydration joins at runtime.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def candidate_pairs(
-    blocks: DataFrame,
-    max_block_size: int | None = 64,
-) -> tuple[DataFrame, DataFrame]:
-    """(url, block_key) → (url_a, url_b) distinct candidate pairs with
-    url_a < url_b, plus the oversized-blocks report.
-
-    The self-join is an equi-join on block_key — shuffle partitioned by
-    key; AQE splits residual skew.  distinct() collapses pairs produced
-    by multiple shared bands before expensive scoring (deliberate barrier:
-    dedup across ALL blocking channels is what makes scoring affordable).
-    """
-    sized = blocks.join(
-        blocks.groupBy("block_key").agg(F.count("*").alias("block_size")),
-        "block_key",
-    )
-    if max_block_size is not None:
-        ok = sized.filter(F.col("block_size") <= max_block_size)
-        oversized = (
-            sized.filter(F.col("block_size") > max_block_size)
-            .groupBy("block_key")
-            .agg(F.first("block_size").alias("block_size"))
-        )
-    else:
-        ok, oversized = sized, sized.limit(0).select("block_key", "block_size")
-    a = ok.select(F.col("block_key"), F.col("url").alias("url_a"))
-    b = ok.select(F.col("block_key"), F.col("url").alias("url_b"))
-    pairs = (
-        a.join(b, "block_key")
-        .filter(F.col("url_a") < F.col("url_b"))
-        .select("url_a", "url_b")
-        .distinct()
-    )
-    return pairs, oversized
 
 
 def _dedup_pairs(pairs: DataFrame, min_matches: int) -> DataFrame:
@@ -102,9 +64,9 @@ def candidate_pairs_grouped(
 ) -> tuple[DataFrame, DataFrame]:
     """Pair generation via groupBy(block_key).collect_list(url) + a nested
     array transform emitting each block's C(b,2) combinations, and ONE
-    distinct at pair granularity.  Versus the join-based plan this
-    removes the size-annotation join and the self-join shuffle; measured
-    ~2× on the pairs stage.
+    distinct at pair granularity.  Versus the join-based plan it replaced
+    this removes the size-annotation join and the self-join shuffle;
+    measured ~2× on the pairs stage.
 
     With a cap, sizes are computed FIRST (a partial-aggregated
     count/min — the exchange carries one tiny row per key) and oversized
@@ -232,43 +194,3 @@ def candidate_pairs_grouped(
             )
         pairs = pairs.unionByName(star)
     return _dedup_pairs(pairs, min_matches), oversized
-
-
-def salted_feature_join(
-    pairs: DataFrame,
-    features: DataFrame,
-    salt_buckets: int = 8,
-    feature_cols: tuple[str, ...] = ("text",),
-) -> DataFrame:
-    """Hydrate (url_a, url_b) with per-side features, skew-safely.
-
-    The features side is replicated salt_buckets× with an explicit salt
-    column; each pair row deterministically picks ONE salt per side via
-    pmod(xxhash64(url), S).  A url appearing in 10^6 pairs (hot record)
-    thus spreads across S reducers instead of one.  Replication cost is
-    bounded: features is the *narrow* projection (url + needed cols only).
-    """
-    feats = features.select("url", *feature_cols)
-    exploded = feats.withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    fa = exploded.select(
-        F.col("url").alias("url_a"),
-        F.col("salt").alias("salt_a"),
-        *[F.col(c).alias(f"{c}_a") for c in feature_cols],
-    )
-    fb = exploded.select(
-        F.col("url").alias("url_b"),
-        F.col("salt").alias("salt_b"),
-        *[F.col(c).alias(f"{c}_b") for c in feature_cols],
-    )
-    p = pairs.withColumn(
-        "salt_a", F.pmod(F.xxhash64("url_a"), F.lit(salt_buckets)).cast("int")
-    ).withColumn(
-        "salt_b", F.pmod(F.xxhash64("url_b"), F.lit(salt_buckets)).cast("int")
-    )
-    return (
-        p.join(fa, ["url_a", "salt_a"])
-        .join(fb, ["url_b", "salt_b"])
-        .drop("salt_a", "salt_b")
-    )

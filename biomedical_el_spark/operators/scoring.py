@@ -7,85 +7,30 @@ hybrid score (north_star):
     score = w_cos·cosine(emb_a, emb_b) + w_jac·jaccard(shingles) +
             w_jw·jaro_winkler(prefix_a, prefix_b)
 
-All three kernels are vectorized: cosine/JW run as Arrow pandas UDFs over
-[batch] numpy (similarity.py), Jaccard is a pure JVM expression.  The
-γ-threshold + fallback semantics of the reference's span pruning
-(run_e2e_span.py:538-540) survive as the τ match threshold, and top-1
-linking (run_e2e_span.py:570-575) as `top_links`.
+The Jaccard term is the MinHash signature-agreement estimate, so no
+shingle arrays are shuffled.  All three kernels run as one fused Arrow
+pandas UDF over [batch] numpy (`_score_kernels_udf`).  The γ-threshold
+semantics of the reference's span pruning (run_e2e_span.py:538-540)
+survive as the τ match threshold (`match_links`).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import text as X
-from ..functions.embedder import embed_text
-from ..functions.similarity import (
-    cosine_udf,
-    jaccard_expr,
-    jaro_winkler_batch,
-    jaro_winkler_udf,
-)
-from .pairs import salted_feature_join
+from ..functions.similarity import jaro_winkler_batch
 
 DEFAULT_WEIGHTS = {"cos": 0.5, "jac": 0.35, "jw": 0.15}
-
-
-def score_pairs(
-    pairs: DataFrame,
-    pages: DataFrame,
-    weights: dict[str, float] | None = None,
-    salt_buckets: int = 8,
-    k_shingle: int = 3,
-    jw_prefix: int = 64,
-) -> DataFrame:
-    """(url_a, url_b) → scored pairs (url_a, url_b, cos_sim, jac_sim,
-    jw_sim, score)."""
-    w = weights or DEFAULT_WEIGHTS
-    feats = pages.select(
-        "url",
-        embed_text(F.col("text")).alias("vec"),
-        X.tokens(X.normalize_text(F.col("text"))).alias("tk"),
-        F.substring(F.col("text"), 1, jw_prefix).alias("prefix"),
-    ).select(
-        "url", "vec", X.shingles(F.col("tk"), k_shingle).alias("sh"), "prefix"
-    )
-    hydrated = salted_feature_join(
-        pairs, feats, salt_buckets, feature_cols=("vec", "sh", "prefix")
-    )
-    return hydrated.select(
-        "url_a",
-        "url_b",
-        cosine_udf(F.col("vec_a"), F.col("vec_b")).alias("cos_sim"),
-        jaccard_expr(F.col("sh_a"), F.col("sh_b")).alias("jac_sim"),
-        jaro_winkler_udf(F.col("prefix_a"), F.col("prefix_b")).alias("jw_sim"),
-    ).withColumn(
-        "score",
-        w["cos"] * F.col("cos_sim")
-        + w["jac"] * F.col("jac_sim")
-        + w["jw"] * F.col("jw_sim"),
-    )
 
 
 def match_links(scored: DataFrame, tau: float = 0.62) -> DataFrame:
     """τ-threshold → match edges (reference γ-prune semantics,
     run_e2e_span.py:538)."""
     return scored.filter(F.col("score") >= tau).select("url_a", "url_b", "score")
-
-
-def top_links(scored: DataFrame, k: int = 1) -> DataFrame:
-    """Per-left-record top-k partner (reference argmax top-1 linking,
-    run_e2e_span.py:570-575; top-k candidates utils_e2e_span.py:426)."""
-    win = Window.partitionBy("url_a").orderBy(F.desc("score"), F.asc("url_b"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
 
 
 _SCORE_SCHEMA = T.StructType(
@@ -134,8 +79,7 @@ def score_pairs_from_features(
 ) -> DataFrame:
     """Scale-path scorer: hydrate (url_a, url_b) from the narrow features
     table (vec + minhash sig + prefix, ~600B/row) with plain equi-joins —
-    AQE skew-join splitting handles residual hot urls; `salted_feature_join`
-    remains available for pathological dimensions.  Jaccard comes from the
+    AQE skew-join splitting handles residual hot urls.  Jaccard comes from the
     signature estimate (no shingle arrays shuffled); all three kernels run
     in one fused Arrow pandas UDF (`_score_kernels_udf`)."""
     w = weights or DEFAULT_WEIGHTS

@@ -253,12 +253,12 @@ def run_linkage(
             # distinctive phrase.  Hashed into their own key namespace —
             # a 64-bit collision can only ADD a candidate pair.
             # Deliberately the TEXT-based channel: the round-4
-            # shared-shingle variant (emit_shingles=True +
-            # tfidf_blocks_from_features) was A/B'd at 1M pages and
-            # measured WORSE (+117% wall vs +69% for this path) — the
-            # Arrow-pass shingle emission and the widened persisted
-            # features relation cost more than the JVM re-tokenization
-            # they save; both operators remain available and tested.
+            # shared-shingle variant (the feature UDF emitting per-doc
+            # shingle hashes for a features-backed TF-IDF operator) was
+            # A/B'd at 1M pages and measured WORSE (+117% wall vs +69%
+            # for this path) — the Arrow-pass shingle emission and the
+            # widened persisted features relation cost more than the JVM
+            # re-tokenization they save (BENCH.md).
             from ..operators.blocking import tfidf_blocks
 
             tf = tfidf_blocks(paged, top_w=cfg.tfidf_top_w)

@@ -1,5 +1,7 @@
 """Blocking + pair generation: recall on near-dup clusters, block-size
-caps reported, salted hydration join correctness."""
+caps reported, pair generators checked against a brute-force reference."""
+
+import itertools
 
 from pyspark.sql import functions as F
 
@@ -7,11 +9,39 @@ from biomedical_el_spark.operators import blocking as B
 from biomedical_el_spark.operators import pairs as P
 
 
+def _python_pairs(rows, cap):
+    """Brute-force reference: every C(b,2) pair of each block of size
+    <= cap, from collected (url, block_key) rows."""
+    by_key: dict = {}
+    for u, k in rows:
+        by_key.setdefault(k, []).append(u)
+    return {
+        (a, b)
+        for us in by_key.values()
+        if len(us) <= cap
+        for a, b in itertools.combinations(sorted(us), 2)
+    }
+
+
 def test_near_duplicates_share_blocks(spark, pages):
-    blocks = B.shingle_blocks(pages, num_hashes=32, bands=16, rows_per_band=2).unionByName(
-        B.embedding_blocks(pages, 12)
+    """The flagship's two channels, built the way run_linkage builds
+    them: band keys from the feature signature plus hyperplane buckets
+    from the feature embedding."""
+    from biomedical_el_spark.functions.embedder import hyperplane_lsh_udf
+    from biomedical_el_spark.operators.features import (
+        band_keys_from_sig,
+        page_features,
     )
-    cand, _ = P.candidate_pairs(blocks, max_block_size=64)
+
+    feats = page_features(pages, num_hashes=32).cache()
+    blocks = band_keys_from_sig(feats, bands=16, rows_per_band=2).unionByName(
+        feats.select(
+            "url",
+            (F.lit(1 << 40) + hyperplane_lsh_udf(12)(F.col("vec")).cast("bigint"))
+            .alias("block_key"),
+        )
+    )
+    cand, _ = P.candidate_pairs_grouped(blocks, 64)
     ent = pages.select("url", "entity_id")
     j = (
         cand.join(ent.withColumnRenamed("url", "url_a").withColumnRenamed("entity_id", "ea"), "url_a")
@@ -56,28 +86,6 @@ def test_tfidf_channel_recall_delta(spark):
     assert got_tf == gold, f"tfidf channel missed {gold - got_tf}"
 
 
-def test_tfidf_from_features_matches_channel_semantics(spark):
-    """The features-backed TF-IDF channel (shingle hashes from the one
-    Arrow feature pass) must catch the same rare-shingle-only pairs the
-    text-based channel exists for, with the same df≥2 / top-w semantics."""
-    from biomedical_el_spark.operators.features import page_features
-
-    common = "the quick brown fox jumps over the lazy dog near the river bank today"
-    rows = [(f"f{i:02d}", f"{common} filler{i} note{i} extra{i}") for i in range(20)]
-    rows += [
-        ("pa1", "alpha beta gamma zq1 zr1 zs1 delta epsilon zeta eta theta iota"),
-        ("pa2", "kappa lambada mu zq1 zr1 zs1 nu xi omicron pi rho sigma"),
-    ]
-    docs = spark.createDataFrame(rows, "url string, text string")
-    feats = page_features(docs, num_hashes=8, emit_shingles=True)
-    assert "sh" in feats.columns
-    blk = B.tfidf_blocks_from_features(feats, top_w=2)
-    per_url = blk.groupBy("url").count().agg(F.max("count")).collect()[0][0]
-    assert per_url <= 2
-    cand, _ = P.candidate_pairs_grouped(blk.select("url", "block_key"), 64)
-    assert ("pa1", "pa2") in {tuple(r) for r in cand.collect()}
-
-
 def test_tfidf_blocks_shape(spark, pages):
     blk = B.tfidf_blocks(pages, top_w=2)
     assert set(blk.columns) == {"url", "block_key", "df"}
@@ -87,7 +95,7 @@ def test_tfidf_blocks_shape(spark, pages):
 
 def test_oversized_blocks_reported_not_silent(spark, pages):
     blocks = B.shingle_blocks(pages)
-    _, oversized = P.candidate_pairs(blocks, max_block_size=3)
+    _, oversized = P.candidate_pairs_grouped(blocks, max_block_size=3)
     assert oversized.count() > 0
     assert set(oversized.columns) == {"block_key", "block_size"}
 
@@ -110,14 +118,14 @@ def test_star_escape_bounds_oversized_blocks(spark):
     assert {tuple(r) for r in over2.collect()} == {("big", 10)}
 
 
-def test_grouped_capped_matches_join_plan(spark, pages):
+def test_grouped_capped_matches_python_pairs(spark, pages):
     """The two-pass capped grouped generator (sizes → anti-join →
-    collect) must emit exactly the join-based plan's pairs at the same
-    cap (escape off)."""
-    blocks = B.shingle_blocks(pages)
-    a, _ = P.candidate_pairs(blocks, max_block_size=3)
-    b, _ = P.candidate_pairs_grouped(blocks, max_block_size=3, escape=None)
-    assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
+    collect) must emit exactly the brute-force pairs of the same blocks
+    at the same cap (escape off)."""
+    blocks = B.shingle_blocks(pages).cache()
+    want = _python_pairs([tuple(r) for r in blocks.collect()], cap=3)
+    got, _ = P.candidate_pairs_grouped(blocks, max_block_size=3, escape=None)
+    assert {tuple(r) for r in got.collect()} == want
 
 
 def test_star_escape_recovers_cluster_via_cc(spark):
@@ -136,33 +144,17 @@ def test_star_escape_recovers_cluster_via_cc(spark):
 
 def test_pairs_are_canonical_and_distinct(spark, pages):
     blocks = B.shingle_blocks(pages)
-    cand, _ = P.candidate_pairs(blocks)
+    cand, _ = P.candidate_pairs_grouped(blocks)
     assert cand.filter(F.col("url_a") >= F.col("url_b")).count() == 0
     assert cand.count() == cand.distinct().count()
 
 
-def test_salted_join_matches_plain_join(spark, pages):
-    blocks = B.shingle_blocks(pages)
-    cand, _ = P.candidate_pairs(blocks)
-    cand = cand.limit(500).cache()
-    feats = pages.select("url", "lang")
-    salted = P.salted_feature_join(cand, feats, salt_buckets=4, feature_cols=("lang",))
-    fa = feats.select(F.col("url").alias("url_a"), F.col("lang").alias("lang_a"))
-    fb = feats.select(F.col("url").alias("url_b"), F.col("lang").alias("lang_b"))
-    plain = cand.join(fa, "url_a").join(fb, "url_b")
-    assert salted.count() == plain.count()
-    s = {tuple(r) for r in salted.select("url_a", "url_b", "lang_a", "lang_b").collect()}
-    p = {tuple(r) for r in plain.select("url_a", "url_b", "lang_a", "lang_b").collect()}
-    assert s == p
-
-
 def test_pair_generators_agree_on_random_block_tables(spark):
     """Property check over 20 seeded random block tables (varying key
-    skew and cap): the join-based plan, the two-pass grouped plan, and
-    the brute-force python reference all emit the same pair set, and
+    skew and cap): the two-pass and single-exchange grouped plans emit
+    the same pair set as the brute-force python reference, and
     star-escape output equals (capped pairs) ∪ (hub pairs of oversized
     blocks) computed independently."""
-    import itertools
     import random
 
     for seed in range(20):
@@ -181,12 +173,7 @@ def test_pair_generators_agree_on_random_block_tables(spark):
         by_key: dict[str, list[str]] = {}
         for u, k in rows:
             by_key.setdefault(k, []).append(u)
-        want_capped = {
-            (a, b)
-            for k, us in by_key.items()
-            if len(us) <= cap
-            for a, b in itertools.combinations(sorted(us), 2)
-        }
+        want_capped = _python_pairs(rows, cap)
         want_star = want_capped | {
             (min(us), u)
             for k, us in by_key.items()
@@ -195,7 +182,6 @@ def test_pair_generators_agree_on_random_block_tables(spark):
             if u != min(us)
         }
 
-        j, _ = P.candidate_pairs(blocks, max_block_size=cap)
         g, _ = P.candidate_pairs_grouped(blocks, max_block_size=cap, escape=None)
         st, _ = P.candidate_pairs_grouped(blocks, max_block_size=cap, escape="star")
         se, se_ov = P.candidate_pairs_grouped(
@@ -204,7 +190,6 @@ def test_pair_generators_agree_on_random_block_tables(spark):
         se_st, _ = P.candidate_pairs_grouped(
             blocks, max_block_size=cap, escape="star", single_exchange=True
         )
-        assert {tuple(r) for r in j.collect()} == want_capped, seed
         assert {tuple(r) for r in g.collect()} == want_capped, seed
         assert {tuple(r) for r in st.collect()} == want_star, seed
         assert {tuple(r) for r in se.collect()} == want_capped, seed

@@ -46,7 +46,7 @@ def test_precision_no_cross_entity_merges(spark, pages, result):
 
 def test_skewed_corpus_still_correct(spark):
     """Hot-entity fixture: ~10% of pages collapse into entity 0.  The
-    oversized-block cap + salting must keep the job correct."""
+    oversized-block cap + AQE skew handling must keep the job correct."""
     hot = generate_pages(spark, 300, cluster_size=3, hot_fraction=0.1).cache()
     out = run_linkage(spark, hot)
     gold = gold_pairs(hot)

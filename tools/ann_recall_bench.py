@@ -138,7 +138,7 @@ def main() -> None:
             {
                 "variant": name,
                 "sec": timings[name],
-                "candidate_pairs": cost[name],
+                "n_candidate_pairs": cost[name],
                 "recall_at_5": round(len(brute & results[name]) / len(brute), 3),
             }
             for name in variants
