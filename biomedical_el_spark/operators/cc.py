@@ -29,27 +29,53 @@ lineage blowup MUST checkpoint).  `checkpoint_dir=None` uses
 `localCheckpoint` (executor-local blocks — fine in local mode, NOT safe
 under executor loss); pass a reliable `checkpoint_dir` (HDFS/object
 store) on a real cluster.
+
+Hybrid finish: one task finishes a graph faster than star rounds do at
+every size measured (tools/cc_crossover.py: 13-24x from 0.5M to 2M
+edges), because the rounds are distributed work paid in Spark jobs (~6
+shuffles plus checkpoints per round).  What one task cannot do is hold
+a graph of any size.  So the edge set is counted after the initial
+checkpoint and after every round, and once it fits one round partition
+(≤ _EDGES_PER_PARTITION edges, sized to one task's memory) the rest of
+the graph is finished in ONE task — `coalesce(1).mapInArrow`, no
+exchange — by min-label hooking with pointer jumping over sorted
+dictionary codes (_min_label_components).  Star rounds run only while
+the frontier is too big for that task; they preserve the node set and
+the connectivity of the edge set, so the finish may start from any
+round's output.  The output is the same (node, component = min node id)
+rows either way.
 """
 
 from __future__ import annotations
 
 import math
+from typing import Iterator
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-# Target edge rows per shuffle partition inside the CC round loop.  Each
-# round is ~6 tiny shuffles over the (usually small) frontier; running
-# them at the session-wide shuffle width (sized for the big Arrow stages)
-# makes the loop pure task-scheduling overhead — measured 8.2s → 3.3s at
-# bench scale by sizing partitions to the edge count instead.
+# Edge rows one task handles, in two roles.  (1) Target edge rows per
+# shuffle partition inside the CC round loop: each round is ~6 tiny
+# shuffles over the (usually small) frontier; running them at the
+# session-wide shuffle width (sized for the big Arrow stages) makes the
+# loop pure task-scheduling overhead — measured 8.2s → 3.3s at bench
+# scale by sizing partitions to the edge count instead.  (2) The largest
+# frontier the hybrid finish takes into its one task (module docstring).
+# That bound is memory, not speed: the local finish beat the star rounds
+# at 0.5M, 1M and 2M edges (1.6 vs 21-26 s, 3.1 vs 64-71 s, 7-10 vs
+# 145-155 s; 16-node random trees, url-like ids, local[4] on a 4-vCPU
+# host, tools/cc_crossover.json).  Its Python worker holds the Arrow
+# input (~95 B/edge at ~44-byte ids) plus a peak working set of 95 MB at
+# 0.5M, 235 MB at 1M and 347 MB at 2M edges: ~145 MB at 500k edges fits
+# Spark's smallest default executor memoryOverhead (384 MiB, where
+# Python workers live unless spark.executor.pyspark.memory is set) with
+# room for the executor's idle workers; ~330 MB at 1M leaves almost
+# none.
 _EDGES_PER_PARTITION = 500_000
-
-# Edge count above which the large-star output is materialized before the
-# small-star step (see connected_components): below it, recomputing the
-# large-star subtree once is cheaper than an extra checkpoint job per
-# round; above it, the duplicated window/explode work dominates.
-_INTRA_CKPT_MIN_EDGES = 100_000
 
 
 def _symmetrize(edges: DataFrame, dedup: bool = False) -> DataFrame:
@@ -134,6 +160,59 @@ def _is_star_forest(edges: DataFrame) -> bool:
     return edges.join(srcs, "dst", "left_semi").limit(1).count() == 0
 
 
+def _min_label_components(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    """(src, dst) Arrow batches of ONE partition → (node, component =
+    min node id) for every node on an edge; all numpy/Arrow, no per-row
+    Python.
+
+    Ids are dictionary-encoded in sorted order (unique → sort → index_in),
+    so code order is id order and the minimum code of a component is its
+    minimum id.  Arrow sorts strings by bytes, which is Spark's binary
+    string order (UTF-8 byte order = code point order).  Then min-label
+    hooking: every edge whose endpoints sit in different trees hooks the
+    larger root under the smaller one (np.minimum.at keeps the smallest
+    of several hooks), and pointer jumping flattens every tree back to a
+    star.  Labels only decrease and point to a smaller code, so there is
+    no cycle, and every round with a split edge removes a root: this
+    terminates.  An edge whose endpoints share a label keeps sharing it,
+    so only split edges go into the next round."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    tbl = pa.Table.from_batches(batches)
+    ends = pa.chunked_array(tbl.column("src").chunks + tbl.column("dst").chunks)
+    ids = pc.unique(ends)
+    ids = ids.take(pc.sort_indices(ids))
+    code = pc.index_in(ends, value_set=ids).to_numpy().astype(np.int64)
+    src, dst = code[: tbl.num_rows], code[tbl.num_rows :]
+    label = np.arange(len(ids), dtype=np.int64)
+    while True:
+        ls, ld = label[src], label[dst]
+        split = ls != ld
+        if not split.any():
+            break
+        src, dst, ls, ld = src[split], dst[split], ls[split], ld[split]
+        np.minimum.at(label, np.maximum(ls, ld), np.minimum(ls, ld))
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+    yield pa.RecordBatch.from_arrays(
+        [ids, ids.take(pa.array(label))], names=["node", "component"]
+    )
+
+
+def _finish_locally(edges: DataFrame) -> DataFrame:
+    """Components of `edges` computed in one task: coalesce(1) merges the
+    (checkpointed) partitions without an exchange."""
+    t = edges.schema["src"].dataType
+    schema = StructType([StructField("node", t), StructField("component", t)])
+    return edges.coalesce(1).mapInArrow(_min_label_components, schema)
+
+
 def connected_components(
     links: DataFrame,
     src_col: str = "url_a",
@@ -156,7 +235,11 @@ def connected_components(
     session's shuffle setting: the frontier is usually far smaller than
     the corpus the session width was tuned for, and ~6 shuffles/round ×
     oversized task counts turn the loop into scheduler overhead.  The
-    session conf is restored on exit."""
+    session conf is restored on exit.
+
+    The same count decides, before every round, whether the frontier
+    fits one partition (≤ _EDGES_PER_PARTITION edges); from then on the
+    graph is finished in one task (module docstring, hybrid finish)."""
     spark = links.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
@@ -179,25 +262,22 @@ def connected_components(
         round_shuffle_partitions = max(
             8, min(sess_sp, math.ceil(n_edges / _EDGES_PER_PARTITION))
         )
-    # Checkpoint BETWEEN the two star steps on big graphs: small-star
-    # symmetrizes its input (union of both directions), so an
-    # unmaterialized large-star subtree is otherwise computed twice —
-    # once per union branch (ReusedExchange shares the exchange, but the
-    # window/explode above it re-runs).  Measured (round 6): 250k-page
-    # flagship graph (729k sym edges) CC 7.2 s → 5.2 s warm with the
-    # intermediate materialization; on small graphs (cc_customer, 30k
-    # edges) the extra per-round materialization job is pure overhead,
-    # so it is gated on the measured edge count — data-proportional,
-    # not a local-mode constant.
-    intra_ckpt = n_edges > _INTRA_CKPT_MIN_EDGES
     spark.conf.set("spark.sql.shuffle.partitions", str(round_shuffle_partitions))
     converged = False
     try:
         for r in range(max_iter):
-            large = _star(edges, large=True, dedup=False)
-            if intra_ckpt:
-                large = ckpt(large)
+            if n_edges <= _EDGES_PER_PARTITION:
+                break  # the frontier fits one task: hybrid finish below
+            # Checkpoint BETWEEN the two star steps: small-star
+            # symmetrizes its input (union of both directions), so an
+            # unmaterialized large-star subtree is otherwise computed
+            # twice — once per union branch (ReusedExchange shares the
+            # exchange, but the window/explode above it re-runs).
+            # Measured (round 6): 250k-page flagship graph (729k sym
+            # edges) CC 7.2 s → 5.2 s warm with the checkpoint.
+            large = ckpt(_star(edges, large=True, dedup=False))
             edges = ckpt(_star(large, large=False))  # cut lineage every round
+            n_edges = edges.count()  # materialized by ckpt() — cheap block scan
             # skip the certificate after round 1: on multi-round graphs —
             # every real link graph — the round-1 certificate can only
             # confirm non-convergence, two wasted jobs per run.  Inputs
@@ -205,10 +285,18 @@ def connected_components(
             # diameter-1 components such as a triangle) pay one extra
             # round instead, which is idempotent (stars are a fixpoint
             # of both star ops); measurement found that cheaper than
-            # certifying every round.
-            if r >= 1 and _is_star_forest(edges):
+            # certifying every round.  A frontier that now fits one task
+            # skips the certificate too: the local finish is one task,
+            # the certificate two jobs.
+            if r >= 1 and n_edges > _EDGES_PER_PARTITION and _is_star_forest(edges):
                 converged = True
                 break
+        if n_edges <= _EDGES_PER_PARTITION:
+            # checkpointed: callers read the result more than once
+            # (run_linkage's singleton anti-join and union), and with no
+            # exchange in the plan for Spark to reuse, each read would
+            # rerun the one-task finish
+            return ckpt(_finish_locally(edges))
         comp = edges.select(F.col("src").alias("node"), F.col("dst").alias("component"))
         roots = comp.select(F.col("component").alias("node"), F.col("component"))
         if converged:

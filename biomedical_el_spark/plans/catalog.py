@@ -1020,8 +1020,10 @@ def ann_label_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cc_customer_nation_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Large-star/small-star connected components on the customer→nation→
-    region graph (multi-hop transitivity) vs a recursive-CTE oracle."""
+    """Connected components on the customer→nation→region graph (multi-
+    hop transitivity) vs a recursive-CTE oracle.  The graph fits one
+    task, so `connected_components` runs no star round: its hybrid
+    finish computes it in one vectorized task."""
     cust = _t(spark, sf_dir, "customer").select(
         (F.col("c_custkey") + 1000000).alias("url_a"),
         F.col("c_nationkey").cast("bigint").alias("url_b"),
@@ -1524,8 +1526,9 @@ def d_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def er_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full dedup chain as one oracle-checked query: MinHash blocking
-    → Jaccard-verified near-dup edges → large-star/small-star connected
-    components, vs DuckDB's recursive-CTE transitive closure."""
+    → Jaccard-verified near-dup edges → connected components (star rounds
+    until the frontier fits one task, then the one-task hybrid finish),
+    vs DuckDB's recursive-CTE transitive closure."""
     edges = d_near_dup_pairs(spark, sf_dir)
     return connected_components(edges, src_col="doc_a", dst_col="doc_b")
 

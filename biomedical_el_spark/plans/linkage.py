@@ -7,6 +7,8 @@ SURVEY.md §3.3, restated Spark-first):
               oversized reported) → pairwise scoring (cos + sig-jaccard +
               jaro-winkler over narrow feature joins, AQE skew-handled)
               → τ links → large-star/small-star connected components
+              (finished in one vectorized task once the edge frontier
+              fits one partition)
 
 Each stage commits a snapshot (features, blocks, pairs, scored, links,
 clusters + lineage/score metrics) keyed by config+upstream fingerprint;
