@@ -85,8 +85,8 @@ def node_id(url_col: Column) -> Column:
       struct keys support groupBy, equi-join, `<`/min/least/greatest
       (lexicographic on (h,l)), window partitioning, xxhash64 salting.
 
-    Why run_linkage does NOT use it (tools/bytes_probe.py, 1M and 4M
-    pages, bytes are run-deterministic): shuffle files are lz4-
+    Why run_linkage does NOT use it (tools/traffic.json `node_id_ab`,
+    1M and 4M pages, bytes are run-deterministic): shuffle files are lz4-
     compressed, and url strings — synthetic fixtures AND real web urls
     — share long prefixes that compress to ~8-10 B/row on the wire,
     while md5 bits are incompressible 16 B.  Re-keying the pipeline

@@ -51,7 +51,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--rows-per-band", type=int, default=None)
     p.add_argument("--hyperplanes", type=int, default=None)
     p.add_argument("--max-block-size", type=int, default=None)
-    p.add_argument("--use-tfidf-blocks", action="store_true")
     p.add_argument("--normalize-accents", action="store_true")
     p.add_argument("--shuffle-partitions", type=int, default=None)
     p.add_argument("--dry-run", action="store_true", help=(
@@ -62,7 +61,6 @@ def build_parser() -> argparse.ArgumentParser:
 
 def config_from_args(args: argparse.Namespace) -> LinkageConfig:
     cfg = LinkageConfig(
-        use_tfidf_blocks=args.use_tfidf_blocks,
         normalize_accents=args.normalize_accents,
         checkpoint_dir=args.checkpoint_dir,
     )

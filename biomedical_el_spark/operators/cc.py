@@ -76,6 +76,11 @@ from pyspark.sql.types import StructField, StructType
 # room for the executor's idle workers; ~330 MB at 1M leaves almost
 # none.
 _EDGES_PER_PARTITION = 500_000
+# Floor of the round loop's shuffle width.
+_MIN_ROUND_PARTITIONS = 8
+# Star-round budget: O(log n) rounds converge far inside it even on
+# chains (tests/test_cc.py::test_long_chain).
+_MAX_ROUNDS = 20
 
 
 def _symmetrize(edges: DataFrame, dedup: bool = False) -> DataFrame:
@@ -217,9 +222,7 @@ def connected_components(
     links: DataFrame,
     src_col: str = "url_a",
     dst_col: str = "url_b",
-    max_iter: int = 20,
     checkpoint_dir: str | None = None,
-    round_shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Edge table → (node, component) with component = min node id of the
     cluster.  Nodes absent from `links` are not emitted (callers union
@@ -229,13 +232,14 @@ def connected_components(
     (survives executor loss — required on a real cluster); default is
     `localCheckpoint` (local-mode / test speed).
 
-    round_shuffle_partitions: shuffle width for the round loop.  Default
-    (None) sizes it from the ACTUAL edge count (counted on the
-    just-checkpointed edge set — a cheap block scan), capped at the
-    session's shuffle setting: the frontier is usually far smaller than
-    the corpus the session width was tuned for, and ~6 shuffles/round ×
-    oversized task counts turn the loop into scheduler overhead.  The
-    session conf is restored on exit.
+    The round loop runs at most _MAX_ROUNDS rounds, at a shuffle width
+    sized from the ACTUAL edge count (counted on the just-checkpointed
+    edge set — a cheap block scan): one partition per
+    _EDGES_PER_PARTITION edges, at least _MIN_ROUND_PARTITIONS, capped
+    at the session's shuffle setting.  The frontier is usually far
+    smaller than the corpus the session width was tuned for, and ~6
+    shuffles/round × oversized task counts turn the loop into scheduler
+    overhead.  The session conf is restored on exit.
 
     The same count decides, before every round, whether the frontier
     fits one partition (≤ _EDGES_PER_PARTITION edges); from then on the
@@ -258,14 +262,14 @@ def connected_components(
     )
     sess_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_edges = edges.count()  # materialized by ckpt() — cheap block scan
-    if round_shuffle_partitions is None:
-        round_shuffle_partitions = max(
-            8, min(sess_sp, math.ceil(n_edges / _EDGES_PER_PARTITION))
-        )
-    spark.conf.set("spark.sql.shuffle.partitions", str(round_shuffle_partitions))
+    round_sp = max(
+        _MIN_ROUND_PARTITIONS,
+        min(sess_sp, math.ceil(n_edges / _EDGES_PER_PARTITION)),
+    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(round_sp))
     converged = False
     try:
-        for r in range(max_iter):
+        for r in range(_MAX_ROUNDS):
             if n_edges <= _EDGES_PER_PARTITION:
                 break  # the frontier fits one task: hybrid finish below
             # Checkpoint BETWEEN the two star steps: small-star

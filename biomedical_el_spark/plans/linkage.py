@@ -50,34 +50,22 @@ class LinkageConfig:
     minhash_seed: int = 42
     use_embedding_blocks: bool = True
     hyperplanes: int = 12
-    # scale the hyperplane count with the corpus (max(hyperplanes,
-    # ceil(log2(rows/16))) capped at 24, ~16 pages/bucket at any size —
-    # the LSH analogue of nlist ∝ n in IVF; the RESOLVED plane count
-    # enters the snapshot fingerprint).  Default OFF by measurement
-    # (tools/capscale_ab.py, 1M pages): on THIS corpus the band channel
-    # already covers what the embedding channel can reach — auto
-    # capacity bought +0.0001 recall for +16% wall.  Enable for corpora
-    # with cross-format near-dups (low Jaccard, high cosine), where a
-    # fixed 2^12-bucket channel is dead after capping at >=1M pages.
-    auto_hyperplanes: bool = False
-    use_tfidf_blocks: bool = False
-    tfidf_top_w: int = 2
     max_block_size: int = 64
     # what to do with blocks over the cap: "star" pairs every member
     # with the block's min url — O(b) pairs whose τ-scoring plus
     # transitive closure can recover an evicted duplicate group; None
     # (default) excludes them.  Default OFF by measurement
-    # (tools/capscale_ab.py, 1M pages): cap eviction costs only 0.76%
-    # of gold pairs there (2.0% more are banding misses that share NO
-    # key), and star recovered ~none of them (+0.000 recall for +34%
+    # (tools/capscale_ab.json, BENCH.md "Oversized-block controls A/B",
+    # 1M pages): cap eviction costs only 0.76% of gold pairs there (2.0%
+    # more are banding misses that share NO key), and star recovered ~none of them (+0.000 recall for +34%
     # wall — oversized blocks on this corpus are boilerplate key
     # collisions, not duplicate groups, so hub edges fail τ).  Enable
     # for corpora where hot blocks ARE duplicate blobs (mirrors,
     # parked-domain farms) — the unit tests construct that shape.
     oversized_escape: str | None = None
     # evidence-count gate at pair dedup: keep only candidate pairs that
-    # collide in >= this many DISTINCT blocks (bands / embedding buckets /
-    # tfidf keys all count).  Rides the groupBy exchange that distinct()
+    # collide in >= this many DISTINCT blocks (bands and embedding
+    # buckets both count).  Rides the groupBy exchange that distinct()
     # already pays — zero extra shuffle.  SEMANTIC knob (changes the
     # candidate set, hence recall): default 1 = today's any-single-block
     # behavior; 2 suppresses low-similarity junk multiplicatively where
@@ -109,7 +97,8 @@ class LinkageConfig:
     # shuffling it twice (singletons and oversized keys filtered before
     # any agg state).  Identical results either way; execution detail,
     # excluded from the snapshot fingerprint.  Default ON by measurement
-    # (tools/conf_ab.py, same-window pairs): 16c/16M gate leg 1257.3 s
+    # (tools/conf_ab_results.json, BENCH.md "Pair-generation exchange
+    # A/B", same-window pairs): 16c/16M gate leg 1257.3 s
     # vs 1378.4 s two-pass (−8.8%, despite the single-exchange leg
     # drawing the noisier spin window), 16c/1M −3.9% and −7.3%.
     pairs_single_exchange: bool = True
@@ -166,21 +155,12 @@ def _estimate_rows(pages: DataFrame, sample_files: int = 64) -> int:
 
 def resolved_config(cfg: LinkageConfig, est: int) -> dict:
     """The SEMANTIC config dict that keys snapshots: execution-only
-    fields dropped, data-proportional knobs resolved against the row
-    estimate (the resolved values are the semantics — two corpora of
-    different sizes legitimately get different fingerprints; their input
-    fingerprints differ anyway)."""
-    hp = cfg.hyperplanes
-    if cfg.auto_hyperplanes and est > 16:
-        import math
-
-        # ~16 pages per embedding bucket at any corpus size
-        hp = max(hp, min(24, math.ceil(math.log2(est / 16))))
+    fields dropped.  `est` (the row estimate) is unused; it stays
+    because perfbench's traced chain passes it."""
     cfg_dict = asdict(cfg)
     cfg_dict.pop("checkpoint_dir")
     cfg_dict.pop("num_partitions")
     cfg_dict.pop("pairs_single_exchange")
-    cfg_dict["hyperplanes"] = hp
     # storage encoding of the features stage (int8 vec / int32 sig since
     # r5): part of the semantics — a pre-change snapshot store must not
     # be silently mixed with post-change stages
@@ -200,9 +180,7 @@ def run_linkage(
     assert cfg.bands * cfg.rows_per_band == cfg.num_hashes
     # footer-based row estimate: metadata-only, never executes the lineage
     est = _estimate_rows(pages)
-    cfg_dict = resolved_config(cfg, est)
-    hp = cfg_dict["hyperplanes"]
-    cfg_fp = fingerprint(cfg_dict, input_fingerprint)
+    cfg_fp = fingerprint(resolved_config(cfg, est), input_fingerprint)
 
     def snap(stage: str, compute, partition_by=None) -> DataFrame:
         if store is None:
@@ -241,33 +219,12 @@ def run_linkage(
     def compute_blocks() -> DataFrame:
         blk = band_keys_from_sig(features, cfg.bands, cfg.rows_per_band)
         if cfg.use_embedding_blocks:
-            key = hyperplane_lsh_udf(hp)(F.col("vec"))
+            key = hyperplane_lsh_udf(cfg.hyperplanes)(F.col("vec"))
             # shift hyperplane buckets into their own bigint key space
             blk = blk.unionByName(
                 features.select(
                     "url",
                     (F.lit(1 << 40) + key.cast("bigint")).alias("block_key"),
-                )
-            )
-        if cfg.use_tfidf_blocks:
-            # third recall channel (reference --use_tfidf_candidates):
-            # rare-shingle keys catch low-Jaccard pairs that share one
-            # distinctive phrase.  Hashed into their own key namespace —
-            # a 64-bit collision can only ADD a candidate pair.
-            # Deliberately the TEXT-based channel: the round-4
-            # shared-shingle variant (the feature UDF emitting per-doc
-            # shingle hashes for a features-backed TF-IDF operator) was
-            # A/B'd at 1M pages and measured WORSE (+117% wall vs +69%
-            # for this path) — the Arrow-pass shingle emission and the
-            # widened persisted features relation cost more than the JVM
-            # re-tokenization they save (BENCH.md).
-            from ..operators.blocking import tfidf_blocks
-
-            tf = tfidf_blocks(paged, top_w=cfg.tfidf_top_w)
-            blk = blk.unionByName(
-                tf.select(
-                    "url",
-                    F.xxhash64(F.lit("tfidf"), F.col("block_key")).alias("block_key"),
                 )
             )
         return blk

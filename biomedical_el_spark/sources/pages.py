@@ -1,4 +1,4 @@
-"""Pages-table ingest + the canonical `extract_text` UDF.
+"""Pages-table schema + the canonical `extract_text` UDF.
 
 Reference mapping: PubTator corpus scan + title/abstract concat
 (data_preprocessing.py:17,31-45) becomes: read the pages table, derive
@@ -43,25 +43,6 @@ def extract_text(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     for html in batches:
         s = html.map(lambda b: b.decode("utf-8", "replace") if b is not None else "")
         yield s.str.replace(_TAG_RE, "", regex=True)
-
-
-def ingest_pages(raw: DataFrame) -> DataFrame:
-    """Normalize a raw pages table: derive text from html where missing,
-    enforce the declared schema/column order."""
-    cols = {f.name for f in raw.schema.fields}
-    df = raw
-    if "text" not in cols:
-        df = df.withColumn("text", extract_text(F.col("html")))
-    else:
-        df = df.withColumn(
-            "text",
-            F.when(F.col("text").isNull(), extract_text(F.col("html"))).otherwise(
-                F.col("text")
-            ),
-        )
-    keep = [f.name for f in PAGES_SCHEMA.fields if f.name in cols or f.name == "text"]
-    extra = [c for c in raw.columns if c not in keep]
-    return df.select(*keep, *extra)
 
 
 def verify_text_invariant(pages: DataFrame) -> int:

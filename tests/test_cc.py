@@ -51,7 +51,7 @@ def test_two_components(spark):
 
 def test_long_chain(spark, monkeypatch):
     # chain of 40 nodes — worst case for naive propagation; large/small star
-    # must converge in O(log n) rounds within the max_iter budget, and the
+    # must converge in O(log n) rounds within the _MAX_ROUNDS budget, and the
     # local finish must hook it to one label
     nodes = [f"n{i:03d}" for i in range(40)]
     for path, threshold in PATHS.items():

@@ -1,13 +1,15 @@
 """Compose BENCH.md from measured artifacts:
 
   - tools/scaling_results.json  (python tools/scaling_bench.py)
-  - tools/tfidf_ab.json         (python tools/tfidf_ab.py)       [optional]
   - tools/ann_recall.json       (python tools/ann_recall_bench.py) [optional]
-  - tools/capscale_ab.json      (python tools/capscale_ab.py)    [optional]
-  - tools/resume_bench.json     (python tools/resume_bench.py)   [optional]
+  - tools/banding_ab.json       (python tools/banding_ab.py)       [optional]
+  - tools/tfidf_ab.json, capscale_ab.json, resume_bench.json, traffic.json,
+    work_growth.json, conf_ab_results.json                         [optional]
 
-Keeping the render separate from the measurement means a new A/B row never
-forces re-running the multi-hour scaling sweep.
+The JSON files without a script are the records of finished one-off
+measurements; their numbers are rendered as-is.  Keeping the render
+separate from the measurement means a new A/B row never forces
+re-running the multi-hour scaling sweep.
 
 Usage: python tools/render_bench.py
 """
@@ -103,8 +105,8 @@ timed run (python-worker spin-up + codegen are executor *startup* costs,
 amortized on any long-lived cluster).  Engine time excludes datagen and
 session startup; best-of-N repeats with EQUAL repeat counts on the two
 legs of each weak point (3 at the smaller points, 4 on BOTH legs of the
-4M→16M gate point; extra same-window repeats via tools/extra_leg.py +
-merge_extra_leg.py), every repeat recorded below.  Round-4 additions, per timed run:
+4M→16M gate point; extra same-window repeats recorded in
+tools/extra_leg_*.json), every repeat recorded below.  Round-4 additions, per timed run:
 
   - a **task-occupancy trace** (statusTracker at 10 Hz): occupancy
     (mean runnable-task fill of the N slots), dead fraction (zero
@@ -197,8 +199,8 @@ At the two biggest points both legs run at near-full occupancy (0.92 /
 0.96 at 4M→16M) with dead fractions under 6% — the engine keeps every
 core fed, so neither driver dead time nor barrier tails explain the raw
 gap.  What remains is that each core is SLOWER WHILE BUSY at 16-way
-concurrency (work_linearity 2.1–2.3×).  `tools/concurrency_controls.py`
-measures per-core throughput of three SPARK-FREE workloads at 4 vs 16
+concurrency (work_linearity 2.1–2.3×).  `tools/concurrency_controls.json`
+records per-core throughput of three SPARK-FREE workloads at 4 vs 16
 concurrent pinned processes; across 7 control runs spread over ~40
 minutes (`tools/concurrency_controls_runs.json`) the 16c/4c per-core
 ratios were:
@@ -214,7 +216,7 @@ of the 4-core per-core throughput FOR PURE PYTHON/NUMPY WORK WITH NO
 SPARK IN THE LOOP, varying minute to minute — an envelope whose slow
 end (≈2.1× inflation) covers the flagship's measured work_linearity
 entirely.  GC adds a measured 7.5% (4c/1M) → 13.0% (16c/4M) of wall
-(`tools/gc_probe.py`).  Honest conclusions: (a) the engine's
+(`tools/gc_probe.json`).  Honest conclusions: (a) the engine's
 scheduling, partitioning and operator work all scale (occupancy ≈ full;
 per-page work grows only by the measured candidate-density effect in
 the next section, which a 4N-executor production run would carry
@@ -234,7 +236,7 @@ warm-up, 5 s windows, repeats) produced the envelope above, and the
 single-number claim is withdrawn.
 
 **Shuffle-side levers tested and measured OFF at the gate leg**
-(`tools/conf_ab.py` — paired same-window 16c/16M legs under the exact
+(`tools/conf_ab_results.json` — paired same-window 16c/16M legs under the exact
 leg protocol, with a 1 Hz host dirty-page sampler):
 
   - **dirty-writeback throttling refuted**: /tmp is disk-backed ext4
@@ -269,7 +271,7 @@ collect agg from the SAME hash exchange, filtering singleton (p50 block
 size is 1) and oversized keys before any aggregation state — one scan,
 one shuffle, identical results (property-tested against the python
 reference alongside the other generators).  Paired same-window legs
-under the exact leg protocol (`tools/conf_ab.py`):
+under the exact leg protocol (`tools/conf_ab_results.json`):
 
 | leg | plan | wall s | occupancy | spin before/after | pair |
 |---|---|---|---|---|---|
@@ -344,8 +346,8 @@ one at a fixed, measured recall discount.
         doc += f"""
 ## Measured per-page work growth (the second half of the work-linearity decomposition)
 
-`tools/work_growth_probe.py` runs the flagship's own blocking lineage
-over the cached scaling corpora and counts, per corpus size, what the
+`tools/work_growth.json` records the flagship's own blocking lineage
+run over the cached scaling corpora, counting, per corpus size, what the
 downstream stages actually consume (counts are deterministic —
 window-independent):
 
@@ -396,7 +398,7 @@ per-core envelope instead.
 
 Bytes are run-deterministic on this engine (Spark UI REST totals over
 completed stages, AQE rounding only), so these compare across windows
-even when wall time can't (`tools/bytes_probe.py`):
+even when wall time can't (`tools/traffic.json`):
 
 | metric | B/page |
 |---|---|
@@ -499,15 +501,18 @@ asked for a cap-escape; the measurement decided the default:
 | + star cap-escape | {st['sec']} | {st['n_pairs']:,} | {st['candidate_recall']} | {st['recall']} | {st['f1']} |
 | + star + auto hyperplane capacity | {sa['sec']} | {sa['n_pairs']:,} | {sa['candidate_recall']} | {sa['recall']} | {sa['f1']} |
 
-**Decision: both OFF by default.**  Measured gap decomposition at 1M
+**Decision: star escape OFF by default; auto hyperplane capacity
+deleted.**  Measured gap decomposition at 1M
 pages: of the 2.75-point unconditioned recall gap, **2.0 points are
 banding misses** (gold pairs sharing NO block key of any size) and only
 **0.76 points are cap evictions** — and the star escape recovered ≈none
 of those (+34% wall), because this corpus's oversized blocks are
 boilerplate band-key collisions, not duplicate groups, so hub edges fail
-τ.  Both mechanisms stay implemented, oracle-checked
-(`er_capped_star_pairs`) and unit-tested for the corpus shapes they DO
-serve (mirror/parked-domain duplicate blobs; cross-format near-dups).
+τ.  The star escape stays implemented, oracle-checked
+(`er_capped_star_pairs`) and unit-tested for the corpus shape it DOES
+serve (mirror/parked-domain duplicate blobs).  Auto hyperplane capacity
+bought +0.0001 recall for +16% wall and has since been deleted from
+`LinkageConfig`; its row above is its last measurement.
 """
 
     if tfidf:
@@ -515,9 +520,9 @@ serve (mirror/parked-domain duplicate blobs; cross-format near-dups).
         doc += f"""
 ## TF-IDF blocking channel A/B (flagship, {tfidf['n_pages']:,} pages, 16 cores)
 
-`LinkageConfig.use_tfidf_blocks` adds a rare-shingle recall channel
-(reference `--use_tfidf_candidates`).  Measured head-to-head, fresh
-pinned JVM per arm:
+This A/B measured a rare-shingle TF-IDF recall channel
+(`blocking.tfidf_blocks`, reference `--use_tfidf_candidates`) as a
+third flagship blocking channel, head-to-head, fresh pinned JVM per arm:
 
 | arm | wall s | candidate pairs | candidate recall | precision | recall | F1 |
 |---|---|---|---|---|---|---|
@@ -537,9 +542,10 @@ re-tokenizing raw text — and
 it measured WORSE (+117% wall vs this path's overhead, same-session
 paired arms): the Arrow-side shingle-list materialization plus the
 widened persisted features relation cost more than the JVM
-re-tokenization they save.  The flagship keeps the text-based channel;
-the shared-shingle variant has since been deleted from the package, and
-these numbers are its last measurement.
+re-tokenization they save.  The text-based flagship channel and the
+shared-shingle variant have both since been deleted (the
+`blocking.tfidf_blocks` operator stays behind the declared
+`er_tfidf_blocks` query), and these numbers are their last measurement.
 """
 
     if ann:

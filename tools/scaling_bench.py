@@ -59,15 +59,6 @@ from biomedical_el_spark.plans.linkage import run_linkage, LinkageConfig
 
 cores = int(sys.argv[1]); pages_dir = sys.argv[2]
 
-# A/B hooks (tools/conf_ab.py): extra session confs and an optional
-# pipeline partition-width override, env-passed so the leg protocol
-# (pinning, warmup, spin controls, occupancy sampler) stays identical
-ab_conf = json.loads(os.environ.get("SPARK_GRAFT_AB_CONF", "{}"))
-ab_npart = os.environ.get("SPARK_GRAFT_AB_NPART")
-# LinkageConfig field overrides (e.g. {"bands": 16, "rows_per_band": 3,
-# "num_hashes": 48}) — for pipeline-config A/Bs under the leg protocol
-ab_cfg = json.loads(os.environ.get("SPARK_GRAFT_AB_CFG", "{}"))
-
 
 def spin_rates(secs=2.5):
     # per-vCPU spin rates over the PINNED set (taskset already narrowed
@@ -98,8 +89,7 @@ def spin_rates(secs=2.5):
             "max_over_min": round(rates[-1] / rates[0], 3)}
 
 
-spark = get_spark("scaling-bench", cores=cores, shuffle_partitions=2 * cores,
-                  extra_conf=ab_conf)
+spark = get_spark("scaling-bench", cores=cores, shuffle_partitions=2 * cores)
 pages = spark.read.parquet(pages_dir)
 pages.count()  # warm the scan/file listing outside the timed region
 
@@ -114,7 +104,7 @@ pages.count()  # warm the scan/file listing outside the timed region
 # not fan out to a 16M-page task width.
 warm = run_linkage(
     spark, pages.limit(20000),
-    cfg=LinkageConfig(**{**ab_cfg, "num_partitions": 2 * cores}),
+    cfg=LinkageConfig(num_partitions=2 * cores),
 )
 warm["clusters"].write.format("noop").mode("overwrite").save()
 for df in warm.values():
@@ -145,9 +135,7 @@ def _sample():
 th = threading.Thread(target=_sample, daemon=True)
 th.start()
 t0 = time.time()
-if ab_npart:
-    ab_cfg["num_partitions"] = int(ab_npart)
-out = run_linkage(spark, pages, cfg=LinkageConfig(**ab_cfg))
+out = run_linkage(spark, pages)
 out["clusters"].write.format("noop").mode("overwrite").save()
 dt = time.time() - t0
 stop_ev.set()
