@@ -11,10 +11,8 @@ entities (utils_e2e_span.py:340-461, FAISS declared but dead at :8,:265-270).
 MinHash-LSH banding is the horizontally-scalable analogue: two records
 sharing any band key become a candidate pair without an all-pairs join.
 
-The SQL MinHash signature itself lives in `blocking.shingle_blocks`, in
-two hash modes:
-  - "xxhash64" (default): Spark's built-in 64-bit xxHash — fastest, codegen.
-  - "md5": byte-identical in DuckDB → used by oracle-checked queries.
+The SQL MinHash signature itself lives in `blocking.shingle_blocks`; it
+hashes with md5, byte-identical in DuckDB, so oracle-checked queries use it.
 """
 
 from __future__ import annotations

@@ -31,11 +31,12 @@ def shingle_blocks(
     num_hashes: int = 16,
     bands: int = 8,
     rows_per_band: int = 2,
-    mode: str = "xxhash64",
     id_col: str = "url",
     text_col: str = "text",
 ) -> DataFrame:
     """pages → (url, block_key): MinHash signature over k-shingles, banded.
+    Hash i of a shingle s is md5("i:" + s), which DuckDB reproduces byte
+    for byte, so the declared query built on it is oracle-checked.
 
     bands×rows_per_band must equal num_hashes.  With rows=2, two pages
     share a band key with prob s² per band (s = true Jaccard) — ≥0.99
@@ -58,18 +59,10 @@ def shingle_blocks(
         "url",
         F.explode(X.shingles(F.col("tk"), k_shingle)).alias("s"),
     )
-    if mode == "xxhash64":
-        aggs = [
-            F.min(F.xxhash64(F.lit(i), F.col("s"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    elif mode == "md5":
-        aggs = [
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    else:
-        raise ValueError(f"unknown minhash mode: {mode}")
+    aggs = [
+        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"h{i}")
+        for i in range(num_hashes)
+    ]
     sig = ex.groupBy("url").agg(*aggs).select(
         "url", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig")
     )

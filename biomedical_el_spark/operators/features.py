@@ -48,15 +48,17 @@ def _sig32(sigs: np.ndarray) -> list:
 
 def page_features(
     pages: DataFrame,
-    num_hashes: int = 32,
-    seed: int = 42,
-    prefix_len: int = 64,
+    num_hashes: int,
+    seed: int,
+    prefix_len: int,
     id_col: str = "url",
     text_col: str = "text",
     normalize_accents: bool = False,
 ) -> DataFrame:
     """Compute (url, vec, sig, prefix) in one scalar-iterator pandas UDF
-    over Arrow batches — model/config init once per worker.
+    over Arrow batches — model/config init once per worker.  The
+    semantic arguments have no defaults: `LinkageConfig` declares them
+    (`plans.linkage.featurize`).
 
     normalize_accents=True NFD-strips combining marks (reference
     BasicTokenizer semantics, tokenization_bert.py:345-356) INSIDE the
@@ -127,8 +129,10 @@ def band_keys_from_sig(
     every key VALUE changed.  The streaming store persists block_key
     (streaming/incremental.py), and a store written before round 6 and
     resumed after it silently misses every pair that needs an old key to
-    meet a new one.  Such stores must be rebuilt from their pages; the
-    store carries no version marker yet."""
+    meet a new one.  So a change to this formula must bump the
+    streaming store's `STORE_FORMAT`: a store written under the old
+    formula then fails fast on its marker and is rebuilt from its
+    pages."""
     keys = F.array(
         *[
             F.xxhash64(

@@ -120,12 +120,11 @@ _BLOCKS_SQL = f"""
 
 @register("er_minhash_blocks", f"SELECT doc_id, block_key FROM ({_BLOCKS_SQL})")
 def er_minhash_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH banding (md5 mode, 8 hashes × 4 bands) — stage-1
+    """MinHash-LSH banding (md5, 8 hashes × 4 bands) — stage-1
     blocking, oracle-checkable end to end."""
     docs = _fanout(_t(spark, sf_dir, "documents"), "doc_id")
     blk = B.shingle_blocks(
-        docs, k_shingle=3, num_hashes=8, bands=4, rows_per_band=2,
-        mode="md5", id_col="doc_id",
+        docs, k_shingle=3, num_hashes=8, bands=4, rows_per_band=2, id_col="doc_id"
     )
     return blk.select(F.col("url").alias("doc_id"), "block_key")
 

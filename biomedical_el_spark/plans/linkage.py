@@ -168,6 +168,18 @@ def resolved_config(cfg: LinkageConfig, est: int) -> dict:
     return cfg_dict
 
 
+def featurize(pages: DataFrame, cfg: LinkageConfig) -> DataFrame:
+    """The feature table under `cfg`: the one featurization that
+    run_linkage and the streaming pipeline both use."""
+    return page_features(
+        pages,
+        cfg.num_hashes,
+        cfg.minhash_seed,
+        cfg.jw_prefix,
+        normalize_accents=cfg.normalize_accents,
+    )
+
+
 def run_linkage(
     spark: SparkSession,
     pages: DataFrame,
@@ -205,16 +217,7 @@ def run_linkage(
             spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
             widened = True
     paged = pages.repartition(n_part, "url")
-    features = snap(
-        "features",
-        lambda: page_features(
-            paged,
-            cfg.num_hashes,
-            cfg.minhash_seed,
-            prefix_len=cfg.jw_prefix,
-            normalize_accents=cfg.normalize_accents,
-        ),
-    )
+    features = snap("features", lambda: featurize(paged, cfg))
 
     def compute_blocks() -> DataFrame:
         blk = band_keys_from_sig(features, cfg.bands, cfg.rows_per_band)

@@ -74,9 +74,10 @@ class IcebergSnapshotStore(SnapshotStore):
     url-equi-joins read co-located files (SURVEY.md: the features table
     is the one worth bucketing).
 
-    Drop-in for `run_linkage(store=...)`: get_or_compute/committed/read/
-    write keep the parent signatures; partition_by accepts plain column
-    names (identity partitions) — url gets bucket(16) automatically.
+    Drop-in for `run_linkage(store=...)`: committed/read/write keep the
+    parent signatures and get_or_compute is inherited; partition_by
+    accepts plain column names (identity partitions) — url gets
+    bucket(16) automatically.
     """
 
     FP_PROP = "graft.fingerprint"
@@ -133,19 +134,6 @@ class IcebergSnapshotStore(SnapshotStore):
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         return spark.read.table(self._table(stage))
-
-    def get_or_compute(
-        self,
-        spark: SparkSession,
-        stage: str,
-        fp: str,
-        compute,
-        partition_by: list[str] | None = None,
-    ) -> DataFrame:
-        if self.committed(stage, fp):
-            return self.read(spark, stage)
-        self.write(compute(), stage, fp, partition_by)
-        return self.read(spark, stage)
 
 
 def open_store(

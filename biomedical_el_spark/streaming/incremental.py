@@ -1,13 +1,13 @@
-"""Incremental blocking over a stream of new pages.
+"""The flagship linkage pipeline per micro-batch of a page stream.
 
 The reference has no streaming (SURVEY.md §2.9); this is the natural
-extension the north_star sketches: new Common-Crawl snapshots arrive,
-each micro-batch is featurized with the SAME batched UDFs as the batch
-pipeline (one code path → the byte-identical text invariant holds across
-batch and stream), band keys are appended to the blocks store, and new
-candidate pairs are emitted by joining the micro-batch's keys against
-the accumulated key store — incremental ER without recomputing old
-blocks.
+extension the north_star sketches: each arriving micro-batch runs the
+batch pipeline incrementally — features → band keys joined against the
+accumulated key store → exactly-once new pairs → scoring → τ links →
+cluster maintenance — without recomputing old blocks.  `run_linkage`'s
+`LinkageConfig` drives it (featurized by the same `featurize`), so
+streaming N batches equals `run_linkage` on their union under the same
+config; the stream implements band-key blocking, uncapped, only.
 
 Store layout is BUCKET-FIRST (`bucket=<b>/batch_id=<n>`): the per-batch
 accumulated join reads only the bucket directories the batch's keys can
@@ -16,6 +16,10 @@ coverage, not with how many batches the store has accumulated (the
 batch-first layout had to list every batch directory to prune).  On a
 cluster the store is an Iceberg table with a bloom filter on block_key;
 explicit bucket-directory selection is the local-parquet equivalent.
+The first batch writes `_store.json` (`STORE_FORMAT`, config
+fingerprint, `n_buckets`); a later batch that disagrees with it, or
+finds data without it, raises: a store keyed another way silently
+misses pairs, so it must be rebuilt from its pages.
 
 Pairs are exactly-once ACROSS batches, not just per batch partition: a
 re-crawled url in a later micro-batch regenerates pairs an earlier batch
@@ -39,10 +43,17 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.features import band_keys_from_sig, page_features
+from ..operators.features import band_keys_from_sig
+from ..plans.linkage import LinkageConfig, featurize, resolved_config
 from ..sources.pages import PAGES_SCHEMA
+from ..sources.snapshots import fingerprint
 
 COMPACTED_BATCH_ID = -1
+# The store's layout plus its band-key formula (`band_keys_from_sig`).
+# Bump it on any change to either: stores written before the change
+# then fail fast on their marker instead of silently missing pairs.
+STORE_FORMAT = 1
+STORE_MARKER = "_store.json"
 
 
 def read_page_stream(spark: SparkSession, path: str, max_files: int = 10) -> DataFrame:
@@ -73,18 +84,16 @@ def read_store_buckets(
 
 
 def process_block_batch(
-    batch_df: DataFrame,
+    feats: DataFrame,
     batch_id: int,
     store_dir: str,
-    bands: int = 16,
-    rows_per_band: int = 2,
-    num_hashes: int = 32,
-    n_buckets: int = 64,
-    feats: DataFrame | None = None,
+    cfg: LinkageConfig,
+    n_buckets: int,
 ) -> None:
-    """One micro-batch of incremental blocking.  Module-level (not a
-    closure) so idempotency is directly testable: calling it twice with
-    the same batch_id must leave the store unchanged.
+    """One micro-batch of incremental blocking over the batch's feature
+    table.  Module-level (not a closure) so idempotency is directly
+    testable: calling it twice with the same batch_id must leave the
+    store unchanged.
 
     Idempotency: outputs are partitioned `bucket/batch_id` and written
     with DYNAMIC partition overwrite — a retried micro-batch REPLACES its
@@ -98,11 +107,9 @@ def process_block_batch(
     pair-hash buckets, so this check also scales with the batch, not the
     corpus.
     """
-    spark = batch_df.sparkSession
-    if feats is None:
-        feats = page_features(batch_df, num_hashes=num_hashes)
+    spark = feats.sparkSession
     keys = (
-        band_keys_from_sig(feats, bands, rows_per_band)
+        band_keys_from_sig(feats, cfg.bands, cfg.rows_per_band)
         .withColumn("bucket", F.pmod(F.col("block_key"), F.lit(n_buckets)).cast("int"))
         .persist()
     )
@@ -172,7 +179,6 @@ def committed_batch_ids(checkpoint_dir: str) -> set[int]:
 def compact_blocks_store(
     spark: SparkSession,
     store_dir: str,
-    n_buckets: int = 64,
     checkpoint_dir: str | None = None,
 ) -> None:
     """Merge accumulated per-batch files into a single `batch_id=-1`
@@ -223,7 +229,7 @@ def compact_blocks_store(
         spark.read.option("basePath", base)
         .parquet(*absorb)
         .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
-        .repartition(n_buckets, "bucket")
+        .repartition(len({d for d, _, _ in leaves}), "bucket")
         .write.mode("overwrite")
         .partitionBy("bucket", "batch_id")
         .parquet(tmp)
@@ -349,23 +355,6 @@ def _update_clusters(
     spark.catalog.refreshByPath(base)
     spark.catalog.refreshByPath(mirror)
     have_old = os.path.isdir(base)
-    if have_old and not os.path.isdir(mirror):
-        # one-time backfill for stores created before the mirror existed;
-        # single os.rename makes it atomic (partial build never visible)
-        tmp = mirror + "_backfill"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            spark.read.parquet(base)
-            .select("node", "component")
-            .withColumn(
-                "cbucket",
-                F.pmod(F.xxhash64("component"), F.lit(n_buckets)).cast("int"),
-            )
-            .repartition(n_buckets, "cbucket")
-            .write.partitionBy("cbucket")
-            .parquet(tmp)
-        )
-        os.rename(tmp, mirror)
 
     li = links.select("url_a", "url_b").distinct().persist()
     link_nodes = (
@@ -543,19 +532,59 @@ def read_clusters(spark: SparkSession, store_dir: str) -> DataFrame:
     return mapped.unionByName(singles)
 
 
+def _stream_config(cfg: LinkageConfig | None) -> LinkageConfig:
+    """`cfg`, or the stream's default, once checked.  The stream blocks
+    on band keys alone and implements neither the hyperplane channel nor
+    the band-match gate; nor a block-size cap, because a block grows with
+    later batches and a cap would have to retract pairs already emitted."""
+    cfg = cfg or LinkageConfig(use_embedding_blocks=False, max_block_size=None)
+    if cfg.use_embedding_blocks or cfg.max_block_size is not None or cfg.min_band_matches > 1:
+        raise ValueError(
+            "the streaming pipeline cannot honor use_embedding_blocks="
+            f"{cfg.use_embedding_blocks}, max_block_size={cfg.max_block_size}, "
+            f"min_band_matches={cfg.min_band_matches}; it needs False, None, 1"
+        )
+    if cfg.bands * cfg.rows_per_band != cfg.num_hashes:
+        raise ValueError("bands * rows_per_band must equal num_hashes")
+    return cfg
+
+
+def _check_store_marker(store_dir: str, cfg: LinkageConfig, n_buckets: int) -> None:
+    """Fail fast unless `store_dir` is empty or marked with this store
+    format, config and bucket count; mark an empty store by atomic
+    rename.  Runs before the batch writes anything."""
+    want = {
+        "store_format": STORE_FORMAT,
+        "config": fingerprint(resolved_config(cfg, 0)),
+        "n_buckets": n_buckets,
+    }
+    path = os.path.join(store_dir, STORE_MARKER)
+    if os.path.exists(path):
+        with open(path) as f:
+            have = json.load(f)
+        if have == want:
+            return
+        problem = f"was written with {have}, this batch needs {want}"
+    elif os.path.isdir(store_dir) and set(os.listdir(store_dir)) - {STORE_MARKER + ".tmp"}:
+        problem = f"has data but no {STORE_MARKER}"
+    else:
+        os.makedirs(store_dir, exist_ok=True)
+        with open(path + ".tmp", "w") as f:
+            json.dump(want, f)
+        os.replace(path + ".tmp", path)
+        return
+    raise ValueError(
+        f"streaming store {store_dir} {problem}; rebuild the store: stream "
+        "its pages into a new, empty directory"
+    )
+
+
 def process_linkage_batch(
     batch_df: DataFrame,
     batch_id: int,
     store_dir: str,
-    bands: int = 16,
-    rows_per_band: int = 2,
-    num_hashes: int = 32,
+    cfg: LinkageConfig | None = None,
     n_buckets: int = 64,
-    tau: float = 0.62,
-    weights: dict | None = None,
-    # matches LinkageConfig.jw_prefix's default so stream==batch holds
-    # under DEFAULT configs, not just in the test's explicit pairing
-    prefix_len: int = 32,
 ) -> None:
     """The FULL flagship per micro-batch: features → incremental blocking
     → exactly-once new candidate pairs (process_block_batch) → fused
@@ -563,6 +592,10 @@ def process_linkage_batch(
     incremental cluster maintenance (_update_clusters).  An arriving
     micro-batch therefore updates `clusters`, not just candidate pairs —
     the streaming pipeline ends where the batch pipeline ends.
+
+    `cfg` is run_linkage's config (default: band keys only, uncapped).
+    A config the stream cannot honor, or a store marked with another
+    format, config or `n_buckets`, raises ValueError before any write.
 
     Stores (all bucket-first, dynamic-overwrite idempotent):
       features/fbucket/batch_id — narrow hydration relation
@@ -574,11 +607,12 @@ def process_linkage_batch(
     per-row function of a pair's two feature rows); cluster updates are
     idempotent-converging under retry (see _update_clusters).  The
     equivalence contract — stream N batches ≡ run the batch pipeline on
-    the union corpus — is asserted in tests/test_streaming.py."""
+    the union corpus under the same config — is asserted in
+    tests/test_streaming.py."""
+    cfg = _stream_config(cfg)
+    _check_store_marker(store_dir, cfg, n_buckets)
     spark = batch_df.sparkSession
-    feats = page_features(
-        batch_df, num_hashes=num_hashes, prefix_len=prefix_len
-    ).withColumn(
+    feats = featurize(batch_df, cfg).withColumn(
         "fbucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
     ).persist()
     (
@@ -588,10 +622,7 @@ def process_linkage_batch(
         .partitionBy("fbucket", "batch_id")
         .parquet(f"{store_dir}/features")
     )
-    process_block_batch(
-        batch_df, batch_id, store_dir, bands, rows_per_band, num_hashes,
-        n_buckets, feats=feats.drop("fbucket"),
-    )
+    process_block_batch(feats.drop("fbucket"), batch_id, store_dir, cfg, n_buckets)
     # this batch's COMMITTED new pairs (exactly-once across batches)
     pairs_base = f"{store_dir}/pairs"
     if not os.path.isdir(pairs_base):
@@ -634,9 +665,9 @@ def process_linkage_batch(
         .drop("_rn")
     )
     scored = score_pairs_from_features(
-        new_pairs, hydr.select("url", "vec", "sig", "prefix"), weights
+        new_pairs, hydr.select("url", "vec", "sig", "prefix"), cfg.weights
     )
-    links = match_links(scored, tau).persist()
+    links = match_links(scored, cfg.tau).persist()
     (
         links.withColumn(
             "pbucket",
@@ -658,43 +689,18 @@ def incremental_linkage(
     pages_stream: DataFrame,
     store_dir: str,
     checkpoint_dir: str,
-    **kwargs,
-):
-    """writeStream wrapper running the FULL pipeline per micro-batch —
-    the streaming counterpart of run_linkage."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        process_linkage_batch(batch_df, batch_id, store_dir, **kwargs)
-
-    return (
-        pages_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-
-
-def incremental_blocking(
-    pages_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    bands: int = 16,
-    rows_per_band: int = 2,
-    num_hashes: int = 32,
+    cfg: LinkageConfig | None = None,
     n_buckets: int = 64,
 ):
-    """pages stream → blocks/pairs stores updated per micro-batch via
-    `process_block_batch` (idempotent bucket/batch_id dynamic-overwrite
-    writes + bucket-pruned accumulated join + cross-batch pair
-    anti-join).  Spark's checkpoint tracks committed batch ids — the
-    streaming analogue of the SnapshotStore manifest; together with the
-    dynamic-overwrite sink a crash/retry at any point converges to
-    exactly-once output, including for re-crawled urls seen again in
-    later batches."""
+    """writeStream wrapper running the FULL pipeline per micro-batch —
+    the streaming counterpart of run_linkage.  Spark's checkpoint tracks
+    committed batch ids (the streaming analogue of the SnapshotStore
+    manifest); with the idempotent batch writes, a crash/retry at any
+    point converges to exactly-once output."""
+    cfg = _stream_config(cfg)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        process_block_batch(
-            batch_df, batch_id, store_dir, bands, rows_per_band, num_hashes, n_buckets
-        )
+        process_linkage_batch(batch_df, batch_id, store_dir, cfg, n_buckets)
 
     return (
         pages_stream.writeStream.foreachBatch(process)

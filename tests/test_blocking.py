@@ -28,12 +28,10 @@ def test_near_duplicates_share_blocks(spark, pages):
     them: band keys from the feature signature plus hyperplane buckets
     from the feature embedding."""
     from biomedical_el_spark.functions.embedder import hyperplane_lsh_udf
-    from biomedical_el_spark.operators.features import (
-        band_keys_from_sig,
-        page_features,
-    )
+    from biomedical_el_spark.operators.features import band_keys_from_sig
+    from biomedical_el_spark.plans.linkage import LinkageConfig, featurize
 
-    feats = page_features(pages, num_hashes=32).cache()
+    feats = featurize(pages, LinkageConfig()).cache()
     blocks = band_keys_from_sig(feats, bands=16, rows_per_band=2).unionByName(
         feats.select(
             "url",

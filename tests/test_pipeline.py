@@ -72,10 +72,8 @@ def test_normalize_accents_blocking_keys(spark):
     'cafe\\u0301' twin must share blocking keys when enabled (identical
     minhash sigs -> identical band keys) and share none when disabled
     (every shingle contains the differing bytes)."""
-    from biomedical_el_spark.operators.features import (
-        band_keys_from_sig,
-        page_features,
-    )
+    from biomedical_el_spark.operators.features import band_keys_from_sig
+    from biomedical_el_spark.plans.linkage import LinkageConfig, featurize
 
     body = "café menu du café bistro"          # NFC é
     body_nfd = "café menu du café bistro"   # NFD e + combining acute
@@ -84,7 +82,7 @@ def test_normalize_accents_blocking_keys(spark):
         [("u_nfc", body), ("u_nfd", body_nfd)], "url string, text string"
     )
     for normalize, expect_shared in ((True, True), (False, False)):
-        feats = page_features(pages, normalize_accents=normalize)
+        feats = featurize(pages, LinkageConfig(normalize_accents=normalize))
         keys = band_keys_from_sig(feats, 16, 2)
         a = {r["block_key"] for r in keys.filter(F.col("url") == "u_nfc").collect()}
         b = {r["block_key"] for r in keys.filter(F.col("url") == "u_nfd").collect()}

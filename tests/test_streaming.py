@@ -1,14 +1,36 @@
-"""Structured Streaming: incremental blocking over page-file drops and
-watermarked windowed aggregation."""
+"""Structured Streaming: the linkage pipeline per micro-batch over
+page-file drops, its store, and watermarked windowed aggregation."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from biomedical_el_spark.datagen.pages import generate_pages
+from biomedical_el_spark.plans.linkage import LinkageConfig, featurize, run_linkage
 from biomedical_el_spark.streaming.incremental import (
-    incremental_blocking,
+    incremental_linkage,
     pages_per_window,
+    process_block_batch,
+    process_linkage_batch,
+    read_clusters,
     read_page_stream,
 )
+
+
+def _stream_cfg(**kw) -> LinkageConfig:
+    """The batch config whose channels the stream implements."""
+    return LinkageConfig(use_embedding_blocks=False, max_block_size=None, **kw)
+
+
+def _block_batch(df, batch_id, store, n_buckets=64, cfg=None):
+    """process_block_batch over `df`'s features under `cfg`."""
+    cfg = cfg or _stream_cfg()
+    process_block_batch(featurize(df, cfg), batch_id, store, cfg, n_buckets)
+
+
+def _mapping(spark, store):
+    return {(r["node"], r["component"]) for r in read_clusters(spark, store).collect()}
 
 
 def test_incremental_blocking_matches_batch(spark, tmp_path):
@@ -25,7 +47,7 @@ def test_incremental_blocking_matches_batch(spark, tmp_path):
     ).write.parquet(src + "/shard=1")
 
     stream = read_page_stream(spark, src + "/shard=*", max_files=1)
-    q = incremental_blocking(stream, store, ckpt).start()
+    q = incremental_linkage(stream, store, ckpt, n_buckets=8).start()
     q.awaitTermination(120)
 
     blocks = spark.read.parquet(store + "/blocks")
@@ -35,13 +57,10 @@ def test_incremental_blocking_matches_batch(spark, tmp_path):
     assert len(per_url) == 1  # same key count per page (16 bands)
 
     # accumulated incremental pairs ⊇ the batch pipeline's shingle pairs
-    from biomedical_el_spark.operators.features import (
-        band_keys_from_sig,
-        page_features,
-    )
+    from biomedical_el_spark.operators.features import band_keys_from_sig
     from biomedical_el_spark.operators.pairs import candidate_pairs_grouped
 
-    feats = page_features(all_pages)
+    feats = featurize(all_pages, _stream_cfg())
     batch_pairs, _ = candidate_pairs_grouped(
         band_keys_from_sig(feats, 16, 2), max_block_size=None
     )
@@ -55,19 +74,17 @@ def test_incremental_blocking_matches_batch(spark, tmp_path):
 def test_incremental_batch_retry_is_idempotent(spark, tmp_path):
     """A retried micro-batch (same batch_id) must REPLACE its own output,
     not append duplicates — block sizes and pairs stay exact."""
-    from biomedical_el_spark.streaming.incremental import process_block_batch
-
     store = str(tmp_path / "store_retry")
     pages = generate_pages(spark, 60, cluster_size=4).drop("entity_id").cache()
     b0 = pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == 0)
     b1 = pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == 1)
-    process_block_batch(b0, 0, store)
-    process_block_batch(b1, 1, store)
+    _block_batch(b0, 0, store)
+    _block_batch(b1, 1, store)
     blocks_once = spark.read.parquet(store + "/blocks").count()
     pairs_once = (
         spark.read.parquet(store + "/pairs").select("url_a", "url_b").distinct().count()
     )
-    process_block_batch(b1, 1, store)  # simulated retry of the last batch
+    _block_batch(b1, 1, store)  # simulated retry of the last batch
     assert spark.read.parquet(store + "/blocks").count() == blocks_once
     assert (
         spark.read.parquet(store + "/pairs").select("url_a", "url_b").distinct().count()
@@ -86,10 +103,7 @@ def test_incremental_store_rows_read_scales_with_coverage(spark, tmp_path):
     those bucket directories) — rows read scale with the batch's key
     coverage, not with corpus size.  Fixture: a 10× corpus already in
     the store, then a small batch."""
-    from biomedical_el_spark.streaming.incremental import (
-        process_block_batch,
-        read_store_buckets,
-    )
+    from biomedical_el_spark.streaming.incremental import read_store_buckets
 
     store = str(tmp_path / "store_prune")
     n_buckets = 256
@@ -97,12 +111,9 @@ def test_incremental_store_rows_read_scales_with_coverage(spark, tmp_path):
     small = corpus.limit(8).cache()
     # 10× corpus committed first; bands=4 keeps the small batch's bucket
     # coverage well under n_buckets (8 pages × 4 band keys ≤ 32 buckets)
-    process_block_batch(
-        corpus, 0, store, bands=4, rows_per_band=8, n_buckets=n_buckets
-    )
-    process_block_batch(
-        small, 1, store, bands=4, rows_per_band=8, n_buckets=n_buckets
-    )
+    cfg = _stream_cfg(bands=4, rows_per_band=8)
+    _block_batch(corpus, 0, store, n_buckets, cfg)
+    _block_batch(small, 1, store, n_buckets, cfg)
     blocks = spark.read.parquet(store + "/blocks")
     total_rows = blocks.count()
     covered = [
@@ -130,15 +141,13 @@ def test_recrawled_url_pairs_exactly_once(spark, tmp_path):
     earlier batch already committed; the anti-join against the committed
     pairs store must keep the store exactly-once ACROSS batch partitions
     (not merely within each)."""
-    from biomedical_el_spark.streaming.incremental import process_block_batch
-
     store = str(tmp_path / "store_recrawl")
     pages = generate_pages(spark, 60, cluster_size=4).drop("entity_id").cache()
     b0 = pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == 0).cache()
     b1_new = pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == 1)
     b1 = b1_new.unionByName(b0.limit(10)).cache()  # 10 re-crawled urls
-    process_block_batch(b0, 0, store)
-    process_block_batch(b1, 1, store)
+    _block_batch(b0, 0, store)
+    _block_batch(b1, 1, store)
     raw = spark.read.parquet(store + "/pairs")
     dup_across = (
         raw.groupBy("url_a", "url_b")
@@ -149,14 +158,12 @@ def test_recrawled_url_pairs_exactly_once(spark, tmp_path):
     assert dup_across == 0
     assert raw.count() == raw.select("url_a", "url_b").distinct().count()
     # the re-crawl lost nothing: batch-pipeline pairs are still covered
-    from biomedical_el_spark.operators.features import (
-        band_keys_from_sig,
-        page_features,
-    )
+    from biomedical_el_spark.operators.features import band_keys_from_sig
     from biomedical_el_spark.operators.pairs import candidate_pairs_grouped
 
     batch_pairs, _ = candidate_pairs_grouped(
-        band_keys_from_sig(page_features(pages), 16, 2), max_block_size=None
+        band_keys_from_sig(featurize(pages, _stream_cfg()), 16, 2),
+        max_block_size=None,
     )
     missing = batch_pairs.exceptAll(raw.select("url_a", "url_b"))
     assert missing.count() == 0
@@ -168,10 +175,7 @@ def test_compact_blocks_store(spark, tmp_path):
     against the compacted store (new batch still pairs with old keys)."""
     import glob
 
-    from biomedical_el_spark.streaming.incremental import (
-        compact_blocks_store,
-        process_block_batch,
-    )
+    from biomedical_el_spark.streaming.incremental import compact_blocks_store
 
     store = str(tmp_path / "store_compact")
     pages = generate_pages(spark, 90, cluster_size=4).drop("entity_id").cache()
@@ -179,8 +183,8 @@ def test_compact_blocks_store(spark, tmp_path):
         pages.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == i).cache()
         for i in range(3)
     ]
-    process_block_batch(shards[0], 0, store, n_buckets=8)
-    process_block_batch(shards[1], 1, store, n_buckets=8)
+    _block_batch(shards[0], 0, store, 8)
+    _block_batch(shards[1], 1, store, 8)
     before = {  # materialize: compaction replaces the files on disk
         (r["url"], r["block_key"])
         for r in spark.read.parquet(store + "/blocks")
@@ -188,7 +192,7 @@ def test_compact_blocks_store(spark, tmp_path):
         .collect()
     }
     files_before = len(glob.glob(store + "/blocks/**/*.parquet", recursive=True))
-    compact_blocks_store(spark, store, n_buckets=8)
+    compact_blocks_store(spark, store)
     after = spark.read.parquet(store + "/blocks")
     assert after.count() == len(before)
     got = {
@@ -202,7 +206,7 @@ def test_compact_blocks_store(spark, tmp_path):
     files_after = len(glob.glob(store + "/blocks/**/*.parquet", recursive=True))
     assert files_after < files_before
     # stream continues: a new batch pairs against the compacted store
-    process_block_batch(shards[2], 2, store, n_buckets=8)
+    _block_batch(shards[2], 2, store, 8)
     pairs = spark.read.parquet(store + "/pairs").select("url_a", "url_b")
     s2_urls = {r["url"] for r in shards[2].select("url").collect()}
     touching = pairs.filter(
@@ -216,12 +220,7 @@ def test_compaction_skips_uncommitted_batches(spark, tmp_path):
     streaming checkpoint are carried over untouched (never absorbed into
     batch_id=-1), so the batch's retry dynamic-overwrites its own leaves
     instead of permanently duplicating rows the compaction absorbed."""
-    import os
-
-    from biomedical_el_spark.streaming.incremental import (
-        compact_blocks_store,
-        process_block_batch,
-    )
+    from biomedical_el_spark.streaming.incremental import compact_blocks_store
 
     store = str(tmp_path / "store_crash")
     ckpt = str(tmp_path / "ckpt_crash")
@@ -231,19 +230,19 @@ def test_compaction_skips_uncommitted_batches(spark, tmp_path):
         for i in range(2)
     ]
     # batch 0 committed; batch 1 "crashed" after writing, before commit
-    process_block_batch(shards[0], 0, store, n_buckets=8)
-    process_block_batch(shards[1], 1, store, n_buckets=8)
+    _block_batch(shards[0], 0, store, 8)
+    _block_batch(shards[1], 1, store, 8)
     os.makedirs(os.path.join(ckpt, "commits"))
     open(os.path.join(ckpt, "commits", "0"), "w").close()
 
     before = spark.read.parquet(store + "/blocks").count()
-    compact_blocks_store(spark, store, n_buckets=8, checkpoint_dir=ckpt)
+    compact_blocks_store(spark, store, checkpoint_dir=ckpt)
     after = spark.read.parquet(store + "/blocks")
     assert after.count() == before  # nothing lost, nothing duplicated
     ids = {r["batch_id"] for r in after.select("batch_id").distinct().collect()}
     assert ids == {-1, 1}  # batch 1's leaves survived uncompacted
     # the "retry" of batch 1 rewrites its own leaves — still no dupes
-    process_block_batch(shards[1], 1, store, n_buckets=8)
+    _block_batch(shards[1], 1, store, 8)
     assert spark.read.parquet(store + "/blocks").count() == before
 
 
@@ -272,49 +271,109 @@ def test_pages_per_window_watermark(spark, tmp_path):
     assert total <= 200
 
 
-def test_streaming_linkage_equals_batch_pipeline(spark, tmp_path):
-    """The FULL streaming pipeline (features → blocking → exactly-once
-    pairs → scoring → τ links → incremental cluster maintenance) over N
-    micro-batches must produce EXACTLY the batch pipeline's clusters on
-    the union corpus — same (node, component) rows, min-node component
-    ids included.  Batch config matches the streaming path's channels
-    (band blocking only, uncapped); scoring params are BOTH defaults."""
-    from biomedical_el_spark.plans.linkage import LinkageConfig, run_linkage
-    from biomedical_el_spark.streaming.incremental import (
-        process_linkage_batch,
-        read_clusters,
-    )
-
-    store = str(tmp_path / "store_full")
+def _stream_equals_batch(spark, store, cfg=None):
+    """Stream a 120-page corpus in 3 micro-batches under `cfg` (None:
+    the stream's default) and assert the stored features and the
+    clusters equal run_linkage's on the union corpus under the same
+    config.  Returns the shards and the expected mapping."""
     pages = generate_pages(spark, 120, cluster_size=4).drop("entity_id").cache()
     shards = [
         pages.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == i).cache()
         for i in range(3)
     ]
     for i, shard in enumerate(shards):
-        process_linkage_batch(shard, i, store, n_buckets=8)
+        process_linkage_batch(shard, i, store, cfg, n_buckets=8)
 
-    streamed = {
-        (r["node"], r["component"])
-        for r in read_clusters(spark, store).collect()
-    }
-    batch = run_linkage(
-        spark,
-        pages,
-        cfg=LinkageConfig(use_embedding_blocks=False, max_block_size=None),
-    )
+    batch = run_linkage(spark, pages, cfg=cfg or _stream_cfg())
+    cols = ["url", "vec", "sig", "prefix"]
+    streamed_feats = spark.read.parquet(store + "/features").select(cols)
+    batch_feats = batch["features"].select(cols)
+    assert streamed_feats.exceptAll(batch_feats).count() == 0
+    assert batch_feats.exceptAll(streamed_feats).count() == 0
     expected = {
         (r["node"], r["component"]) for r in batch["clusters"].collect()
     }
-    assert streamed == expected
+    assert len({c for _, c in expected}) < 120  # real merges happened
+    assert _mapping(spark, store) == expected
+    return shards, expected
 
+
+def test_streaming_linkage_equals_batch_pipeline(spark, tmp_path):
+    """The FULL streaming pipeline (features → blocking → exactly-once
+    pairs → scoring → τ links → incremental cluster maintenance) over N
+    micro-batches must produce EXACTLY the batch pipeline's clusters on
+    the union corpus — same (node, component) rows, min-node component
+    ids included.  The stream runs on its default config, the batch on
+    the config with the stream's channels (band blocking only,
+    uncapped)."""
+    store = str(tmp_path / "store_full")
+    shards, expected = _stream_equals_batch(spark, store)
     # replaying the last batch (crash-retry) must not change the answer
     process_linkage_batch(shards[2], 2, store, n_buckets=8)
-    again = {
-        (r["node"], r["component"])
-        for r in read_clusters(spark, store).collect()
-    }
-    assert again == expected
+    assert _mapping(spark, store) == expected
+
+
+def test_streaming_linkage_equals_batch_pipeline_nondefault_cfg(spark, tmp_path):
+    """Stream == batch under a non-default config passed to BOTH sides:
+    the stream must featurize and score with every semantic field the
+    batch pipeline uses (seed, accent folding, JW prefix), not with
+    defaults of its own."""
+    cfg = _stream_cfg(minhash_seed=7, normalize_accents=True, jw_prefix=16)
+    _stream_equals_batch(spark, str(tmp_path / "store_cfg"), cfg)
+
+
+def test_store_marker_fails_fast(spark, tmp_path, monkeypatch):
+    """The first batch marks the store; a later batch with another
+    n_buckets, config or store format, or against a non-empty store
+    without a marker, raises before it writes anything."""
+    import biomedical_el_spark.streaming.incremental as inc
+
+    store = str(tmp_path / "store_marker")
+    pages = generate_pages(spark, 24, cluster_size=4).drop("entity_id").cache()
+    process_linkage_batch(pages, 0, store, n_buckets=8)
+    marker = os.path.join(store, inc.STORE_MARKER)
+    assert os.path.exists(marker)
+
+    def listing():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), store)
+            for d, _, fs in os.walk(store)
+            for f in fs
+        )
+
+    before = listing()
+    with pytest.raises(ValueError, match="rebuild the store"):
+        process_linkage_batch(pages, 1, store, n_buckets=16)
+    with pytest.raises(ValueError, match="rebuild the store"):
+        process_linkage_batch(pages, 1, store, _stream_cfg(minhash_seed=7), 8)
+    monkeypatch.setattr(inc, "STORE_FORMAT", inc.STORE_FORMAT + 1)
+    with pytest.raises(ValueError, match="rebuild the store"):
+        process_linkage_batch(pages, 1, store, n_buckets=8)
+    monkeypatch.undo()
+    os.remove(marker)
+    with pytest.raises(ValueError, match="no _store.json"):
+        process_linkage_batch(pages, 1, store, n_buckets=8)
+    assert listing() == [f for f in before if f != inc.STORE_MARKER]
+
+
+def test_stream_rejects_unsupported_config(spark, tmp_path):
+    """A config the stream cannot honor raises ValueError before any
+    write: the hyperplane channel, a block-size cap, the band-match
+    gate."""
+    store = str(tmp_path / "store_reject")
+    pages = spark.createDataFrame([("u", "some text")], "url string, text string")
+    stream = read_page_stream(spark, str(tmp_path))
+    for cfg in (
+        LinkageConfig(),
+        LinkageConfig(max_block_size=None),
+        LinkageConfig(use_embedding_blocks=False),
+        _stream_cfg(min_band_matches=2),
+    ):
+        with pytest.raises(ValueError, match="cannot honor"):
+            process_linkage_batch(pages, 0, store, cfg, n_buckets=8)
+        with pytest.raises(ValueError, match="cannot honor"):
+            incremental_linkage(stream, store, str(tmp_path / "ckpt"), cfg)
+    assert not os.path.exists(store)
 
 
 def test_incremental_linkage_stream_wrapper(spark, tmp_path):
@@ -322,12 +381,6 @@ def test_incremental_linkage_stream_wrapper(spark, tmp_path):
     process_linkage_batch) runs end-to-end from file drops through the
     streaming checkpoint: clusters exist and re-running the stream with
     the same checkpoint is a no-op (no duplicated state)."""
-    from biomedical_el_spark.streaming.incremental import (
-        incremental_linkage,
-        read_clusters,
-        read_page_stream,
-    )
-
     src = str(tmp_path / "drops_full")
     store = str(tmp_path / "store_stream_full")
     ckpt = str(tmp_path / "ckpt_stream_full")
@@ -340,10 +393,7 @@ def test_incremental_linkage_stream_wrapper(spark, tmp_path):
     stream = read_page_stream(spark, src + "/shard=*", max_files=1)
     q = incremental_linkage(stream, store, ckpt, n_buckets=8).start()
     q.awaitTermination(180)
-    first = {
-        (r["node"], r["component"])
-        for r in read_clusters(spark, store).collect()
-    }
+    first = _mapping(spark, store)
     assert len(first) == 60
     assert len({c for _, c in first}) < 60  # real merges happened
 
@@ -351,10 +401,7 @@ def test_incremental_linkage_stream_wrapper(spark, tmp_path):
     stream2 = read_page_stream(spark, src + "/shard=*", max_files=1)
     q2 = incremental_linkage(stream2, store, ckpt, n_buckets=8).start()
     q2.awaitTermination(120)
-    again = {
-        (r["node"], r["component"])
-        for r in read_clusters(spark, store).collect()
-    }
+    again = _mapping(spark, store)
     assert again == first
 
 
@@ -370,12 +417,7 @@ def test_crash_mid_cluster_swap_recovers_to_batch_result(
     and (b) replaying the batch — what the streaming engine does for an
     uncommitted batch — converges to exactly the batch pipeline's
     clusters."""
-    import os
-
-    import pytest
-
     import biomedical_el_spark.streaming.incremental as inc
-    from biomedical_el_spark.plans.linkage import LinkageConfig, run_linkage
 
     store = str(tmp_path / "store_crash")
     pages = generate_pages(spark, 90, cluster_size=3).drop("entity_id").cache()
@@ -401,7 +443,7 @@ def test_crash_mid_cluster_swap_recovers_to_batch_result(
     batch = run_linkage(
         spark,
         pages,
-        cfg=LinkageConfig(use_embedding_blocks=False, max_block_size=None),
+        cfg=_stream_cfg(),
     )
     expected = {
         (r["node"], r["component"]) for r in batch["clusters"].collect()
@@ -458,9 +500,7 @@ def test_clusters_mirror_pruned_member_scan(spark, tmp_path, monkeypatch):
     inc.process_linkage_batch(rest, 0, store, n_buckets=n_buckets)
 
     def mapping(path):
-        import os as _os
-
-        if not _os.path.isdir(path):
+        if not os.path.isdir(path):
             return set()
         return {
             (r["node"], r["component"])
@@ -511,11 +551,9 @@ def test_stream_kill_after_links_restart_equals_batch(
     exactly the batch pipeline's clusters on the union corpus (the
     earlier crash tests drive process_linkage_batch directly — this one
     exercises the real foreachBatch checkpoint-restart path)."""
-    import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     import biomedical_el_spark.streaming.incremental as inc
-    from biomedical_el_spark.plans.linkage import LinkageConfig, run_linkage
 
     src = str(tmp_path / "drops_kill")
     store = str(tmp_path / "store_kill")
@@ -554,7 +592,7 @@ def test_stream_kill_after_links_restart_equals_batch(
     batch = run_linkage(
         spark,
         pages,
-        cfg=LinkageConfig(use_embedding_blocks=False, max_block_size=None),
+        cfg=_stream_cfg(),
     )
     expected = {
         (r["node"], r["component"]) for r in batch["clusters"].collect()
