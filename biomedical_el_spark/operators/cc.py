@@ -226,7 +226,7 @@ def connected_components(
 ) -> DataFrame:
     """Edge table → (node, component) with component = min node id of the
     cluster.  Nodes absent from `links` are not emitted (callers union
-    singletons back; see plans/linkage.py).
+    singletons back with `with_singletons`).
 
     checkpoint_dir: if given, rounds use RELIABLE `checkpoint()` into it
     (survives executor loss — required on a real cluster); default is
@@ -297,7 +297,7 @@ def connected_components(
                 break
         if n_edges <= _EDGES_PER_PARTITION:
             # checkpointed: callers read the result more than once
-            # (run_linkage's singleton anti-join and union), and with no
+            # (with_singletons' anti-join and union), and with no
             # exchange in the plan for Spark to reuse, each read would
             # rerun the one-task finish
             return ckpt(_finish_locally(edges))
@@ -318,3 +318,11 @@ def connected_components(
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", str(sess_sp))
+
+
+def with_singletons(comp: DataFrame, nodes: DataFrame) -> DataFrame:
+    """The clusters output: `comp` (node, component) plus every `node` of
+    `nodes` absent from it, as its own component."""
+    singles = nodes.join(comp, "node", "left_anti")
+    singles = singles.withColumn("component", F.col("node"))
+    return comp.unionByName(singles)

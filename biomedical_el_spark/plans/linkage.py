@@ -266,15 +266,9 @@ def run_linkage(
 
     def compute_clusters() -> DataFrame:
         comp = CC.connected_components(links, checkpoint_dir=cfg.checkpoint_dir)
-        # union singleton pages back in as their own cluster; node ids
-        # come from the (cached/snapshotted, narrow) features table — 1:1
-        # with pages, avoids re-scanning the wide pages relation
-        singles = (
-            features.select(F.col("url").alias("node"))
-            .join(comp, "node", "left_anti")
-            .withColumn("component", F.col("node"))
-        )
-        return comp.unionByName(singles)
+        # node ids come from the (cached/snapshotted, narrow) features
+        # table — 1:1 with pages, avoids re-scanning the wide pages relation
+        return CC.with_singletons(comp, features.select(F.col("url").alias("node")))
 
     clusters = snap("clusters", compute_clusters)
     # Eager path (snapshot store): every stage is already materialized,

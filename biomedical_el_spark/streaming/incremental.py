@@ -19,12 +19,20 @@ explicit bucket-directory selection is the local-parquet equivalent.
 The first batch writes `_store.json` (`STORE_FORMAT`, config
 fingerprint, `n_buckets`); a later batch that disagrees with it, or
 finds data without it, raises: a store keyed another way silently
-misses pairs, so it must be rebuilt from its pages.
+misses pairs, so it must be rebuilt from its pages.  The readers
+(`read_clusters`, `compact_blocks_store`) check its format too.
+
+Every store but `blocks` buckets rows by `_bucket` (`pmod(xxhash64(cols),
+n_buckets)`); a batch reads only the bucket directories its own rows
+hash into (`read_store_buckets`, ids from one collect per frame,
+`_bucket_ids`), never a whole store.
 
 Pairs are exactly-once ACROSS batches, not just per batch partition: a
 re-crawled url in a later micro-batch regenerates pairs an earlier batch
 already committed, so new pairs are anti-joined against the committed
 pairs store (pruned to the same pair-hash buckets) before writing.
+`process_block_batch` hands the pairs it committed to the scoring step
+directly, so the batch never reads its own output back.
 
 `compact_blocks_store` merges a bucket's many small per-batch files into
 one `batch_id=-1` partition — the local-mode analogue of Iceberg
@@ -40,10 +48,12 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.cc import connected_components, with_singletons
 from ..operators.features import band_keys_from_sig
+from ..operators.scoring import match_links, score_pairs_from_features
 from ..plans.linkage import LinkageConfig, featurize, resolved_config
 from ..sources.pages import PAGES_SCHEMA
 from ..sources.snapshots import fingerprint
@@ -64,6 +74,19 @@ def read_page_stream(spark: SparkSession, path: str, max_files: int = 10) -> Dat
         .option("maxFilesPerTrigger", max_files)
         .parquet(path)
     )
+
+
+def _bucket(n_buckets: int, *cols: str) -> Column:
+    """The bucket of a row in the features, pairs, links and clusters
+    stores."""
+    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
+
+
+def _bucket_ids(df: DataFrame, *cols: str | Column) -> list[list[int]]:
+    """The distinct values of each bucket column (name or expression) of
+    `df`, in one collect of ≤ n_buckets ints per column, not data."""
+    row = df.agg(*[F.collect_set(c) for c in cols]).collect()[0]
+    return [sorted(ids) for ids in row]
 
 
 def read_store_buckets(
@@ -89,11 +112,18 @@ def process_block_batch(
     store_dir: str,
     cfg: LinkageConfig,
     n_buckets: int,
-) -> None:
+) -> DataFrame | None:
     """One micro-batch of incremental blocking over the batch's feature
     table.  Module-level (not a closure) so idempotency is directly
     testable: calling it twice with the same batch_id must leave the
-    store unchanged.
+    store unchanged.  Checks the store's marker first (and marks an
+    empty store), like `process_linkage_batch`.
+
+    Returns the pairs this batch committed (`url_a`, `url_b`,
+    `pbucket`), already materialized (persisted, or checkpointed once
+    earlier batches have pairs in the same buckets), so the caller
+    scores them without reading the pairs store back and then
+    unpersists them; None for an empty batch.
 
     Idempotency: outputs are partitioned `bucket/batch_id` and written
     with DYNAMIC partition overwrite — a retried micro-batch REPLACES its
@@ -107,6 +137,7 @@ def process_block_batch(
     pair-hash buckets, so this check also scales with the batch, not the
     corpus.
     """
+    _check_store_marker(store_dir, cfg, n_buckets)
     spark = feats.sparkSession
     keys = (
         band_keys_from_sig(feats, cfg.bands, cfg.rows_per_band)
@@ -121,13 +152,12 @@ def process_block_batch(
         .parquet(f"{store_dir}/blocks")
     )
     # incremental pairs: this batch's keys × accumulated keys, reading
-    # only the store buckets this batch can possibly match.  The bucket
-    # list is bounded by n_buckets (a collect of ≤64 ints, not data).
-    buckets = [r["bucket"] for r in keys.select("bucket").distinct().collect()]
+    # only the store buckets this batch can possibly match
+    [buckets] = _bucket_ids(keys, "bucket")
     acc = read_store_buckets(spark, f"{store_dir}/blocks", buckets)
     if acc is None:  # empty micro-batch: nothing to pair
         keys.unpersist()
-        return
+        return None
     new_pairs = (
         keys.withColumnRenamed("url", "url_a")
         .join(acc.withColumnRenamed("url", "url_b"), "block_key")
@@ -137,29 +167,28 @@ def process_block_batch(
             F.greatest("url_a", "url_b").alias("url_b"),
         )
         .distinct()
-        .withColumn(
-            "pbucket",
-            F.pmod(F.xxhash64("url_a", "url_b"), F.lit(n_buckets)).cast("int"),
-        )
+        .withColumn("pbucket", _bucket(n_buckets, "url_a", "url_b"))
         .persist()  # read twice: bucket list, then the anti-join + write
     )
-    pair_buckets = [r["pbucket"] for r in new_pairs.select("pbucket").distinct().collect()]
+    [pair_buckets] = _bucket_ids(new_pairs, "pbucket")
     prev = read_store_buckets(spark, f"{store_dir}/pairs", pair_buckets, col="pbucket")
-    out_pairs = new_pairs
+    committed = new_pairs
     if prev is not None:
-        committed = prev.filter(F.col("batch_id") != batch_id).select(
-            "url_a", "url_b"
-        )
-        out_pairs = new_pairs.join(committed, ["url_a", "url_b"], "left_anti")
+        earlier = prev.filter(F.col("batch_id") != batch_id).select("url_a", "url_b")
+        # checkpointed, not persisted: the write below drops the cache of
+        # every plan that reads the pairs store, this anti-join included
+        committed = new_pairs.join(earlier, ["url_a", "url_b"], "left_anti")
+        committed = committed.localCheckpoint()
+        new_pairs.unpersist()
     (
-        out_pairs.withColumn("batch_id", F.lit(batch_id))
+        committed.withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("pbucket", "batch_id")
         .parquet(f"{store_dir}/pairs")
     )
-    new_pairs.unpersist()
     keys.unpersist()
+    return committed
 
 
 def committed_batch_ids(checkpoint_dir: str) -> set[int]:
@@ -198,8 +227,10 @@ def compact_blocks_store(
     replaces them instead of duplicating rows the compaction had already
     absorbed.  checkpoint_dir=None absorbs everything and is only safe
     while the stream is healthy between triggers (no crashed,
-    uncommitted batch output on disk).
+    uncommitted batch output on disk).  A store marked with another
+    `STORE_FORMAT`, or with data but no marker, raises ValueError.
     """
+    _check_store_marker(store_dir)
     base = f"{store_dir}/blocks"
     if not os.path.isdir(base):
         return
@@ -310,29 +341,50 @@ def _recover_clusters(store_dir: str) -> None:
         shutil.rmtree(os.path.join(store_dir, s + "_staging"), ignore_errors=True)
 
 
-def _staged_buckets(staging: str, col: str) -> list[int]:
-    if not os.path.isdir(staging):
-        return []
-    return [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(staging)
-        if d.startswith(f"{col}=")
-    ]
+def _stage(
+    spark: SparkSession,
+    store_dir: str,
+    store: str,
+    col: str,
+    updates: DataFrame,
+    buckets: list[int],
+) -> list[int]:
+    """Write `store`'s `buckets` with `updates` applied into
+    `<store>_staging`: read the buckets, drop the updated nodes, union in
+    their new rows.  Returns the buckets staged; an affected bucket whose
+    rows all moved elsewhere stages nothing."""
+    base = os.path.join(store_dir, store)
+    staging = base + "_staging"
+    shutil.rmtree(staging, ignore_errors=True)
+    out = updates.select("node", "component", col)
+    current = read_store_buckets(spark, base, buckets, col=col)
+    if current is not None:
+        keep = current.join(updates.select("node"), "node", "left_anti")
+        out = keep.select("node", "component", col).unionByName(out)
+    out.repartition(max(1, len(buckets)), col).write.partitionBy(col).parquet(staging)
+    return sorted(
+        int(d.split("=", 1)[1]) for d in os.listdir(staging) if d.startswith(f"{col}=")
+    )
 
 
 def _update_clusters(
-    spark: SparkSession, store_dir: str, links: DataFrame, n_buckets: int
+    spark: SparkSession,
+    store_dir: str,
+    links: DataFrame,
+    n_buckets: int,
+    checkpoint_dir: str | None = None,
 ) -> None:
     """Incremental connected-components maintenance over the clusters
-    store (`clusters/nbucket=<pmod(xxhash64(node))>` → (node, component),
+    store (`clusters/nbucket=<_bucket(node)>` → (node, component),
     component = min node id of the cluster — the batch pipeline's id
     convention, so incremental and batch agree exactly) plus a
     component-keyed mirror (`clusters_by_comp/cbucket=
-    <pmod(xxhash64(component))>`, same rows) so EVERY per-batch read is
+    <_bucket(component)>`, same rows) so EVERY per-batch read is
     bucket-pruned: the link-endpoint lift reads only the nbuckets the
     batch's urls hash into, and the members-of-merged-components lookup
     reads only the cbuckets of the components the batch actually merges
-    — no corpus-linear scan anywhere in the batch path.
+    — no corpus-linear scan anywhere in the batch path.  CC checkpoints
+    into `checkpoint_dir` when given (reliable), else locally.
 
     Crash consistency: both stores are updated through ONE staged,
     journaled, idempotent bucket swap (`_write_journal`/`_commit_swaps`,
@@ -345,8 +397,6 @@ def _update_clusters(
     the atomic multi-partition snapshot commit Iceberg provides
     natively.  Component ids are global min node ids, independent of
     merge order, so replaying a batch's links is always convergent."""
-    from ..operators.cc import connected_components
-
     _recover_clusters(store_dir)
     base = os.path.join(store_dir, CLUSTERS)
     mirror = os.path.join(store_dir, CLUSTERS_MIRROR)
@@ -354,7 +404,6 @@ def _update_clusters(
     # listing for both stores before reading them
     spark.catalog.refreshByPath(base)
     spark.catalog.refreshByPath(mirror)
-    have_old = os.path.isdir(base)
 
     li = links.select("url_a", "url_b").distinct().persist()
     link_nodes = (
@@ -363,19 +412,10 @@ def _update_clusters(
         .distinct()
         .persist()
     )
+    cached = [li, link_nodes]
     # lift reads ONLY the nbuckets the batch's endpoints hash into
-    # (bounded collect: ≤ n_buckets ints)
-    node_buckets = [
-        r["b"]
-        for r in link_nodes.select(
-            F.pmod(F.xxhash64("node"), F.lit(n_buckets)).cast("int").alias("b")
-        ).distinct().collect()
-    ]
-    old = (
-        read_store_buckets(spark, base, node_buckets, col="nbucket")
-        if have_old
-        else None
-    )
+    [node_buckets] = _bucket_ids(link_nodes, _bucket(n_buckets, "node"))
+    old = read_store_buckets(spark, base, node_buckets, col="nbucket")
     if old is not None:
         old = old.select("node", "component")
         ca = old.select(F.col("node").alias("url_a"), F.col("component").alias("ca"))
@@ -391,122 +431,68 @@ def _update_clusters(
     else:
         lifted = li.select(F.col("url_a").alias("src"), F.col("url_b").alias("dst"))
     comp_edges = lifted.filter(F.col("src") != F.col("dst")).distinct().persist()
+    cached.append(comp_edges)
     if comp_edges.limit(1).count() == 0:
         # safe: recovery above guarantees the mapping these edges were
         # lifted through is a fully-committed one
-        for df in (li, link_nodes, comp_edges):
+        for df in cached:
             df.unpersist()
         return
     comp_cc = connected_components(
-        comp_edges, src_col="src", dst_col="dst"
+        comp_edges, src_col="src", dst_col="dst", checkpoint_dir=checkpoint_dir
     ).persist()  # (node = old component id or new node, component = new id)
+    cached.append(comp_cc)
 
+    new_nodes = link_nodes
+    affected_old = None
+    chg_cbuckets: list[int] = []
     if old is not None:
         new_nodes = link_nodes.join(old, "node", "left_anti")
         changed = comp_cc.filter(F.col("node") != F.col("component")).select(
             F.col("node").alias("component"), F.col("component").alias("newc")
         ).persist()
+        cached.append(changed)
         # members of merged components: read ONLY their cbuckets from the
-        # component-keyed mirror (bounded collect: ≤ n_buckets ints)
-        chg_cbuckets = [
-            r["b"]
-            for r in changed.select(
-                F.pmod(F.xxhash64("component"), F.lit(n_buckets))
-                .cast("int")
-                .alias("b")
-            ).distinct().collect()
-        ]
+        # component-keyed mirror
+        [chg_cbuckets] = _bucket_ids(changed, _bucket(n_buckets, "component"))
         members = read_store_buckets(spark, mirror, chg_cbuckets, col="cbucket")
-        affected_old = (
-            members.select("node", "component").join(changed, "component").select(
-                "node", F.col("newc").alias("component")
-            )
-            if members is not None
-            else None
-        )
-    else:
-        new_nodes = link_nodes
-        changed = None
-        affected_old = None
+        if members is not None:
+            affected_old = members.select("node", "component").join(
+                changed, "component"
+            ).select("node", F.col("newc").alias("component"))
     new_rows = new_nodes.join(comp_cc, "node", "left").select(
         F.col("node"), F.coalesce("component", "node").alias("component")
     )
     updates = (
-        new_rows if affected_old is None else affected_old.unionByName(new_rows)
-    ).withColumn(
-        "nbucket", F.pmod(F.xxhash64("node"), F.lit(n_buckets)).cast("int")
-    ).withColumn(
-        "cbucket", F.pmod(F.xxhash64("component"), F.lit(n_buckets)).cast("int")
-    ).persist()
-
-    # ---- stage the node-keyed store ----
-    upd_buckets = [r["nbucket"] for r in updates.select("nbucket").distinct().collect()]
-    node_staging = base + "_staging"
-    shutil.rmtree(node_staging, ignore_errors=True)
-    current = read_store_buckets(spark, base, upd_buckets, col="nbucket")
-    node_out = updates.select("node", "component", "nbucket")
-    if current is not None:
-        keep = current.join(updates.select("node"), "node", "left_anti").select(
-            "node", "component", "nbucket"
-        )
-        node_out = keep.unionByName(node_out)
-    (
-        node_out.repartition(max(1, len(upd_buckets)), "nbucket")
-        .write.partitionBy("nbucket")
-        .parquet(node_staging)
+        (new_rows if affected_old is None else affected_old.unionByName(new_rows))
+        .withColumn("nbucket", _bucket(n_buckets, "node"))
+        .withColumn("cbucket", _bucket(n_buckets, "component"))
+        .persist()
     )
+    cached.append(updates)
 
-    # ---- stage the component-keyed mirror ----
+    # ---- stage both stores, then journal + atomic-equivalent swap ----
     # affected cbuckets: where updated rows LAND (their new component)
-    # plus where members of merged components CURRENTLY sit (old comp)
-    aff_c = updates.select("cbucket")
-    if changed is not None:
-        aff_c = aff_c.union(
-            changed.select(
-                F.pmod(F.xxhash64("component"), F.lit(n_buckets))
-                .cast("int")
-                .alias("cbucket")
-            )
-        )
-    aff_cbuckets = [r["cbucket"] for r in aff_c.distinct().collect()]
-    mirror_staging = mirror + "_staging"
-    shutil.rmtree(mirror_staging, ignore_errors=True)
-    mcurrent = read_store_buckets(spark, mirror, aff_cbuckets, col="cbucket")
-    mirror_out = updates.select("node", "component", "cbucket")
-    if mcurrent is not None:
-        mkeep = mcurrent.join(updates.select("node"), "node", "left_anti").select(
-            "node", "component", "cbucket"
-        )
-        mirror_out = mkeep.unionByName(mirror_out)
-    (
-        mirror_out.repartition(max(1, len(aff_cbuckets)), "cbucket")
-        .write.partitionBy("cbucket")
-        .parquet(mirror_staging)
-    )
-
-    # ---- journal + atomic-equivalent swap of BOTH stores ----
-    # a cbucket whose rows ALL moved elsewhere produces no staging dir;
-    # it must be dropped, not left stale
-    mirror_staged = _staged_buckets(mirror_staging, "cbucket")
-    spec = {
-        "swaps": [
-            {"store": CLUSTERS, "col": "nbucket", "swap": upd_buckets, "drop": []},
-            {
-                "store": CLUSTERS_MIRROR,
-                "col": "cbucket",
-                "swap": mirror_staged,
-                "drop": sorted(set(aff_cbuckets) - set(mirror_staged)),
-            },
-        ]
+    # plus where members of merged components CURRENTLY sit (old comp);
+    # an affected bucket that stages nothing must be dropped, not left
+    # stale (every updated nbucket receives its own rows)
+    upd_nbuckets, upd_cbuckets = _bucket_ids(updates, "nbucket", "cbucket")
+    affected = {
+        CLUSTERS: upd_nbuckets,
+        CLUSTERS_MIRROR: sorted(set(upd_cbuckets) | set(chg_cbuckets)),
     }
+    swaps = []
+    for store, col in ((CLUSTERS, "nbucket"), (CLUSTERS_MIRROR, "cbucket")):
+        staged = _stage(spark, store_dir, store, col, updates, affected[store])
+        drop = sorted(set(affected[store]) - set(staged))
+        swaps.append({"store": store, "col": col, "swap": staged, "drop": drop})
+    spec = {"swaps": swaps}
     _write_journal(store_dir, spec)
     _commit_swaps(store_dir, spec)
     spark.catalog.refreshByPath(base)
     spark.catalog.refreshByPath(mirror)
-    for df in (li, link_nodes, comp_edges, comp_cc, updates):
+    for df in cached:
         df.unpersist()
-    if changed is not None:
-        changed.unpersist()
 
 
 def read_clusters(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -514,22 +500,20 @@ def read_clusters(spark: SparkSession, store_dir: str) -> DataFrame:
     for linked nodes, singletons (their own component) derived from the
     features store — same contract as the batch pipeline's clusters
     output.  Rolls forward any interrupted clusters commit first, so a
-    reader never observes a partially-swapped mapping."""
+    reader never observes a partially-swapped mapping.  A store marked
+    with another `STORE_FORMAT`, or with data but no marker, raises
+    ValueError."""
+    _check_store_marker(store_dir)
     _recover_clusters(store_dir)
     base = f"{store_dir}/clusters"
     spark.catalog.refreshByPath(base)
-    feats = spark.read.parquet(f"{store_dir}/features").select("url").distinct()
+    nodes = spark.read.parquet(f"{store_dir}/features").select(
+        F.col("url").alias("node")
+    ).distinct()
     if not os.path.isdir(base):
-        return feats.select(
-            F.col("url").alias("node"), F.col("url").alias("component")
-        )
+        return nodes.withColumn("component", F.col("node"))
     mapped = spark.read.parquet(base).select("node", "component")
-    singles = (
-        feats.select(F.col("url").alias("node"))
-        .join(mapped, "node", "left_anti")
-        .withColumn("component", F.col("node"))
-    )
-    return mapped.unionByName(singles)
+    return with_singletons(mapped, nodes)
 
 
 def _stream_config(cfg: LinkageConfig | None) -> LinkageConfig:
@@ -549,24 +533,28 @@ def _stream_config(cfg: LinkageConfig | None) -> LinkageConfig:
     return cfg
 
 
-def _check_store_marker(store_dir: str, cfg: LinkageConfig, n_buckets: int) -> None:
+def _check_store_marker(
+    store_dir: str, cfg: LinkageConfig | None = None, n_buckets: int | None = None
+) -> None:
     """Fail fast unless `store_dir` is empty or marked with this store
-    format, config and bucket count; mark an empty store by atomic
-    rename.  Runs before the batch writes anything."""
-    want = {
-        "store_format": STORE_FORMAT,
-        "config": fingerprint(resolved_config(cfg, 0)),
-        "n_buckets": n_buckets,
-    }
+    format and, given `cfg`, with this config and bucket count.  A writer
+    (`cfg` given) marks an empty store by atomic rename before it writes
+    anything; a reader (`cfg` None) compares the store format only."""
+    want = {"store_format": STORE_FORMAT}
+    if cfg is not None:
+        want["config"] = fingerprint(resolved_config(cfg, 0))
+        want["n_buckets"] = n_buckets
     path = os.path.join(store_dir, STORE_MARKER)
     if os.path.exists(path):
         with open(path) as f:
             have = json.load(f)
-        if have == want:
+        if {k: have.get(k) for k in want} == want:
             return
-        problem = f"was written with {have}, this batch needs {want}"
+        problem = f"was written with {have}, not {want}"
     elif os.path.isdir(store_dir) and set(os.listdir(store_dir)) - {STORE_MARKER + ".tmp"}:
         problem = f"has data but no {STORE_MARKER}"
+    elif cfg is None:
+        return
     else:
         os.makedirs(store_dir, exist_ok=True)
         with open(path + ".tmp", "w") as f:
@@ -591,9 +579,12 @@ def process_linkage_batch(
     scoring of the new pairs (same Arrow kernels as batch) → τ links →
     incremental cluster maintenance (_update_clusters).  An arriving
     micro-batch therefore updates `clusters`, not just candidate pairs —
-    the streaming pipeline ends where the batch pipeline ends.
+    the streaming pipeline ends where the batch pipeline ends.  The
+    pairs scored are the ones process_block_batch returns (the ones this
+    batch committed), not a read of the pairs store.
 
-    `cfg` is run_linkage's config (default: band keys only, uncapped).
+    `cfg` is run_linkage's config (default: band keys only, uncapped);
+    its `checkpoint_dir` is where the clusters update checkpoints CC.
     A config the stream cannot honor, or a store marked with another
     format, config or `n_buckets`, raises ValueError before any write.
 
@@ -612,9 +603,8 @@ def process_linkage_batch(
     cfg = _stream_config(cfg)
     _check_store_marker(store_dir, cfg, n_buckets)
     spark = batch_df.sparkSession
-    feats = featurize(batch_df, cfg).withColumn(
-        "fbucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    ).persist()
+    feats = featurize(batch_df, cfg).withColumn("fbucket", _bucket(n_buckets, "url"))
+    feats = feats.persist()
     (
         feats.withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
@@ -622,67 +612,48 @@ def process_linkage_batch(
         .partitionBy("fbucket", "batch_id")
         .parquet(f"{store_dir}/features")
     )
-    process_block_batch(feats.drop("fbucket"), batch_id, store_dir, cfg, n_buckets)
-    # this batch's COMMITTED new pairs (exactly-once across batches)
-    pairs_base = f"{store_dir}/pairs"
-    if not os.path.isdir(pairs_base):
-        feats.unpersist()
-        return
-    new_pairs = (
-        spark.read.parquet(pairs_base)
-        .filter(F.col("batch_id") == batch_id)
-        .select("url_a", "url_b")
-        .persist()
+    pairs = process_block_batch(
+        feats.drop("fbucket"), batch_id, store_dir, cfg, n_buckets
     )
-    fbuckets = [
-        r["b"]
-        for r in new_pairs.select(
-            F.explode(
-                F.array(
-                    F.pmod(F.xxhash64("url_a"), F.lit(n_buckets)).cast("int"),
-                    F.pmod(F.xxhash64("url_b"), F.lit(n_buckets)).cast("int"),
-                )
-            ).alias("b")
-        ).distinct().collect()
-    ]
-    hydr = read_store_buckets(spark, f"{store_dir}/features", fbuckets, col="fbucket")
-    if hydr is None:
-        new_pairs.unpersist()
-        feats.unpersist()
+    feats.unpersist()
+    if pairs is None:
         return
-    from pyspark.sql import Window as _W
-
-    from ..operators.scoring import match_links, score_pairs_from_features
-
+    fbuckets_a, fbuckets_b = _bucket_ids(
+        pairs, _bucket(n_buckets, "url_a"), _bucket(n_buckets, "url_b")
+    )
+    hydr = read_store_buckets(
+        spark, f"{store_dir}/features", fbuckets_a + fbuckets_b, col="fbucket"
+    )
+    if hydr is None:
+        pairs.unpersist()
+        return
     # a re-crawled url exists under several batch_ids in the features
     # store; NEW pairs must score against its LATEST features only
     # (pairs committed by earlier batches keep their at-ingest scores —
     # the incremental contract)
-    latest = _W.partitionBy("url").orderBy(F.col("batch_id").desc())
+    latest = Window.partitionBy("url").orderBy(F.col("batch_id").desc())
     hydr = (
         hydr.withColumn("_rn", F.row_number().over(latest))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
     scored = score_pairs_from_features(
-        new_pairs, hydr.select("url", "vec", "sig", "prefix"), cfg.weights
+        pairs.select("url_a", "url_b"),
+        hydr.select("url", "vec", "sig", "prefix"),
+        cfg.weights,
     )
     links = match_links(scored, cfg.tau).persist()
     (
-        links.withColumn(
-            "pbucket",
-            F.pmod(F.xxhash64("url_a", "url_b"), F.lit(n_buckets)).cast("int"),
-        )
+        links.withColumn("pbucket", _bucket(n_buckets, "url_a", "url_b"))
         .withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("pbucket", "batch_id")
         .parquet(f"{store_dir}/links")
     )
-    _update_clusters(spark, store_dir, links, n_buckets)
+    _update_clusters(spark, store_dir, links, n_buckets, cfg.checkpoint_dir)
     links.unpersist()
-    new_pairs.unpersist()
-    feats.unpersist()
+    pairs.unpersist()
 
 
 def incremental_linkage(

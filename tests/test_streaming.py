@@ -2,6 +2,7 @@
 page-file drops, its store, and watermarked windowed aggregation."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,6 +10,7 @@ from pyspark.sql import functions as F
 from biomedical_el_spark.datagen.pages import generate_pages
 from biomedical_el_spark.plans.linkage import LinkageConfig, featurize, run_linkage
 from biomedical_el_spark.streaming.incremental import (
+    compact_blocks_store,
     incremental_linkage,
     pages_per_window,
     process_block_batch,
@@ -24,9 +26,12 @@ def _stream_cfg(**kw) -> LinkageConfig:
 
 
 def _block_batch(df, batch_id, store, n_buckets=64, cfg=None):
-    """process_block_batch over `df`'s features under `cfg`."""
+    """process_block_batch over `df`'s features under `cfg`; releases
+    the committed pairs it returns."""
     cfg = cfg or _stream_cfg()
-    process_block_batch(featurize(df, cfg), batch_id, store, cfg, n_buckets)
+    pairs = process_block_batch(featurize(df, cfg), batch_id, store, cfg, n_buckets)
+    if pairs is not None:
+        pairs.unpersist()
 
 
 def _mapping(spark, store):
@@ -356,6 +361,76 @@ def test_store_marker_fails_fast(spark, tmp_path, monkeypatch):
     assert listing() == [f for f in before if f != inc.STORE_MARKER]
 
 
+def test_store_readers_check_marker(spark, tmp_path, monkeypatch):
+    """read_clusters and compact_blocks_store raise, and write nothing,
+    on a store marked with another store format or with data but no
+    marker; process_block_batch marks a blocks-only store."""
+    import biomedical_el_spark.streaming.incremental as inc
+
+    pages = generate_pages(spark, 24, cluster_size=4).drop("entity_id").cache()
+    blocks_only = str(tmp_path / "store_blocks_only")
+    _block_batch(pages, 0, blocks_only, 8)
+    assert os.path.exists(os.path.join(blocks_only, inc.STORE_MARKER))
+
+    store = str(tmp_path / "store_readers")
+    process_linkage_batch(pages, 0, store, n_buckets=8)
+    readers = (
+        lambda: read_clusters(spark, store),
+        lambda: compact_blocks_store(spark, store),
+    )
+    before = sorted(os.walk(store))
+    monkeypatch.setattr(inc, "STORE_FORMAT", inc.STORE_FORMAT + 1)
+    for read in readers:
+        with pytest.raises(ValueError, match="rebuild the store"):
+            read()
+    monkeypatch.undo()
+    assert sorted(os.walk(store)) == before
+    assert read_clusters(spark, store).count() == 24
+    os.remove(os.path.join(store, inc.STORE_MARKER))
+    for read in readers:
+        with pytest.raises(ValueError, match="no _store.json"):
+            read()
+
+
+def test_stream_checkpoints_cc_into_checkpoint_dir(spark, tmp_path):
+    """A stream under LinkageConfig(checkpoint_dir=...) runs its clusters
+    update's CC on reliable checkpoints in that directory, as run_linkage
+    does."""
+    ckpt = str(tmp_path / "cc_ckpt")
+    cfg = _stream_cfg(checkpoint_dir=ckpt)
+    pages = generate_pages(spark, 60, cluster_size=4).drop("entity_id").cache()
+    for i in range(2):
+        shard = pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == i)
+        process_linkage_batch(shard, i, str(tmp_path / "store_ckpt"), cfg, 8)
+    assert [f for _, _, fs in os.walk(ckpt) for f in fs]
+
+
+def test_batch_reads_only_bucket_directories(spark, tmp_path, monkeypatch):
+    """Every parquet read a micro-batch makes under its store names
+    `<col>=<b>` bucket directories, never a store root such as
+    `store/pairs`: a batch's reads scale with its buckets, not with how
+    many batches the store holds."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    store = str(tmp_path / "store_dirs")
+    pages = generate_pages(spark, 60, cluster_size=4).drop("entity_id").cache()
+    read = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        read.extend(paths)
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    for i in range(2):
+        shard = pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == i)
+        process_linkage_batch(shard, i, store, n_buckets=8)
+    monkeypatch.undo()
+    under = [os.path.relpath(p, store) for p in read if p.startswith(store)]
+    assert {p.split("/")[0] for p in under} >= {"blocks", "pairs", "features", "clusters"}
+    assert all(re.fullmatch(r"\w+/[a-z]+=\d+", p) for p in under), under
+
+
 def test_stream_rejects_unsupported_config(spark, tmp_path):
     """A config the stream cannot honor raises ValueError before any
     write: the hyperplane channel, a block-size cap, the band-match
@@ -567,11 +642,11 @@ def test_stream_kill_after_links_restart_equals_batch(
     real = inc._update_clusters
     calls = {"n": 0}
 
-    def dying(spark_, store_dir, links, n_buckets):
+    def dying(*args, **kwargs):
         calls["n"] += 1
         if calls["n"] == 2:  # links of micro-batch 1 are already on disk
             raise RuntimeError("injected kill after links write")
-        return real(spark_, store_dir, links, n_buckets)
+        return real(*args, **kwargs)
 
     monkeypatch.setattr(inc, "_update_clusters", dying)
     stream = inc.read_page_stream(spark, src + "/shard=*", max_files=1)
