@@ -64,6 +64,19 @@ COMPACTED_BATCH_ID = -1
 # then fail fast on their marker instead of silently missing pairs.
 STORE_FORMAT = 1
 STORE_MARKER = "_store.json"
+CLUSTERS = "clusters"
+CLUSTERS_MIRROR = "clusters_by_comp"
+# The schema each store's writer fixes: its data columns, then the
+# partition columns of its directories.  `read_store_buckets` reads with
+# it; inferring it instead runs a one-task parquet footer job per read.
+STORE_SCHEMAS = {
+    "features": "url string, vec array<tinyint>, sig array<int>, prefix string, "
+    "fbucket int, batch_id int",
+    "blocks": "url string, block_key bigint, bucket int, batch_id int",
+    "pairs": "url_a string, url_b string, pbucket int, batch_id int",
+    CLUSTERS: "node string, component string, nbucket int",
+    CLUSTERS_MIRROR: "node string, component string, cbucket int",
+}
 
 
 def read_page_stream(spark: SparkSession, path: str, max_files: int = 10) -> DataFrame:
@@ -97,13 +110,16 @@ def read_store_buckets(
     Explicit directory selection instead of a `.filter(bucket.isin(...))`
     on the full store: pruning is then guaranteed by construction (and
     directly testable as rows-read), not dependent on Catalyst partition
-    pruning, and the file listing never touches uncovered buckets.
-    Returns None when none of the buckets exist yet (empty store)."""
+    pruning, and the file listing never touches uncovered buckets.  The
+    schema is the store's `STORE_SCHEMAS` entry (by directory name), so
+    the read runs no job.  Returns None when none of the buckets exist
+    yet (empty store)."""
     paths = [f"{store}/{col}={b}" for b in sorted(set(buckets))]
     paths = [p for p in paths if os.path.isdir(p)]
     if not paths:
         return None
-    return spark.read.option("basePath", store).parquet(*paths)
+    schema = STORE_SCHEMAS[os.path.basename(store)]
+    return spark.read.schema(schema).option("basePath", store).parquet(*paths)
 
 
 def process_block_batch(
@@ -275,10 +291,6 @@ def compact_blocks_store(
     shutil.rmtree(old, ignore_errors=True)
 
 
-CLUSTERS = "clusters"
-CLUSTERS_MIRROR = "clusters_by_comp"
-
-
 def _journal_path(store_dir: str) -> str:
     return os.path.join(store_dir, "clusters_commit.json")
 
@@ -372,6 +384,7 @@ def _update_clusters(
     store_dir: str,
     links: DataFrame,
     n_buckets: int,
+    node_buckets: list[int],
     checkpoint_dir: str | None = None,
 ) -> None:
     """Incremental connected-components maintenance over the clusters
@@ -380,11 +393,13 @@ def _update_clusters(
     convention, so incremental and batch agree exactly) plus a
     component-keyed mirror (`clusters_by_comp/cbucket=
     <_bucket(component)>`, same rows) so EVERY per-batch read is
-    bucket-pruned: the link-endpoint lift reads only the nbuckets the
-    batch's urls hash into, and the members-of-merged-components lookup
-    reads only the cbuckets of the components the batch actually merges
-    — no corpus-linear scan anywhere in the batch path.  CC checkpoints
-    into `checkpoint_dir` when given (reliable), else locally.
+    bucket-pruned: the link-endpoint lift reads only `node_buckets` (a
+    superset of the nbuckets the links' endpoints hash into; the caller
+    passes its pairs' feature buckets), and the members-of-merged-
+    components lookup reads only the cbuckets of the components the
+    batch actually merges — no corpus-linear scan anywhere in the batch
+    path.  CC checkpoints into `checkpoint_dir` when given (reliable),
+    else locally.
 
     Crash consistency: both stores are updated through ONE staged,
     journaled, idempotent bucket swap (`_write_journal`/`_commit_swaps`,
@@ -413,8 +428,6 @@ def _update_clusters(
         .persist()
     )
     cached = [li, link_nodes]
-    # lift reads ONLY the nbuckets the batch's endpoints hash into
-    [node_buckets] = _bucket_ids(link_nodes, _bucket(n_buckets, "node"))
     old = read_store_buckets(spark, base, node_buckets, col="nbucket")
     if old is not None:
         old = old.select("node", "component")
@@ -651,7 +664,10 @@ def process_linkage_batch(
         .partitionBy("pbucket", "batch_id")
         .parquet(f"{store_dir}/links")
     )
-    _update_clusters(spark, store_dir, links, n_buckets, cfg.checkpoint_dir)
+    # the links' endpoints are pair endpoints, and a url's node bucket is
+    # its feature bucket: the lift's nbuckets need no collect of their own
+    node_buckets = sorted(set(fbuckets_a) | set(fbuckets_b))
+    _update_clusters(spark, store_dir, links, n_buckets, node_buckets, cfg.checkpoint_dir)
     links.unpersist()
     pairs.unpersist()
 

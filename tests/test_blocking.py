@@ -256,3 +256,30 @@ def test_node_id_is_md5_and_key_safe(spark):
     keyed = df.select("url", node_id(F.col("url")).alias("nid"))
     j = keyed.join(keyed.withColumnRenamed("url", "url2"), "nid")
     assert sorted((r["url"], r["url2"]) for r in j.collect()) == sorted((u, u) for u in urls)
+
+
+def test_band_keys_match_column_formula(spark):
+    """The SQL-string band keys are bit-identical to the Column form
+    they replaced, on random int32 signatures with negatives and
+    INT_MIN."""
+    import random
+
+    from biomedical_el_spark.operators.features import band_keys_from_sig
+
+    rng = random.Random(7)
+    bands, rows = 16, 2
+    edge = [-(2**31), 2**31 - 1, -1, 0]
+    sigs = [[rng.randint(-(2**31), 2**31 - 1) for _ in range(bands * rows)] for _ in range(60)]
+    sigs += [[edge[(i + j) % 4] for j in range(bands * rows)] for i in range(4)]
+    feats = spark.createDataFrame(
+        [(f"u{i}", s) for i, s in enumerate(sigs)], "url string, sig array<int>"
+    )
+    column_keys = F.array(*[
+        F.xxhash64(F.lit(b), *[F.col("sig").getItem(b * rows + i) for i in range(rows)])
+        for b in range(bands)
+    ])
+    want = feats.select("url", F.explode(column_keys).alias("block_key"))
+    got = band_keys_from_sig(feats, bands, rows)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() == len(sigs) * bands

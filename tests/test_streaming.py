@@ -431,6 +431,31 @@ def test_batch_reads_only_bucket_directories(spark, tmp_path, monkeypatch):
     assert all(re.fullmatch(r"\w+/[a-z]+=\d+", p) for p in under), under
 
 
+def test_store_reads_use_the_writers_schema(spark, tmp_path):
+    """`read_store_buckets` reads every store with the schema its writer
+    fixes: the one parquet inference finds, without the job inference
+    runs."""
+    from biomedical_el_spark.streaming.incremental import STORE_SCHEMAS, read_store_buckets
+
+    store = str(tmp_path / "store_schema")
+    pages = generate_pages(spark, 60, cluster_size=4).drop("entity_id").cache()
+    process_linkage_batch(pages, 0, store, n_buckets=8)
+    sc = spark.sparkContext
+    for name in STORE_SCHEMAS:
+        base = os.path.join(store, name)
+        leaf = next(d for d in sorted(os.listdir(base)) if "=" in d)
+        col, bucket = leaf.split("=")
+        sc.setJobGroup("store-schema", name)
+        try:
+            got = read_store_buckets(spark, base, [int(bucket)], col=col)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("store-schema") == [], name
+        inferred = spark.read.option("basePath", base).parquet(os.path.join(base, leaf))
+        assert got.schema == inferred.schema, name
+        assert got.count() == inferred.count() > 0, name
+
+
 def test_stream_rejects_unsupported_config(spark, tmp_path):
     """A config the stream cannot honor raises ValueError before any
     write: the hyperplane channel, a block-size cap, the band-match
