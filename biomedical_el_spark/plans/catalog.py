@@ -7,6 +7,23 @@ Naming contract: every computed column is aliased IDENTICALLY in the Spark
 plan and the oracle SQL (the driver hashes values under sorted column
 names).  Hash-bearing queries use md5 (byte-identical in DuckDB); float
 aggregates are rounded to fixed decimals to absorb summation-order noise.
+
+Family rule: queries that share a decision build their Spark plans from
+one helper and their oracles from one SQL fragment, so each decision is
+written once per engine:
+- tokens: `_WORDS_SQL` (the oracle of `X.tokens(X.normalize_text(...))`),
+  `_hex8_sql` (of `H.hex_prefix_to_long(F.md5(...))`);
+- blocks → pairs: `_cached` (the one relation cache), `_cached_blocks`,
+  `_doc_pairs`; `_SHINGLE_SQL`, `_BLOCKS_SQL`, `_PAIRS_SQL`;
+- near-dup verify: `_shingled_pairs` + `_jaccard`; `_SHINGLED_PAIRS_SQL`
+  + `_JACCARD_SQL`; connected components: `_components_sql`;
+- ANN top-k, one filter-and-verify similarity join with five candidate
+  filters: each query builds its (query_id, neighbor_id) candidates and
+  `_top5` verifies them (exact cosine, top 5, ties to the lower
+  neighbor_id); `_ann_sql` is its oracle, over `_cos_sql`.  The IVF
+  oracles share their cells/probes (`_ivf_sql`) and k-means writes each
+  Lloyd iteration from one template (`_lloyd_sql`);
+- BIO tag stream: `_bio_tags`; `_bio_tagged_sql`.
 """
 
 from __future__ import annotations
@@ -14,12 +31,13 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
 from ..functions import text as X
-from ..functions.similarity import cosine_expr, jaro_winkler_udf
+from ..functions.embedder import hyperplane_bucket_sql, hyperplane_lsh_udf
+from ..functions.similarity import cosine_expr, jaccard_expr, jaro_winkler_udf
 from ..operators import blocking as B
 from ..operators import pairs as P
 from ..operators.cc import connected_components
@@ -37,15 +55,18 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _fanout(df: DataFrame, *cols: str) -> DataFrame:
     """Spread CPU-heavy map-side work across the session's shuffle width
     (round-6 measurement; same pattern as run_linkage's feature-stage
-    repartition).  A small parquet fixture arrives as ONE scan split
+    repartition) when the scan `df` plans fewer splits than
+    defaultParallelism.  A small parquet fixture arrives as ONE scan split
     (single file, single row group), so everything before the first
     exchange — md5/shingle chains, per-pair cosine folds, token explodes
     — runs in a single task no matter how many cores the session has
     (measured: ann_cosine_topk 3.53 s single-task → 0.63 s fanned out at
     sf0.1/32 cores).  Hash-repartition by the row key: deterministic (no
     round-robin pre-sort), and a downstream groupBy/window on the same
-    key reuses the exchange, so on multi-split inputs at scale this
-    MOVES the aggregation shuffle earlier rather than adding one.
+    key reuses the exchange.  A scan that already plans
+    defaultParallelism splits or more is returned as it is: there the
+    exchange would only move its full payload once more.  The split
+    count comes from planning alone (no Spark job).
 
     The partition count is EXPLICIT (defaultParallelism — scales with
     the cluster, never a constant): a bare repartition(col) is an
@@ -54,6 +75,8 @@ def _fanout(df: DataFrame, *cols: str) -> DataFrame:
     the very work this fans out (measured round 6: ann_cosine_topk 4.86 s
     with repartition(col) vs 0.63 s with the pinned width)."""
     n = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= n:
+        return df
     return df.repartition(n, *[F.col(c) for c in cols])
 
 
@@ -65,6 +88,16 @@ def register(name: str, oracle: str | None = None):
         return fn
 
     return deco
+
+
+# the oracle's tokenizer: X.tokens(X.normalize_text(text)) in DuckDB
+_WORDS_SQL = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> w != '')"
+
+
+def _hex8_sql(x: str) -> str:
+    """H.hex_prefix_to_long(F.md5(x)) in DuckDB: the first 8 hex digits
+    of md5(x) as a bigint."""
+    return f"CAST('0x' || substr(md5({x}), 1, 8) AS BIGINT)"
 
 
 # =====================================================================
@@ -91,17 +124,14 @@ def er_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # shared SQL fragment: tokenize + 3-shingles + md5 minhash (8 hashes)
-_SHINGLE_SQL = """
+_SHINGLE_SQL = f"""
         SELECT doc_id,
                CASE WHEN len(words) < 3
                     THEN [array_to_string(words, ' ')]
                     ELSE list_transform(range(1, len(words) - 1),
                                         i -> array_to_string(words[i:i+2], ' '))
                END AS sh
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                 w -> w != '') AS words
-              FROM documents)
+        FROM (SELECT doc_id, {_WORDS_SQL} AS words FROM documents)
 """
 
 _MINHASH_SQL = f"""
@@ -136,58 +166,41 @@ _PAIRS_SQL = f"""
 """
 
 
-def _build_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cand, _ = P.candidate_pairs_grouped(
-        _cached_blocks(spark, sf_dir), max_block_size=None
-    )
-    return cand.select(
-        F.col("url_a").alias("doc_a"), F.col("url_b").alias("doc_b")
-    )
+# One cache for the relations the er_*/d_* family shares: SEVEN catalog
+# queries re-derive identical shingle/minhash blocks (er_candidate/min2/
+# capped re-run the whole md5 chain just to generate pairs differently);
+# at bench scale that multiplies the md5-chain cost for no semantic
+# reason.  Keyed by (applicationId, sf_dir, relation); persisted.  Entries
+# from other applicationIds are evicted (unpersisted) on access so a
+# long-lived process cycling sessions can't accumulate pinned relations,
+# and `clear_pair_cache()` lets a driver sweeping many sf_dirs release
+# storage between corpora.  (er_minhash_blocks itself still computes the
+# chain fresh — it is the query that carries/measures the cold chain
+# cost, per bench.py.)
+_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
-# Caches of the blocks relation and the blocks→pairs chain shared by the
-# er_*/d_* family: SEVEN catalog queries re-derive identical
-# shingle/minhash relations (er_candidate/min2/capped re-run the whole
-# md5 chain just to generate pairs differently); at bench scale that
-# multiplies the md5-chain cost for no semantic reason.  Keyed by
-# (applicationId, sf_dir); persisted.  Entries from other applicationIds
-# are evicted (unpersisted) on access so a long-lived process cycling
-# sessions can't accumulate pinned relations, and `clear_pair_cache()`
-# lets a driver sweeping many sf_dirs release storage between corpora.
-# (er_minhash_blocks itself still computes the chain fresh — it is the
-# query that carries/measures the cold chain cost, per bench.py.)
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-_BLOCKS_CACHE: dict[tuple[str, str], DataFrame] = {}
+def _evict(key: tuple[str, str, str]) -> None:
+    try:
+        _CACHE.pop(key).unpersist()
+    except Exception:
+        pass  # its session is already stopped — nothing pinned anymore
 
 
 def clear_pair_cache() -> None:
     """Unpersist and drop every cached blocks/pairs relation."""
-    for cache in (_PAIR_CACHE, _BLOCKS_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing pinned anymore
-        cache.clear()
+    for key in list(_CACHE):
+        _evict(key)
 
 
-def _cached(
-    cache: dict[tuple[str, str], DataFrame],
-    spark: SparkSession,
-    sf_dir: str,
-    build,
-) -> DataFrame:
+def _cached(spark: SparkSession, sf_dir: str, relation: str, build) -> DataFrame:
     app_id = spark.sparkContext.applicationId
-    for k in [k for k in cache if k[0] != app_id]:
-        stale = cache.pop(k)
-        try:
-            stale.unpersist()
-        except Exception:
-            pass  # its SparkContext is gone; entry is just dropped
-    key = (app_id, sf_dir)
-    if key not in cache:
-        cache[key] = build().persist()
-    return cache[key]
+    for key in [k for k in _CACHE if k[0] != app_id]:
+        _evict(key)
+    key = (app_id, sf_dir, relation)
+    if key not in _CACHE:
+        _CACHE[key] = build().persist()
+    return _CACHE[key]
 
 
 def _cached_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,14 +208,22 @@ def _cached_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (session, sf_dir) — the shared upstream of every pair-generation
     variant (plain / min2-gated / capped-star)."""
     return _cached(
-        _BLOCKS_CACHE, spark, sf_dir,
+        spark, sf_dir, "blocks",
         lambda: er_minhash_blocks(spark, sf_dir).withColumnRenamed("doc_id", "url"),
     )
 
 
+def _doc_pairs(spark: SparkSession, sf_dir: str, **variant) -> DataFrame:
+    """(doc_a, doc_b) candidate pairs of the cached blocks; `variant` is
+    the pair-generation variant's `candidate_pairs_grouped` arguments."""
+    cand, _ = P.candidate_pairs_grouped(_cached_blocks(spark, sf_dir), **variant)
+    return cand.select(F.col("url_a").alias("doc_a"), F.col("url_b").alias("doc_b"))
+
+
 def _cached_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cached(
-        _PAIR_CACHE, spark, sf_dir, lambda: _build_pairs(spark, sf_dir)
+        spark, sf_dir, "pairs",
+        lambda: _doc_pairs(spark, sf_dir, max_block_size=None),
     )
 
 
@@ -233,9 +254,7 @@ def er_min2_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured at 1M/4M pages it holds junk pairs/page FLAT across a 4x
     size step where any-single-block pairs grow (BENCH.md).  Oracle:
     same band join GROUP BY pair HAVING count(*) >= 2."""
-    blocks = _cached_blocks(spark, sf_dir)
-    cand, _ = P.candidate_pairs_grouped(blocks, max_block_size=None, min_matches=2)
-    return cand.select(F.col("url_a").alias("doc_a"), F.col("url_b").alias("doc_b"))
+    return _doc_pairs(spark, sf_dir, max_block_size=None, min_matches=2)
 
 
 @register(
@@ -262,14 +281,12 @@ def er_capped_star_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair cost stays bounded (reference candidate capping analogue:
     run_e2e_span.py:883 --num_candidates).  Cap=2 at this fixture splits
     the blocks 86 combo / 4 star, exercising both branches."""
-    blocks = _cached_blocks(spark, sf_dir)
     # single_exchange: physical-plan knob only (results identical,
     # re-verified round 6: exceptAll both ways == 0); A/B at sf0.1
     # 1.38 s -> 0.91 s (one shuffle of the block relation, not two)
-    cand, _ = P.candidate_pairs_grouped(
-        blocks, max_block_size=2, escape="star", single_exchange=True
+    return _doc_pairs(
+        spark, sf_dir, max_block_size=2, escape="star", single_exchange=True
     )
-    return cand.select(F.col("url_a").alias("doc_a"), F.col("url_b").alias("doc_b"))
 
 
 @register(
@@ -297,23 +314,22 @@ def er_tfidf_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return blk.select(F.col("url").alias("doc_id"), "block_key", "df")
 
 
-@register(
-    "er_ngram_jaccard",
-    f"""
-    SELECT doc_a, doc_b,
-           round(CASE WHEN len(list_distinct(a.sh)) + len(list_distinct(b.sh)) = 0 THEN 0
+# the near-dup verify chain: candidate pairs hydrated with both docs'
+# 3-shingle lists, scored by set Jaccard (`jaccard_expr`)
+_SHINGLED_PAIRS_SQL = f"""({_PAIRS_SQL}) p
+        JOIN ({_SHINGLE_SQL}) a ON p.doc_a = a.doc_id
+        JOIN ({_SHINGLE_SQL}) b ON p.doc_b = b.doc_id"""
+
+_JACCARD_SQL = """CASE WHEN len(list_distinct(a.sh)) + len(list_distinct(b.sh)) = 0 THEN 0
                  ELSE len(list_filter(list_distinct(a.sh), x -> list_contains(b.sh, x))) * 1.0
                       / (len(list_distinct(a.sh)) + len(list_distinct(b.sh))
                          - len(list_filter(list_distinct(a.sh), x -> list_contains(b.sh, x))))
-                 END, 6) AS jaccard
-    FROM ({_PAIRS_SQL}) p
-    JOIN ({_SHINGLE_SQL}) a ON p.doc_a = a.doc_id
-    JOIN ({_SHINGLE_SQL}) b ON p.doc_b = b.doc_id
-    """,
-)
-def er_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise n-gram Jaccard verification of blocked candidates (the
-    set-similarity leg of stage-2 scoring)."""
+                 END"""
+
+
+def _shingled_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cached candidate pairs with both docs' 3-shingle arrays
+    (sh_a, sh_b): the input of every near-dup Jaccard check."""
     docs = _fanout(_t(spark, sf_dir, "documents"), "doc_id")
     # two-step: materialize tokens, then shingle (inlined tokenizer is
     # re-evaluated per shingle lambda element — measured 15x slower)
@@ -323,14 +339,25 @@ def er_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _cached_pairs(spark, sf_dir)
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    from ..functions.similarity import jaccard_expr
+    return pairs.join(a, "doc_a").join(b, "doc_b")
 
-    return (
-        pairs.join(a, "doc_a").join(b, "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.round(jaccard_expr(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"),
-        )
+
+def _jaccard() -> Column:
+    return jaccard_expr(F.col("sh_a"), F.col("sh_b"))
+
+
+@register(
+    "er_ngram_jaccard",
+    f"""
+    SELECT doc_a, doc_b, round({_JACCARD_SQL}, 6) AS jaccard
+    FROM {_SHINGLED_PAIRS_SQL}
+    """,
+)
+def er_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise n-gram Jaccard verification of blocked candidates (the
+    set-similarity leg of stage-2 scoring)."""
+    return _shingled_pairs(spark, sf_dir).select(
+        "doc_a", "doc_b", F.round(_jaccard(), 6).alias("jaccard")
     )
 
 
@@ -364,11 +391,9 @@ def er_jaro_winkler(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "er_simhash",
-    """
+    f"""
     WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                          w -> w != '')) AS t
-        FROM documents
+        SELECT doc_id, unnest({_WORDS_SQL}) AS t FROM documents
     ), votes AS (
         SELECT doc_id, k,
                sum(CASE WHEN substr(md5(t), k, 1) >= '8' THEN 1 ELSE -1 END) AS v
@@ -408,13 +433,11 @@ def er_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "er_fingerprint",
-    """
+    f"""
     SELECT doc_id,
            list_reduce(
                list_prepend(0::BIGINT,
-                   list_transform(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                              w -> w != ''),
-                       t -> CAST('0x' || substr(md5(t), 1, 8) AS BIGINT))),
+                   list_transform({_WORDS_SQL}, t -> {_hex8_sql("t")})),
                (acc, x) -> (acc * 31 + x) % 1000000007) AS fingerprint
     FROM documents
     """,
@@ -430,93 +453,133 @@ def er_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 # Similarity search (ANN) over `embeddings`
 # =====================================================================
+#
+# Every ANN query is one filter-and-verify top-k similarity join
+# (Distributed Similarity Joins over Top-K Rankings, EDBT 2020): a
+# candidate filter yields (query_id, neighbor_id) pairs, queries being
+# the vectors with vec_id % 20 = 0, and one verify half scores them.
+# Only the filters differ: all pairs, a hyperplane-LSH bucket, its
+# one-bit-flip probes, or the 2 nearest IVF cells.
 
-_DOT_SQL = """
-        round(list_sum(list_transform(range(1, 65),
-              i -> (a.embedding[i]::DOUBLE) * (b.embedding[i]::DOUBLE))), 6)
-"""
 
-_NORM_A = "sqrt(list_sum(list_transform(range(1, 65), i -> (a.embedding[i]::DOUBLE) * (a.embedding[i]::DOUBLE))))"
-_NORM_B = "sqrt(list_sum(list_transform(range(1, 65), i -> (b.embedding[i]::DOUBLE) * (b.embedding[i]::DOUBLE))))"
+def _dbl() -> Column:
+    return F.transform(F.col("embedding"), lambda x: x.cast("double"))
 
 
-@register(
-    "ann_cosine_topk",
-    f"""
-    WITH scored AS (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               list_sum(list_transform(range(1, 65),
-                   i -> (a.embedding[i]::DOUBLE) * (b.embedding[i]::DOUBLE)))
-               / ({_NORM_A} * {_NORM_B}) AS cos
-        FROM embeddings a, embeddings b
-        WHERE a.vec_id % 20 = 0 AND a.vec_id != b.vec_id
+def _scored(cands: DataFrame, qv: str, nv: str, *keep: str) -> DataFrame:
+    """Exact cosine of each (query_id, neighbor_id) candidate pair with
+    vectors in columns `qv`/`nv`; a vector is never its own neighbor."""
+    return cands.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", *keep,
+        cosine_expr(F.col(qv), F.col(nv)).alias("cos"),
     )
-    SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= 5
-    """,
-)
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k — the ANN baseline (reference brute-force
-    all-candidates scoring, utils_e2e_span.py:417-426 + torch.topk W1).
-    Query side is broadcast; the big side is fanned out across the
-    session width (`_fanout` — the scan is one split at fixture size)
-    and streams through one projection; per-query top-k via window."""
-    emb = _t(spark, sf_dir, "embeddings")
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    q = emb.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("query_id"), dbl.alias("qv")
-    )
-    c = _fanout(emb, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"), dbl.alias("cv")
-    )
-    scored = (
-        F.broadcast(q).crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            cosine_expr(F.col("qv"), F.col("cv")).alias("cos"),
-        )
-    )
+
+
+def _top5(cands: DataFrame, qv: str, nv: str) -> DataFrame:
+    """The ANN result rule: per query, the 5 candidates of highest cosine,
+    ties to the lower neighbor_id.  `_ann_sql` is its oracle."""
     win = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(win))
+        _scored(cands, qv, nv).withColumn("rank", F.row_number().over(win))
         .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "rank")
     )
 
 
-def _lsh_oracle_sql() -> str:
-    """DuckDB oracle for the LSH-bucketed ANN: the SAME seeded hyperplane
-    literals in the SAME left-associated order as the Spark expression,
-    so bucket keys (double-precision dot-product signs) are bit-identical
-    across engines — a full correctness gate for the scale-path ANN."""
-    from ..functions.embedder import hyperplane_bucket_sql
-
-    bucket_a = hyperplane_bucket_sql("a.embedding", num_planes=4, seed=7)
-    return f"""
-    WITH scored AS (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               list_sum(list_transform(range(1, 65),
-                   i -> (a.embedding[i]::DOUBLE) * (b.embedding[i]::DOUBLE)))
-               / ({_NORM_A} * {_NORM_B}) AS cos
-        FROM embeddings a JOIN embeddings b
-          ON {bucket_a} = {bucket_a.replace("a.embedding", "b.embedding")}
-        WHERE a.vec_id % 20 = 0 AND a.vec_id != b.vec_id
+def _brute_force(spark: SparkSession, sf_dir: str, *keep: Column) -> DataFrame:
+    """All (query, vector) pairs, vectors as qv/cv: the query side is
+    broadcast; the big side is fanned out across the session width
+    (`_fanout` — the scan is one split at fixture size) and streams
+    through one projection."""
+    emb = _t(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") % 20 == 0).select(
+        F.col("vec_id").alias("query_id"), _dbl().alias("qv")
     )
+    c = _fanout(emb, "vec_id").select(
+        F.col("vec_id").alias("neighbor_id"), _dbl().alias("cv"), *keep
+    )
+    return F.broadcast(q).crossJoin(c)
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return (
+        "list_sum(list_transform(range(1, 65), "
+        f"i -> ({a}.embedding[i]::DOUBLE) * ({b}.embedding[i]::DOUBLE)))"
+    )
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """`cosine_expr` of {a}.embedding and {b}.embedding in DuckDB: the
+    double dot product over the product of the two norms."""
+    return f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
+
+
+_TOP5_SQL = """
     SELECT query_id, neighbor_id, rank FROM (
         SELECT query_id, neighbor_id,
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY cos DESC, neighbor_id) AS rank
         FROM scored
     ) WHERE rank <= 5
-    """
+"""
 
 
-@register("ann_lsh_topk", None)  # oracle attached right below (built dynamically)
+def _ann_sql(cands: str, ctes: str = "", result: str = _TOP5_SQL) -> str:
+    """The oracle of the verify half: the `cands` SELECT yields
+    (query_id, neighbor_id) pairs (after the `ctes`, each ending in a
+    comma); `scored` hydrates both vectors by id, drops self pairs and
+    adds the cosine and the neighbor's label (nl); `result` reads it."""
+    return f"""
+    WITH {ctes}
+    cands AS ({cands}),
+    scored AS (
+        SELECT query_id, neighbor_id, b.label AS nl, {_cos_sql("a", "b")} AS cos
+        FROM cands
+        JOIN embeddings a ON a.vec_id = query_id
+        JOIN embeddings b ON b.vec_id = neighbor_id
+        WHERE query_id != neighbor_id
+    )
+    {result}"""
+
+
+def _query_pairs_sql(on: str = "true") -> str:
+    """Each query (vec_id % 20 = 0) paired with every vector b it joins
+    ON `on`: all of them by default."""
+    return f"""
+        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id
+        FROM embeddings a JOIN embeddings b ON {on}
+        WHERE a.vec_id % 20 = 0"""
+
+
+# the SAME seeded hyperplane literals in the SAME left-associated order as
+# the Spark UDF, so bucket keys (double-precision dot-product signs) are
+# bit-identical across engines — a full correctness gate for the LSH paths
+_BUCKET_A = hyperplane_bucket_sql("a.embedding", num_planes=4, seed=7)
+_BUCKET_B = _BUCKET_A.replace("a.embedding", "b.embedding")
+
+
+@register("ann_cosine_topk", _ann_sql(_query_pairs_sql()))
+def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-k — the ANN baseline (reference brute-force
+    all-candidates scoring, utils_e2e_span.py:417-426 + torch.topk W1):
+    every pair is a candidate (`_brute_force`); per-query top-k via
+    window."""
+    return _top5(_brute_force(spark, sf_dir), "qv", "cv")
+
+
+def _lsh_keyed(emb: DataFrame) -> DataFrame:
+    """(vec_id, v, bucket): the double vector and its 4-plane LSH bucket."""
+    key = hyperplane_lsh_udf(num_planes=4, seed=7)(F.col("embedding"))
+    return emb.select("vec_id", _dbl().alias("v"), key.alias("bucket"))
+
+
+def _lsh_neighbors(keyed: DataFrame) -> DataFrame:
+    return keyed.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), "bucket"
+    )
+
+
+@register("ann_lsh_topk", _ann_sql(_query_pairs_sql(f"{_BUCKET_A} = {_BUCKET_B}")))
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN — the scale path: hyperplane bucket equi-join
     instead of cross join; brute-force rescoring only within buckets.
@@ -529,68 +592,22 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fell out of whole-stage codegen and ran 3.4× slower).
     Recall vs brute force is additionally floor-gated in
     tests/test_ann.py (single-probe recall@5)."""
-    from ..functions.embedder import hyperplane_lsh_udf
-
     # no _fanout here: the in-bucket rescoring runs AFTER the bucket
     # equi-join, whose parallelism is bounded by the 2^4 bucket keys —
     # a pre-join fan-out is an extra exchange with nothing to feed
     # (A/B round 6: 0.88 s without vs 1.08 s with)
-    emb = _t(spark, sf_dir, "embeddings")
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    key = hyperplane_lsh_udf(num_planes=4, seed=7)(F.col("embedding"))
-    keyed = emb.select("vec_id", dbl.alias("v"), key.alias("bucket"))
+    keyed = _lsh_keyed(_t(spark, sf_dir, "embeddings"))
     q = keyed.filter(F.col("vec_id") % 20 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "bucket"
     )
-    c = keyed.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), "bucket")
-    scored = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine_expr(F.col("qv"), F.col("cv")).alias("cos"))
-    )
-    win = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _top5(q.join(_lsh_neighbors(keyed), "bucket"), "qv", "cv")
 
 
-ORACLES["ann_lsh_topk"] = _lsh_oracle_sql()
+# multi-probe candidates: the query's own bucket and its 4 one-bit flips
+_PROBES_SQL = ", ".join([_BUCKET_A] + [f"xor({_BUCKET_A}, {1 << p})" for p in range(4)])
 
 
-def _multiprobe_oracle_sql(num_planes: int = 4) -> str:
-    """DuckDB oracle for the multi-probe LSH ANN: candidate set is the
-    union of the query's own bucket and its `num_planes` single-bit-flip
-    neighbor buckets — rendered as an IN-list join condition over the
-    same seeded literal plane expressions as the single-probe oracle."""
-    from ..functions.embedder import hyperplane_bucket_sql
-
-    bucket_a = hyperplane_bucket_sql("a.embedding", num_planes=num_planes, seed=7)
-    bucket_b = bucket_a.replace("a.embedding", "b.embedding")
-    probes = ", ".join(
-        [bucket_a] + [f"xor({bucket_a}, {1 << p})" for p in range(num_planes)]
-    )
-    return f"""
-    WITH scored AS (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               list_sum(list_transform(range(1, 65),
-                   i -> (a.embedding[i]::DOUBLE) * (b.embedding[i]::DOUBLE)))
-               / ({_NORM_A} * {_NORM_B}) AS cos
-        FROM embeddings a JOIN embeddings b
-          ON {bucket_b} IN ({probes})
-        WHERE a.vec_id % 20 = 0 AND a.vec_id != b.vec_id
-    )
-    SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= 5
-    """
-
-
-@register("ann_multiprobe_topk", None)  # oracle attached right below
+@register("ann_multiprobe_topk", _ann_sql(_query_pairs_sql(f"{_BUCKET_B} IN ({_PROBES_SQL})")))
 def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH ANN — the production recall/cost point between
     single-probe LSH (recall@5 ≈ 0.13 on near-random vectors) and brute
@@ -605,85 +622,49 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lift at cos≈0.3: p^4 → p^4 + 4p^3(1-p) ≈ 0.13 → ~0.47 (p = 1-θ/π);
     measured value is floor-gated in tests/test_ann.py and the
     recall-vs-cost curve is recorded in BENCH.md."""
-    from ..functions.embedder import hyperplane_lsh_udf
-
-    num_planes = 4
-    emb = _fanout(_t(spark, sf_dir, "embeddings"), "vec_id")
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    key = hyperplane_lsh_udf(num_planes=num_planes, seed=7)(F.col("embedding"))
-    keyed = emb.select("vec_id", dbl.alias("v"), key.alias("bucket"))
+    keyed = _lsh_keyed(_fanout(_t(spark, sf_dir, "embeddings"), "vec_id"))
     probe_set = F.array(
-        F.col("bucket"),
-        *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(num_planes)],
+        F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(4)]
     )
-    q = (
-        keyed.filter(F.col("vec_id") % 20 == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.explode(probe_set).alias("bucket"),
-        )
+    q = keyed.filter(F.col("vec_id") % 20 == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.explode(probe_set).alias("bucket"),
     )
-    c = keyed.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), "bucket")
-    scored = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine_expr(F.col("qv"), F.col("cv")).alias("cos"))
-    )
-    win = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _top5(q.join(_lsh_neighbors(keyed), "bucket"), "qv", "cv")
 
 
-ORACLES["ann_multiprobe_topk"] = _multiprobe_oracle_sql()
-
-
-_IVF_COS_AC = f"""list_sum(list_transform(range(1, 65),
-                   i -> (a.embedding[i]::DOUBLE) * (c.embedding[i]::DOUBLE)))
-               / ({_NORM_A} * sqrt(list_sum(list_transform(range(1, 65),
-                   i -> (c.embedding[i]::DOUBLE) * (c.embedding[i]::DOUBLE)))))"""
+def _ivf_sql(ranked: str) -> str:
+    """IVF oracle: the `ranked` CTEs end in ranked(vec_id, cid, rn), each
+    vector's centroids by rank.  A vector's cell is its rank-1 centroid;
+    a query probes its 2 nearest cells."""
+    return _ann_sql(
+        "SELECT p.query_id, s.vec_id AS neighbor_id "
+        "FROM probes p JOIN cells s ON s.cell = p.cell",
+        f"""{ranked},
+    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
+    probes AS (
+        SELECT vec_id AS query_id, cid AS cell FROM ranked
+        WHERE rn <= 2 AND vec_id % 20 = 0
+    ),""",
+    )
 
 
 @register(
     "ann_ivf_topk",
-    f"""
-    WITH cents AS (
-        SELECT vec_id AS centroid_id, embedding FROM embeddings
+    _ivf_sql(
+        f"""
+    cents AS (
+        SELECT vec_id AS cid, embedding FROM embeddings
         WHERE vec_id % 97 = 3
     ),
     ranked AS (
-        SELECT a.vec_id, c.centroid_id,
+        SELECT a.vec_id, c.cid,
                row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {_IVF_COS_AC} DESC, c.centroid_id)
-                   AS rn
+                                  ORDER BY {_cos_sql("a", "c")} DESC, c.cid) AS rn
         FROM embeddings a, cents c
+    )"""
     ),
-    cells AS (SELECT vec_id, centroid_id AS cell FROM ranked WHERE rn = 1),
-    probes AS (
-        SELECT vec_id AS query_id, centroid_id AS cell FROM ranked
-        WHERE rn <= 2 AND vec_id % 20 = 0
-    ),
-    scored AS (
-        SELECT p.query_id, s.vec_id AS neighbor_id,
-               list_sum(list_transform(range(1, 65),
-                   i -> (a.embedding[i]::DOUBLE) * (b.embedding[i]::DOUBLE)))
-               / ({_NORM_A} * {_NORM_B}) AS cos
-        FROM probes p
-        JOIN cells s ON s.cell = p.cell
-        JOIN embeddings a ON a.vec_id = p.query_id
-        JOIN embeddings b ON b.vec_id = s.vec_id
-        WHERE s.vec_id != p.query_id
-    )
-    SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= 5
-    """,
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat ANN — the coarse-quantizer scale path (the reference's
@@ -704,8 +685,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors from the features table instead of carrying them through
     the window."""
     emb = _t(spark, sf_dir, "embeddings")
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    vecs = _fanout(emb, "vec_id").select("vec_id", dbl.alias("v"))
+    vecs = _fanout(emb, "vec_id").select("vec_id", _dbl().alias("v"))
     cents = vecs.filter(F.col("vec_id") % 97 == 3).select(
         F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
     )
@@ -732,24 +712,45 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("qv"),
         F.col("centroid_id").alias("cell"),
     )
-    scored = (
-        probes.join(cells, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            cosine_expr(F.col("qv"), F.col("nv")).alias("cos"),
-        )
-    )
-    win = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _top5(probes.join(cells, "cell"), "qv", "nv")
 
 
-_IVF_KMEANS_SQL = """
-    WITH qv AS (
+def _kmeans_rank_sql(n: int) -> str:
+    """d{n} scores every quantized vector against centroids c{n-1} by
+    exact integer dot product; r{n} ranks them per vector (ties → min
+    cid)."""
+    return f"""
+    d{n} AS (
+        SELECT v.vec_id, c.cid,
+               list_sum(list_transform(range(1, 65), i -> v.q[i] * c.c[i])) AS d
+        FROM qv v, c{n - 1} c
+    ),
+    r{n} AS (
+        SELECT vec_id, cid,
+               row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, cid) AS rn
+        FROM d{n}
+    ),"""
+
+
+def _lloyd_sql(n: int) -> str:
+    """Lloyd iteration n of the k-means IVF oracle: assign each vector to
+    its rank-1 centroid of c{n-1}, then c{n} is the floor of each cell's
+    integer mean."""
+    return _kmeans_rank_sql(n) + f"""
+    c{n} AS (
+        SELECT cid, list(cx ORDER BY i) AS c FROM (
+            SELECT a.cid, i,
+                   CAST(floor((sum(v.q[i]))::DOUBLE / count(*)) AS BIGINT) AS cx
+            FROM r{n} a JOIN qv v USING (vec_id), (SELECT unnest(range(1, 65)) AS i)
+            WHERE a.rn = 1
+            GROUP BY a.cid, i
+        ) GROUP BY cid
+    ),"""
+
+
+_IVF_KMEANS_SQL = _ivf_sql(
+    """
+    qv AS (
         SELECT vec_id,
                list_transform(range(1, 65),
                    i -> CAST(round(embedding[i]::DOUBLE * 1000000) AS BIGINT)) AS q
@@ -758,80 +759,12 @@ _IVF_KMEANS_SQL = """
     c0 AS (
         SELECT vec_id AS cid, q AS c FROM qv
         WHERE vec_id % 13 = 2 ORDER BY vec_id LIMIT 20
-    ),
-    d1 AS (
-        SELECT v.vec_id, c.cid,
-               list_sum(list_transform(range(1, 65), i -> v.q[i] * c.c[i])) AS d
-        FROM qv v, c0 c
-    ),
-    a1 AS (
-        SELECT vec_id, cid FROM (
-            SELECT vec_id, cid,
-                   row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, cid) AS rn
-            FROM d1
-        ) WHERE rn = 1
-    ),
-    c1 AS (
-        SELECT cid, list(cx ORDER BY i) AS c FROM (
-            SELECT a.cid, i,
-                   CAST(floor((sum(v.q[i]))::DOUBLE / count(*)) AS BIGINT) AS cx
-            FROM a1 a JOIN qv v USING (vec_id), (SELECT unnest(range(1, 65)) AS i)
-            GROUP BY a.cid, i
-        ) GROUP BY cid
-    ),
-    d2 AS (
-        SELECT v.vec_id, c.cid,
-               list_sum(list_transform(range(1, 65), i -> v.q[i] * c.c[i])) AS d
-        FROM qv v, c1 c
-    ),
-    a2 AS (
-        SELECT vec_id, cid FROM (
-            SELECT vec_id, cid,
-                   row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, cid) AS rn
-            FROM d2
-        ) WHERE rn = 1
-    ),
-    c2 AS (
-        SELECT cid, list(cx ORDER BY i) AS c FROM (
-            SELECT a.cid, i,
-                   CAST(floor((sum(v.q[i]))::DOUBLE / count(*)) AS BIGINT) AS cx
-            FROM a2 a JOIN qv v USING (vec_id), (SELECT unnest(range(1, 65)) AS i)
-            GROUP BY a.cid, i
-        ) GROUP BY cid
-    ),
-    d3 AS (
-        SELECT v.vec_id, c.cid,
-               list_sum(list_transform(range(1, 65), i -> v.q[i] * c.c[i])) AS d
-        FROM qv v, c2 c
-    ),
-    ranked AS (
-        SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, cid) AS rn
-        FROM d3
-    ),
-    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
-    probes AS (
-        SELECT vec_id AS query_id, cid AS cell FROM ranked
-        WHERE rn <= 2 AND vec_id % 20 = 0
-    ),
-    scored AS (
-        SELECT p.query_id, s.vec_id AS neighbor_id,
-               list_sum(list_transform(range(1, 65),
-                   i -> (a.embedding[i]::DOUBLE) * (b.embedding[i]::DOUBLE)))
-               / (@NORM_A@ * @NORM_B@) AS cos
-        FROM probes p
-        JOIN cells s ON s.cell = p.cell
-        JOIN embeddings a ON a.vec_id = p.query_id
-        JOIN embeddings b ON b.vec_id = s.vec_id
-        WHERE s.vec_id != p.query_id
-    )
-    SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= 5
-""".replace("@NORM_A@", _NORM_A).replace("@NORM_B@", _NORM_B)
+    ),"""
+    + _lloyd_sql(1)
+    + _lloyd_sql(2)
+    + _kmeans_rank_sql(3)
+    + "\n    ranked AS (SELECT vec_id, cid, rn FROM r3)"
+)
 
 
 def _ivf_kmeans_parts(
@@ -942,72 +875,37 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ivf_kmeans_parts for construction and the 100-TB plan shape)."""
     probes, cells, emb = _ivf_kmeans_parts(spark, sf_dir)
     # hydrate vectors by id AFTER candidate generation (narrow joins)
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    vq = emb.select(F.col("vec_id").alias("query_id"), dbl.alias("qvec"))
-    vn = emb.select(F.col("vec_id").alias("neighbor_id"), dbl.alias("nvec"))
-    scored = (
-        probes.join(cells, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(vq, "query_id")
-        .join(vn, "neighbor_id")
-        .select(
-            "query_id", "neighbor_id",
-            cosine_expr(F.col("qvec"), F.col("nvec")).alias("cos"),
-        )
-    )
-    win = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    vq = emb.select(F.col("vec_id").alias("query_id"), _dbl().alias("qvec"))
+    vn = emb.select(F.col("vec_id").alias("neighbor_id"), _dbl().alias("nvec"))
+    cands = probes.join(cells, "cell").join(vq, "query_id").join(vn, "neighbor_id")
+    return _top5(cands, "qvec", "nvec")
 
 
 @register(
     "ann_label_top1",
-    f"""
-    WITH scored AS (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, b.label AS nl,
-               list_sum(list_transform(range(1, 65),
-                   i -> (a.embedding[i]::DOUBLE) * (b.embedding[i]::DOUBLE)))
-               / ({_NORM_A} * {_NORM_B}) AS cos
-        FROM embeddings a, embeddings b
-        WHERE a.vec_id % 20 = 0 AND a.vec_id != b.vec_id
-    )
-    SELECT query_id, arg_max(nl, cos) AS pred_label
-    FROM scored GROUP BY query_id
-    """,
+    _ann_sql(
+        _query_pairs_sql(),
+        result="SELECT query_id, arg_max(nl, cos) AS pred_label FROM scored GROUP BY query_id",
+    ),
 )
 def ann_label_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-1 linking via max_by — the reference's argmax entity assignment
     (run_e2e_span.py:570-575, W2) as a single aggregate (no window)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    q = emb.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("query_id"), dbl.alias("qv")
+    cands = _brute_force(spark, sf_dir, F.col("label").alias("nl"))
+    return _scored(cands, "qv", "cv", "nl").groupBy("query_id").agg(
+        F.max_by("nl", "cos").alias("pred_label")
     )
-    c = _fanout(emb, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"), dbl.alias("cv"), F.col("label").alias("nl")
-    )
-    scored = (
-        F.broadcast(q).crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "nl", cosine_expr(F.col("qv"), F.col("cv")).alias("cos"))
-    )
-    return scored.groupBy("query_id").agg(F.max_by("nl", "cos").alias("pred_label"))
 
 
 # =====================================================================
 # Transitive clustering (connected components) with a recursive-CTE oracle
 # =====================================================================
 
-@register(
-    "cc_customer_nation_region",
-    """
-    WITH RECURSIVE edges AS (
-        SELECT c_custkey + 1000000 AS src, CAST(c_nationkey AS BIGINT) AS dst FROM customer
-        UNION ALL
-        SELECT CAST(n_nationkey AS BIGINT), n_regionkey + 5000000 FROM nation
+def _components_sql(edges: str) -> str:
+    """Connected components of the `edges` SELECT's (src, dst) graph as a
+    recursive CTE: each node labeled with the min node it reaches."""
+    return f"""
+    WITH RECURSIVE edges AS ({edges}
     ), sym AS (
         SELECT src, dst FROM edges UNION SELECT dst, src FROM edges
     ), reach(node, comp) AS (
@@ -1016,7 +914,15 @@ def ann_label_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT s.src, r.comp FROM sym s JOIN reach r ON s.dst = r.node
     )
     SELECT node, min(comp) AS component FROM reach GROUP BY node
-    """,
+    """
+
+
+@register(
+    "cc_customer_nation_region",
+    _components_sql("""
+        SELECT c_custkey + 1000000 AS src, CAST(c_nationkey AS BIGINT) AS dst FROM customer
+        UNION ALL
+        SELECT CAST(n_nationkey AS BIGINT), n_regionkey + 5000000 FROM nation"""),
 )
 def cc_customer_nation_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components on the customer→nation→region graph (multi-
@@ -1369,11 +1275,7 @@ _STOPWORDS = ["the", "a", "of", "and", "to", "in"]
 @register(
     "t_quality_score",
     f"""
-    WITH toks AS (
-        SELECT doc_id, n_chars,
-               list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> w != '') AS w
-        FROM documents
-    )
+    WITH toks AS (SELECT doc_id, n_chars, {_WORDS_SQL} AS w FROM documents)
     SELECT doc_id,
            len(w) AS n_tokens,
            round(CASE WHEN len(w) = 0 THEN 0
@@ -1404,12 +1306,8 @@ def t_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t_lang_id",
-    """
-    WITH toks AS (
-        SELECT doc_id, lang,
-               list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> w != '') AS w
-        FROM documents
-    )
+    f"""
+    WITH toks AS (SELECT doc_id, lang, {_WORDS_SQL} AS w FROM documents)
     SELECT doc_id, lang AS declared_lang,
            CASE WHEN len(list_filter(w, x -> list_contains(['the','a','of','and'], x))) * 10
                      >= len(w) THEN 'en' ELSE 'other' END AS guessed_lang
@@ -1466,62 +1364,24 @@ def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "d_near_dup_pairs",
     f"""
     SELECT doc_a, doc_b FROM (
-        SELECT doc_a, doc_b,
-               CASE WHEN len(list_distinct(a.sh)) + len(list_distinct(b.sh)) = 0 THEN 0
-                 ELSE len(list_filter(list_distinct(a.sh), x -> list_contains(b.sh, x))) * 1.0
-                      / (len(list_distinct(a.sh)) + len(list_distinct(b.sh))
-                         - len(list_filter(list_distinct(a.sh), x -> list_contains(b.sh, x))))
-                 END AS j
-        FROM ({_PAIRS_SQL}) p
-        JOIN ({_SHINGLE_SQL}) a ON p.doc_a = a.doc_id
-        JOIN ({_SHINGLE_SQL}) b ON p.doc_b = b.doc_id
+        SELECT doc_a, doc_b, {_JACCARD_SQL} AS j
+        FROM {_SHINGLED_PAIRS_SQL}
     ) WHERE j >= 0.08
     """,
 )
 def d_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash blocking → Jaccard verify ≥ τ: the complete near-dup
     detection chain as one declarative plan."""
-    from ..functions.similarity import jaccard_expr
-
-    docs = _fanout(_t(spark, sf_dir, "documents"), "doc_id")
-    sh = docs.select(
-        "doc_id", X.tokens(X.normalize_text(F.col("text"))).alias("tk")
-    ).select("doc_id", X.shingles(F.col("tk"), 3).alias("sh"))
-    pairs = _cached_pairs(spark, sf_dir)
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    return (
-        pairs.join(a, "doc_a").join(b, "doc_b")
-        .filter(jaccard_expr(F.col("sh_a"), F.col("sh_b")) >= 0.08)
-        .select("doc_a", "doc_b")
+    return _shingled_pairs(spark, sf_dir).filter(_jaccard() >= 0.08).select(
+        "doc_a", "doc_b"
     )
 
 
 @register(
     "er_near_dup_clusters",
-    f"""
-    WITH RECURSIVE pairs AS (
-        SELECT doc_a, doc_b FROM (
-            SELECT doc_a, doc_b,
-                   CASE WHEN len(list_distinct(a.sh)) + len(list_distinct(b.sh)) = 0 THEN 0
-                     ELSE len(list_filter(list_distinct(a.sh), x -> list_contains(b.sh, x))) * 1.0
-                          / (len(list_distinct(a.sh)) + len(list_distinct(b.sh))
-                             - len(list_filter(list_distinct(a.sh), x -> list_contains(b.sh, x))))
-                     END AS j
-            FROM ({_PAIRS_SQL}) p
-            JOIN ({_SHINGLE_SQL}) a ON p.doc_a = a.doc_id
-            JOIN ({_SHINGLE_SQL}) b ON p.doc_b = b.doc_id
-        ) WHERE j >= 0.08
-    ), sym AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs
-    ), reach(node, comp) AS (
-        SELECT src, src FROM sym
-        UNION
-        SELECT s.src, r.comp FROM sym s JOIN reach r ON s.dst = r.node
-    )
-    SELECT node, min(comp) AS component FROM reach GROUP BY node
-    """,
+    _components_sql(
+        f"SELECT doc_a AS src, doc_b AS dst FROM ({ORACLES['d_near_dup_pairs']})"
+    ),
 )
 def er_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full dedup chain as one oracle-checked query: MinHash blocking
@@ -1575,9 +1435,9 @@ def a_cube_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s_deterministic_sample",
-    """
+    f"""
     SELECT doc_id, lang FROM documents
-    WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 10 = 0
+    WHERE {_hex8_sql("CAST(doc_id AS VARCHAR)")} % 10 = 0
     """,
 )
 def s_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1629,24 +1489,50 @@ def w_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "w_bio_decode",
-    """
-    WITH toks AS (
+def _bio_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, pos, tag) over the documents table's real token
+    positions, tags a deterministic synthetic stream: md5(doc_id:pos)
+    mod 5 is 2 → B (1), 3 or 4 → I (2), else O (0).  `_bio_tagged_sql`
+    is its oracle."""
+    docs = _fanout(_t(spark, sf_dir, "documents"), "doc_id")
+    ntok = docs.select(
+        "doc_id", F.size(X.tokens(X.normalize_text(F.col("text")))).alias("n")
+    )
+    toks = ntok.filter(F.col("n") > 0).select(
+        "doc_id", F.explode(F.sequence(F.lit(0), F.col("n") - 1)).alias("pos")
+    )
+    h = H.hex_prefix_to_long(
+        F.md5(F.concat_ws(":", F.col("doc_id"), F.col("pos")))
+    )
+    tag = (
+        F.when(F.pmod(h, F.lit(5)) == 2, 1)
+        .when(F.pmod(h, F.lit(5)).isin(3, 4), 2)
+        .otherwise(0)
+    )
+    return toks.withColumn("tag", tag)
+
+
+def _bio_tagged_sql(extra: str = "") -> str:
+    """The toks/tagged CTEs of the BIO oracles; `extra` adds columns to
+    `tagged`."""
+    return f"""
+    toks AS (
         SELECT doc_id, unnest(range(0, len(words))) AS pos
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                 w -> w != '') AS words
-              FROM documents)
+        FROM (SELECT doc_id, {_WORDS_SQL} AS words FROM documents)
     ),
     tagged AS (
         SELECT doc_id, pos,
-               CASE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':'
-                         || CAST(pos AS VARCHAR)), 1, 8) AS BIGINT) % 5
+               CASE {_hex8_sql("CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR)")} % 5
                     WHEN 2 THEN 1 WHEN 3 THEN 2 WHEN 4 THEN 2
-                    ELSE 0 END AS tag
+                    ELSE 0 END AS tag{extra}
         FROM toks
-    ),
+    )"""
+
+
+@register(
+    "w_bio_decode",
+    f"""
+    WITH {_bio_tagged_sql()},
     runs AS (
         SELECT doc_id, pos, tag,
                sum(CASE WHEN tag = 0 THEN 1 ELSE 0 END)
@@ -1675,23 +1561,7 @@ def w_bio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end against the DuckDB oracle at hash level."""
     from ..operators.bio import bio_span_decode
 
-    docs = _fanout(_t(spark, sf_dir, "documents"), "doc_id")
-    ntok = docs.select(
-        "doc_id", F.size(X.tokens(X.normalize_text(F.col("text")))).alias("n")
-    )
-    toks = ntok.filter(F.col("n") > 0).select(
-        "doc_id", F.explode(F.sequence(F.lit(0), F.col("n") - 1)).alias("pos")
-    )
-    h = H.hex_prefix_to_long(
-        F.md5(F.concat_ws(":", F.col("doc_id"), F.col("pos")))
-    )
-    tag = (
-        F.when(F.pmod(h, F.lit(5)) == 2, 1)
-        .when(F.pmod(h, F.lit(5)).isin(3, 4), 2)
-        .otherwise(0)
-    )
-    tagged = toks.withColumn("tag", tag)
-    return bio_span_decode(tagged).select(
+    return bio_span_decode(_bio_tags(spark, sf_dir)).select(
         "doc_id", "span_no", "span_start", "span_end", "n_tokens"
     )
 
@@ -1778,28 +1648,17 @@ def stream_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(store, ignore_errors=True)
 
 
+# the continuation flags of w_bio_decode_subword: md5('c:' doc_id:pos) mod 4 = 0
+_SUBWORD_TAGS_SQL = f""",
+               CASE WHEN {_hex8_sql("'c:' || CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR)")} % 4 = 0
+                    THEN 1 ELSE 0 END AS cont,
+               max(pos) OVER (PARTITION BY doc_id) + 1 AS L"""
+
+
 @register(
     "w_bio_decode_subword",
-    """
-    WITH toks AS (
-        SELECT doc_id, unnest(range(0, len(words))) AS pos
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                 w -> w != '') AS words
-              FROM documents)
-    ),
-    tagged AS (
-        SELECT doc_id, pos,
-               CASE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':'
-                         || CAST(pos AS VARCHAR)), 1, 8) AS BIGINT) % 5
-                    WHEN 2 THEN 1 WHEN 3 THEN 2 WHEN 4 THEN 2
-                    ELSE 0 END AS tag,
-               CASE WHEN CAST('0x' || substr(md5('c:' || CAST(doc_id AS VARCHAR)
-                         || ':' || CAST(pos AS VARCHAR)), 1, 8) AS BIGINT) % 4 = 0
-                    THEN 1 ELSE 0 END AS cont,
-               max(pos) OVER (PARTITION BY doc_id) + 1 AS L
-        FROM toks
-    ),
+    f"""
+    WITH {_bio_tagged_sql(_SUBWORD_TAGS_SQL)},
     isl AS (
         SELECT doc_id, pos,
                max(pos) OVER (PARTITION BY doc_id, grp) AS isl_end
@@ -1858,25 +1717,10 @@ def w_bio_decode_subword(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle implements the same closed form end-to-end at hash level."""
     from ..operators.bio import bio_span_decode_subword
 
-    docs = _fanout(_t(spark, sf_dir, "documents"), "doc_id")
-    ntok = docs.select(
-        "doc_id", F.size(X.tokens(X.normalize_text(F.col("text")))).alias("n")
-    )
-    toks = ntok.filter(F.col("n") > 0).select(
-        "doc_id", F.explode(F.sequence(F.lit(0), F.col("n") - 1)).alias("pos")
-    )
-    h = H.hex_prefix_to_long(
-        F.md5(F.concat_ws(":", F.col("doc_id"), F.col("pos")))
-    )
-    tag = (
-        F.when(F.pmod(h, F.lit(5)) == 2, 1)
-        .when(F.pmod(h, F.lit(5)).isin(3, 4), 2)
-        .otherwise(0)
-    )
     hc = H.hex_prefix_to_long(
         F.md5(F.concat_ws(":", F.lit("c"), F.col("doc_id"), F.col("pos")))
     )
-    tagged = toks.withColumn("tag", tag).withColumn(
+    tagged = _bio_tags(spark, sf_dir).withColumn(
         "cont", (F.pmod(hc, F.lit(4)) == 0).cast("int")
     )
     return bio_span_decode_subword(tagged).select(

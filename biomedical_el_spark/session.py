@@ -65,6 +65,15 @@ def _export_package_root() -> None:
     os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (root, path) if p)
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 24g: a local session's
+    driver JVM is the whole engine, but a fixed 24g heap on a smaller
+    host lets concurrent sessions grow past the machine and be
+    OOM-killed.  SPARK_DRIVER_MEM overrides it as a deployment setting."""
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(host_mb // 2, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "biomedical_el_spark",
     cores: int | None = None,
@@ -117,7 +126,10 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "32m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         # G1 (the JDK17 default) collapses under multi-threaded allocation
         # in this container (measured 17× slower than ParallelGC at 32
         # threads on an allocation-heavy stage), and auto-sized young gen

@@ -162,6 +162,7 @@ def process_block_batch(
     )
     (
         keys.withColumn("batch_id", F.lit(batch_id))
+        .repartition("bucket")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket", "batch_id")
@@ -198,6 +199,7 @@ def process_block_batch(
         new_pairs.unpersist()
     (
         committed.withColumn("batch_id", F.lit(batch_id))
+        .repartition("pbucket")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("pbucket", "batch_id")
@@ -601,7 +603,9 @@ def process_linkage_batch(
     A config the stream cannot honor, or a store marked with another
     format, config or `n_buckets`, raises ValueError before any write.
 
-    Stores (all bucket-first, dynamic-overwrite idempotent):
+    Stores (all bucket-first, dynamic-overwrite idempotent; each write
+    is hash-repartitioned by its bucket column, so a (bucket, batch_id)
+    leaf is one file, not one per writing task):
       features/fbucket/batch_id — narrow hydration relation
       blocks/bucket/batch_id, pairs/pbucket/batch_id — as before
       links/pbucket/batch_id   — scored ≥ τ edges of this batch's pairs
@@ -620,6 +624,7 @@ def process_linkage_batch(
     feats = feats.persist()
     (
         feats.withColumn("batch_id", F.lit(batch_id))
+        .repartition("fbucket")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("fbucket", "batch_id")
@@ -659,6 +664,7 @@ def process_linkage_batch(
     (
         links.withColumn("pbucket", _bucket(n_buckets, "url_a", "url_b"))
         .withColumn("batch_id", F.lit(batch_id))
+        .repartition("pbucket")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("pbucket", "batch_id")

@@ -1,6 +1,7 @@
 """The session factory's worker daemon: Spark's own archives are not
 re-read per task, archives added mid-session still import, and a
-spark-submit session (`cluster=True`) keeps Spark's stock daemon."""
+spark-submit session (`cluster=True`) keeps Spark's stock daemon.  The
+driver heap defaults to half the host's memory."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import zipfile
 from unittest import mock
 
 import pandas as pd
+import pytest
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -67,7 +69,10 @@ def test_add_py_file_imports_mid_session(spark, tmp_path):
     assert {r[0] for r in got} == {42}
 
 
-def test_only_local_sessions_set_the_daemon_module(monkeypatch):
+@pytest.fixture
+def builder_options(monkeypatch):
+    """The options `get_spark` sets on the builder, captured instead of
+    building a session."""
     options = {}
 
     def capture(builder):
@@ -77,8 +82,31 @@ def test_only_local_sessions_set_the_daemon_module(monkeypatch):
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
     monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+    return options
+
+
+def test_only_local_sessions_set_the_daemon_module(builder_options):
+    options = builder_options
     get_spark(cluster=True, shuffle_partitions=8)
     assert "spark.app.name" in options
     assert "spark.python.daemon.module" not in options
     get_spark(cores=2, shuffle_partitions=8)
     assert options["spark.python.daemon.module"] == "biomedical_el_spark._daemon"
+
+
+def test_driver_memory_defaults_to_half_the_host(builder_options, monkeypatch):
+    """Half of physical memory, capped at 24g; SPARK_DRIVER_MEM wins."""
+    sysconf = os.sysconf
+    host = {}
+    monkeypatch.setattr(
+        os, "sysconf",
+        lambda name: host[name] if name in host else sysconf(name),
+    )
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    for gib, want in ((15, "7680m"), (64, "24576m")):
+        host.update(SC_PAGE_SIZE=4096, SC_PHYS_PAGES=gib * 2**30 // 4096)
+        get_spark(cores=2, shuffle_partitions=8)
+        assert builder_options["spark.driver.memory"] == want
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    get_spark(cores=2, shuffle_partitions=8)
+    assert builder_options["spark.driver.memory"] == "3g"

@@ -456,6 +456,24 @@ def test_store_reads_use_the_writers_schema(spark, tmp_path):
         assert got.count() == inferred.count() > 0, name
 
 
+def test_store_leaves_hold_one_file(spark, tmp_path):
+    """Each store write is repartitioned by its bucket column: after a
+    2-shard run every (bucket, batch_id) leaf holds one parquet file,
+    not one per writing task."""
+    store = str(tmp_path / "store_files")
+    pages = generate_pages(spark, 200, cluster_size=4).drop("entity_id").cache()
+    for i in range(2):
+        shard = pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == i)
+        process_linkage_batch(shard, i, store, n_buckets=8)
+    for name in ("features", "blocks", "pairs", "links"):
+        files = {
+            root: sum(f.endswith(".parquet") for f in names)
+            for root, _, names in os.walk(os.path.join(store, name))
+            if "batch_id=" in root
+        }
+        assert files and set(files.values()) == {1}, (name, files)
+
+
 def test_stream_rejects_unsupported_config(spark, tmp_path):
     """A config the stream cannot honor raises ValueError before any
     write: the hyperplane channel, a block-size cap, the band-match
