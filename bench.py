@@ -91,7 +91,11 @@ def _spin_probe(cores: int, secs: float = 2.5) -> dict:
         q.put(n / (time.time() - t0))
 
     q = mp.Queue()
-    ps = [mp.Process(target=spin, args=(q, i, secs)) for i in range(cores)]
+    # the first `cores` CPUs this process may run on: pinning a CPU
+    # outside its affinity mask raises in the child, and q.get() below
+    # would then wait forever
+    cpus = sorted(os.sched_getaffinity(0))[:cores]
+    ps = [mp.Process(target=spin, args=(q, c, secs)) for c in cpus]
     [p.start() for p in ps]
     rates = sorted(q.get() for _ in ps)
     [p.join() for p in ps]

@@ -65,36 +65,17 @@ def embed_text(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
 
 def seeded_planes(num_planes: int, seed: int, dim: int = DIM) -> np.ndarray:
     """The shared random-hyperplane matrix [dim, num_planes]: one seeded
-    draw used by BOTH the batched UDF (scale path) and the JVM/SQL
-    expression form (`hyperplane_bucket_expr`), so bucket keys agree."""
+    draw used by BOTH the batched UDF (scale path) and its DuckDB
+    rendering (`hyperplane_bucket_sql`), so bucket keys agree."""
     return np.random.RandomState(seed).randn(dim, num_planes)
 
 
-def hyperplane_bucket_expr(vec, num_planes: int = 4, seed: int = 7, dim: int = DIM):
-    """Hyperplane LSH bucket as a pure JVM expression (no Python): for
-    each plane, a left-associated literal dot product; bucket = packed
-    sign bits.  Exactly reproducible in any SQL engine by emitting the
-    same literals in the same order (plans/catalog.py builds the DuckDB
-    oracle from this same matrix) — which is what makes the scale-path
-    ANN oracle-checkable, unlike an opaque numpy matmul."""
-    from functools import reduce
-
-    planes = seeded_planes(num_planes, seed, dim)
-    bucket = F.lit(0)
-    for p in range(num_planes):
-        dot = reduce(
-            lambda acc, d: acc + vec.getItem(d).cast("double") * F.lit(float(planes[d, p])),
-            range(1, dim),
-            vec.getItem(0).cast("double") * F.lit(float(planes[0, p])),
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
-
-
 def hyperplane_bucket_sql(col: str, num_planes: int = 4, seed: int = 7, dim: int = DIM) -> str:
-    """The DuckDB rendering of `hyperplane_bucket_expr`: same plane
-    literals, same left-associated addition order, so the double-precision
-    sign of every dot product is bit-identical across engines."""
+    """Hyperplane LSH bucket as DuckDB SQL — the oracle form of
+    `hyperplane_lsh_udf`: for each plane, a left-associated literal dot
+    product; bucket = packed sign bits.  Same seeded planes, so the
+    buckets equal the UDF's (tests/test_ann.py checks every fixture
+    embedding)."""
     planes = seeded_planes(num_planes, seed, dim)
     parts = []
     for p in range(num_planes):

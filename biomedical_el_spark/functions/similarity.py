@@ -19,6 +19,16 @@ from pyspark.sql import types as T
 # ------------------------------------------------------------------ cosine
 
 
+def dot_expr(a: Column, b: Column) -> Column:
+    """Pure-SQL double dot product of two numeric array columns — the
+    reference's scoring function (utils_e2e_span.py:422-424), JVM-side."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def cosine_expr(a: Column, b: Column) -> Column:
     """Pure-SQL cosine over two array<float> columns (JVM-side; exactly
     mirrored by DuckDB's list ops for oracle checks).
@@ -30,11 +40,7 @@ def cosine_expr(a: Column, b: Column) -> Column:
     dot/(na*nb) would throw DIVIDE_BY_ZERO and kill the scoring stage.
     Convention: 0.0, matching the flagship scorer's numpy cosine
     (`scoring._score_kernels_udf`)."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = dot_expr(a, b)
     na = F.sqrt(
         F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
     )
@@ -42,15 +48,6 @@ def cosine_expr(a: Column, b: Column) -> Column:
         F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
     )
     return F.when(na * nb == 0, F.lit(0.0)).otherwise(dot / (na * nb))
-
-
-@F.pandas_udf(T.DoubleType())
-def dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Raw dot product — the reference's exact scoring function
-    (utils_e2e_span.py:422-424)."""
-    av = np.stack(a.to_numpy())
-    bv = np.stack(b.to_numpy())
-    return pd.Series(np.einsum("ij,ij->i", av, bv))
 
 
 # ------------------------------------------------------- jaro-winkler

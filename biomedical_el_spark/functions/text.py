@@ -27,7 +27,7 @@ def normalize_text(col: Column) -> Column:
     """Canonical normalization: lower, strip control chars, collapse ws.
 
     Mirrors BasicTokenizer semantics (tokenization_bert.py:298-340) minus
-    accent stripping (`strip_accents_udf` below is the NFD path, applied
+    accent stripping (`strip_accents_batch` below is the NFD path, applied
     only when configured — the default pipeline keeps bytes stable per
     the input_hint invariant).
     """
@@ -52,23 +52,6 @@ def strip_accents_batch(s):
         )
 
     return s.fillna("").astype(str).map(_strip)
-
-
-def strip_accents_udf(col: Column) -> Column:
-    """Arrow-batched accent stripping (non-English corpora normalize
-    'café' and 'cafe\\u0301' to the same blocking keys).  Python-side by
-    necessity — Spark SQL has no Unicode-normalization builtin — but
-    batched per Arrow block, never per Spark row."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def _fn(s):
-        return strip_accents_batch(s)
-
-    # real class objects: `from __future__ import annotations` stringifies
-    # literal hints, which pandas_udf cannot resolve for nested functions
-    _fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return F.pandas_udf(T.StringType())(_fn)(col)
 
 
 def tokens(col: Column) -> Column:

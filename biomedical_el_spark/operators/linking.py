@@ -1,7 +1,9 @@
 """Entity linking — the reference's core task as Spark operators:
 mention × entity-dictionary scoring (J3/J4), top-k candidates (W1),
 argmax linking (W2), hard-negative mining (J5), gold/pred sinks (S8) and
-the span-overlap evaluation join (J6).
+the span-overlap evaluation join (J6).  `rank_by_score` is the one
+top-k rule of the package: the catalog's ANN and top-k queries rank
+with it too.
 
 Reference path (SURVEY.md §3.3): embed all ~29k entities
 (run_e2e_span.py:343-366), embed mentions (mean-pool,
@@ -14,11 +16,13 @@ no all-pairs shuffle ever materializes.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.embedder import embed_text
-from ..functions.similarity import dot_udf
+from ..functions.similarity import dot_expr
 
 
 def embed_entities(entities: DataFrame) -> DataFrame:
@@ -43,8 +47,24 @@ def score_mentions_against_entities(
     return mvec.join(F.broadcast(entity_vecs)).select(
         *id_cols,
         "entity_id",
-        dot_udf(F.col("mvec"), F.col("evec")).alias("score"),
+        dot_expr(F.col("mvec"), F.col("evec")).alias("score"),
     )
+
+
+def rank_by_score(
+    df: DataFrame,
+    by: str | Sequence[str],
+    score: str,
+    tie: str,
+    name: str = "rank",
+) -> DataFrame:
+    """`df` plus a `name` column numbering each `by` group's rows from 1:
+    highest `score` first, ties to the lower `tie`.  Callers keep the
+    rank range they need."""
+    win = Window.partitionBy(*([by] if isinstance(by, str) else by)).orderBy(
+        F.desc(score), F.asc(tie)
+    )
+    return df.withColumn(name, F.row_number().over(win))
 
 
 def topk_candidates(
@@ -53,12 +73,10 @@ def topk_candidates(
     id_cols: tuple[str, ...] = ("segment_id", "start_index", "end_index"),
 ) -> DataFrame:
     """W1: per-mention top-k candidate entities (reference torch.topk
-    k=10, utils_e2e_span.py:426; --num_candidates run_e2e_span.py:883)."""
-    win = Window.partitionBy(*id_cols).orderBy(F.desc("score"), F.asc("entity_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-    )
+    k=10, utils_e2e_span.py:426; --num_candidates run_e2e_span.py:883),
+    ties to the lower entity_id."""
+    ranked = rank_by_score(scored, id_cols, "score", "entity_id")
+    return ranked.filter(F.col("rank") <= k)
 
 
 def link_top1(
@@ -80,18 +98,12 @@ def hard_negatives(
     id_cols: tuple[str, ...] = ("segment_id", "start_index", "end_index"),
 ) -> DataFrame:
     """J5: per-mention top-k entities EXCLUDING the gold label — the
-    reference's hard-negative mining (utils_e2e_span.py:408-449) as an
-    anti-join + window instead of an accumulator dict.  Deduped across
+    reference's hard-negative mining (utils_e2e_span.py:408-449) as the
+    gold anti-join + `topk_candidates` instead of an accumulator dict.  Deduped across
     epochs by construction (SO2: distinct)."""
     g = gold.select(*id_cols, F.col("label_candidate_id").alias("entity_id"))
     negs = scored.join(g, [*id_cols, "entity_id"], "left_anti")
-    win = Window.partitionBy(*id_cols).orderBy(F.desc("score"), F.asc("entity_id"))
-    return (
-        negs.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-        .distinct()
-    )
+    return topk_candidates(negs, k, id_cols).drop("rank").distinct()
 
 
 def write_gold_pred_csv(

@@ -17,12 +17,15 @@ written once per engine:
   `_doc_pairs`; `_SHINGLE_SQL`, `_BLOCKS_SQL`, `_PAIRS_SQL`;
 - near-dup verify: `_shingled_pairs` + `_jaccard`; `_SHINGLED_PAIRS_SQL`
   + `_JACCARD_SQL`; connected components: `_components_sql`;
+- ranking (best first, ties to the lower id): `rank_by_score` from
+  `operators/linking.py`, which the entity-linking top-k also uses;
+  `_rank_sql`.  Each caller keeps its own rank range;
 - ANN top-k, one filter-and-verify similarity join with five candidate
   filters: each query builds its (query_id, neighbor_id) candidates and
-  `_top5` verifies them (exact cosine, top 5, ties to the lower
-  neighbor_id); `_ann_sql` is its oracle, over `_cos_sql`.  The IVF
-  oracles share their cells/probes (`_ivf_sql`) and k-means writes each
-  Lloyd iteration from one template (`_lloyd_sql`);
+  `_top5` verifies them (exact cosine, top 5 by `rank_by_score`, ties
+  to the lower neighbor_id); `_ann_sql` is its oracle, over `_cos_sql`.
+  The IVF oracles share their cells/probes (`_ivf_sql`) and k-means
+  writes each Lloyd iteration from one template (`_lloyd_sql`);
 - BIO tag stream: `_bio_tags`; `_bio_tagged_sql`.
 """
 
@@ -31,8 +34,10 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
+import pyarrow.dataset as pads
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions import hashing as H
 from ..functions import text as X
@@ -41,6 +46,7 @@ from ..functions.similarity import cosine_expr, jaccard_expr, jaro_winkler_udf
 from ..operators import blocking as B
 from ..operators import pairs as P
 from ..operators.cc import connected_components
+from ..operators.linking import rank_by_score
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -49,7 +55,16 @@ ORACLES: dict[str, str] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Table `name` of the fixture at `sf_dir` (a parquet file or
+    directory), read with the schema of its parquet footer, which the
+    driver reads without a Spark job; `spark.read.parquet` alone infers
+    it with a one-task job per call.  Timestamps written without a UTC
+    adjustment map to timestamp_ntz, as Spark infers them."""
+    path = f"{sf_dir}/{name}.parquet"
+    schema = from_arrow_schema(
+        pads.dataset(path, format="parquet").schema, prefer_timestamp_ntz=True
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def _fanout(df: DataFrame, *cols: str) -> DataFrame:
@@ -478,9 +493,8 @@ def _scored(cands: DataFrame, qv: str, nv: str, *keep: str) -> DataFrame:
 def _top5(cands: DataFrame, qv: str, nv: str) -> DataFrame:
     """The ANN result rule: per query, the 5 candidates of highest cosine,
     ties to the lower neighbor_id.  `_ann_sql` is its oracle."""
-    win = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
-        _scored(cands, qv, nv).withColumn("rank", F.row_number().over(win))
+        rank_by_score(_scored(cands, qv, nv), "query_id", "cos", "neighbor_id")
         .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "rank")
     )
@@ -514,11 +528,15 @@ def _cos_sql(a: str, b: str) -> str:
     return f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
 
 
-_TOP5_SQL = """
+def _rank_sql(by: str, score: str, tie: str, name: str = "rank") -> str:
+    """`rank_by_score`'s rank column in DuckDB: per `by` group, highest
+    `score` first, ties to the lower `tie`."""
+    return f"row_number() OVER (PARTITION BY {by} ORDER BY {score} DESC, {tie}) AS {name}"
+
+
+_TOP5_SQL = f"""
     SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
+        SELECT query_id, neighbor_id, {_rank_sql("query_id", "cos", "neighbor_id")}
         FROM scored
     ) WHERE rank <= 5
 """
@@ -659,9 +677,7 @@ def _ivf_sql(ranked: str) -> str:
         WHERE vec_id % 97 = 3
     ),
     ranked AS (
-        SELECT a.vec_id, c.cid,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {_cos_sql("a", "c")} DESC, c.cid) AS rn
+        SELECT a.vec_id, c.cid, {_rank_sql("a.vec_id", _cos_sql("a", "c"), "c.cid", "rn")}
         FROM embeddings a, cents c
     )"""
     ),
@@ -689,16 +705,12 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = vecs.filter(F.col("vec_id") % 97 == 3).select(
         F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
     )
-    aw = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos_c"), F.asc("centroid_id")
-    )
-    ranked = (
-        vecs.crossJoin(F.broadcast(cents))
-        .select(
+    ranked = rank_by_score(
+        vecs.crossJoin(F.broadcast(cents)).select(
             "vec_id", "v", "centroid_id",
             cosine_expr(F.col("v"), F.col("cv")).alias("cos_c"),
-        )
-        .withColumn("rn", F.row_number().over(aw))
+        ),
+        "vec_id", "cos_c", "centroid_id", "rn",
     )
     cells = ranked.filter(F.col("rn") == 1).select(
         F.col("vec_id").alias("neighbor_id"),
@@ -726,8 +738,7 @@ def _kmeans_rank_sql(n: int) -> str:
         FROM qv v, c{n - 1} c
     ),
     r{n} AS (
-        SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, cid) AS rn
+        SELECT vec_id, cid, {_rank_sql("vec_id", "d", "cid", "rn")}
         FROM d{n}
     ),"""
 
@@ -858,8 +869,7 @@ def _ivf_kmeans_parts(
     d3 = qv.crossJoin(F.broadcast(cents)).select(
         "vec_id", "cid", int_dot(F.col("q"), F.col("c")).alias("d")
     )
-    rw = Window.partitionBy("vec_id").orderBy(F.desc("d"), F.asc("cid"))
-    ranked = d3.withColumn("rn", F.row_number().over(rw))
+    ranked = rank_by_score(d3, "vec_id", "d", "cid", "rn")
     cells = ranked.filter(F.col("rn") == 1).select(
         F.col("vec_id").alias("neighbor_id"), F.col("cid").alias("cell")
     )
@@ -1040,11 +1050,9 @@ def w_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w_topk_per_user",
-    """
+    f"""
     SELECT event_id, user_id, rnk FROM (
-        SELECT event_id, user_id,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY value DESC, event_id) AS rnk
+        SELECT event_id, user_id, {_rank_sql("user_id", "value", "event_id", "rnk")}
         FROM events
     ) WHERE rnk <= 3
     """,
@@ -1052,9 +1060,8 @@ def w_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w_topk_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 top-k per group (reference torch.topk, utils_e2e_span.py:426)."""
     ev = _t(spark, sf_dir, "events")
-    win = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
     return (
-        ev.withColumn("rnk", F.row_number().over(win))
+        rank_by_score(ev, "user_id", "value", "event_id", "rnk")
         .filter(F.col("rnk") <= 3)
         .select("event_id", "user_id", "rnk")
     )
@@ -1394,11 +1401,9 @@ def er_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w_hard_negative_shape",
-    """
+    f"""
     SELECT user_id, event_id, rnk - 1 AS neg_rank FROM (
-        SELECT user_id, event_id,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY value DESC, event_id) AS rnk
+        SELECT user_id, event_id, {_rank_sql("user_id", "value", "event_id", "rnk")}
         FROM events
     ) WHERE rnk BETWEEN 2 AND 4
     """,
@@ -1407,9 +1412,8 @@ def w_hard_negative_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5 hard-negative mining shape on shared testdata: per group, the
     top-k items EXCLUDING the top-1 'gold' (utils_e2e_span.py:408-449)."""
     ev = _t(spark, sf_dir, "events")
-    win = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
     return (
-        ev.withColumn("rnk", F.row_number().over(win))
+        rank_by_score(ev, "user_id", "value", "event_id", "rnk")
         .filter((F.col("rnk") >= 2) & (F.col("rnk") <= 4))
         .select("user_id", "event_id", (F.col("rnk") - 1).alias("neg_rank"))
     )

@@ -48,7 +48,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.cc import connected_components, with_singletons
@@ -67,8 +67,9 @@ STORE_MARKER = "_store.json"
 CLUSTERS = "clusters"
 CLUSTERS_MIRROR = "clusters_by_comp"
 # The schema each store's writer fixes: its data columns, then the
-# partition columns of its directories.  `read_store_buckets` reads with
-# it; inferring it instead runs a one-task parquet footer job per read.
+# partition columns of its directories.  Every store read goes through
+# `_store_reader`, which reads with it; inferring it instead runs a
+# one-task parquet footer job per read.
 STORE_SCHEMAS = {
     "features": "url string, vec array<tinyint>, sig array<int>, prefix string, "
     "fbucket int, batch_id int",
@@ -102,6 +103,29 @@ def _bucket_ids(df: DataFrame, *cols: str | Column) -> list[list[int]]:
     return [sorted(ids) for ids in row]
 
 
+def _store_reader(spark: SparkSession, store: str) -> DataFrameReader:
+    """A reader of the store directory `store`, with its `STORE_SCHEMAS`
+    entry (by directory name) and `store` as the partition base path."""
+    schema = STORE_SCHEMAS[os.path.basename(store)]
+    return spark.read.schema(schema).option("basePath", store)
+
+
+def _write_batch(df: DataFrame, store: str, col: str, batch_id: int) -> None:
+    """Write `df` as batch `batch_id` of the bucket-first `store`
+    (`<col>=<b>/batch_id=<n>`).  It is hash-repartitioned by its bucket
+    column `col`, so each leaf is one file, not one per writing task, and
+    written with a dynamic partition overwrite, so a retried batch
+    replaces its own leaves instead of appending duplicates."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .repartition(col)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col, "batch_id")
+        .parquet(store)
+    )
+
+
 def read_store_buckets(
     spark: SparkSession, store: str, buckets: list[int], col: str = "bucket"
 ) -> DataFrame | None:
@@ -111,15 +135,13 @@ def read_store_buckets(
     on the full store: pruning is then guaranteed by construction (and
     directly testable as rows-read), not dependent on Catalyst partition
     pruning, and the file listing never touches uncovered buckets.  The
-    schema is the store's `STORE_SCHEMAS` entry (by directory name), so
-    the read runs no job.  Returns None when none of the buckets exist
-    yet (empty store)."""
+    read runs no job (`_store_reader`).  Returns None when none of the
+    buckets exist yet (empty store)."""
     paths = [f"{store}/{col}={b}" for b in sorted(set(buckets))]
     paths = [p for p in paths if os.path.isdir(p)]
     if not paths:
         return None
-    schema = STORE_SCHEMAS[os.path.basename(store)]
-    return spark.read.schema(schema).option("basePath", store).parquet(*paths)
+    return _store_reader(spark, store).parquet(*paths)
 
 
 def process_block_batch(
@@ -160,14 +182,7 @@ def process_block_batch(
         .withColumn("bucket", F.pmod(F.col("block_key"), F.lit(n_buckets)).cast("int"))
         .persist()
     )
-    (
-        keys.withColumn("batch_id", F.lit(batch_id))
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "batch_id")
-        .parquet(f"{store_dir}/blocks")
-    )
+    _write_batch(keys, f"{store_dir}/blocks", "bucket", batch_id)
     # incremental pairs: this batch's keys × accumulated keys, reading
     # only the store buckets this batch can possibly match
     [buckets] = _bucket_ids(keys, "bucket")
@@ -197,14 +212,7 @@ def process_block_batch(
         committed = new_pairs.join(earlier, ["url_a", "url_b"], "left_anti")
         committed = committed.localCheckpoint()
         new_pairs.unpersist()
-    (
-        committed.withColumn("batch_id", F.lit(batch_id))
-        .repartition("pbucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pbucket", "batch_id")
-        .parquet(f"{store_dir}/pairs")
-    )
+    _write_batch(committed, f"{store_dir}/pairs", "pbucket", batch_id)
     keys.unpersist()
     return committed
 
@@ -275,7 +283,7 @@ def compact_blocks_store(
     shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(old, ignore_errors=True)
     (
-        spark.read.option("basePath", base)
+        _store_reader(spark, base)
         .parquet(*absorb)
         .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
         .repartition(len({d for d, _, _ in leaves}), "bucket")
@@ -522,12 +530,13 @@ def read_clusters(spark: SparkSession, store_dir: str) -> DataFrame:
     _recover_clusters(store_dir)
     base = f"{store_dir}/clusters"
     spark.catalog.refreshByPath(base)
-    nodes = spark.read.parquet(f"{store_dir}/features").select(
+    feats = f"{store_dir}/features"
+    nodes = _store_reader(spark, feats).parquet(feats).select(
         F.col("url").alias("node")
     ).distinct()
     if not os.path.isdir(base):
         return nodes.withColumn("component", F.col("node"))
-    mapped = spark.read.parquet(base).select("node", "component")
+    mapped = _store_reader(spark, base).parquet(base).select("node", "component")
     return with_singletons(mapped, nodes)
 
 
@@ -622,14 +631,7 @@ def process_linkage_batch(
     spark = batch_df.sparkSession
     feats = featurize(batch_df, cfg).withColumn("fbucket", _bucket(n_buckets, "url"))
     feats = feats.persist()
-    (
-        feats.withColumn("batch_id", F.lit(batch_id))
-        .repartition("fbucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("fbucket", "batch_id")
-        .parquet(f"{store_dir}/features")
-    )
+    _write_batch(feats, f"{store_dir}/features", "fbucket", batch_id)
     pairs = process_block_batch(
         feats.drop("fbucket"), batch_id, store_dir, cfg, n_buckets
     )
@@ -661,14 +663,9 @@ def process_linkage_batch(
         cfg.weights,
     )
     links = match_links(scored, cfg.tau).persist()
-    (
-        links.withColumn("pbucket", _bucket(n_buckets, "url_a", "url_b"))
-        .withColumn("batch_id", F.lit(batch_id))
-        .repartition("pbucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pbucket", "batch_id")
-        .parquet(f"{store_dir}/links")
+    _write_batch(
+        links.withColumn("pbucket", _bucket(n_buckets, "url_a", "url_b")),
+        f"{store_dir}/links", "pbucket", batch_id,
     )
     # the links' endpoints are pair endpoints, and a url's node bucket is
     # its feature bucket: the lift's nbuckets need no collect of their own

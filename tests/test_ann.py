@@ -19,7 +19,7 @@ def test_lsh_topk_recall_floor(spark):
     give 1/16 = 0.0625, so a 0.09 floor separates working hyperplane
     bucketing from a broken seed/key-packing regression.  (Exact bucket
     correctness is separately gated by the DuckDB oracle hash and the
-    expr-vs-udf equality test below.)"""
+    sql-vs-udf equality test below.)"""
     brute = {
         (r["query_id"], r["neighbor_id"])
         for r in catalog.ann_cosine_topk(spark, SF_DIR).collect()
@@ -100,21 +100,27 @@ def test_ivf_kmeans_recall_at_equal_budget(spark):
     assert recall >= 0.25, f"k-means IVF recall@5 too low: {recall:.3f}"
 
 
-def test_lsh_bucket_expr_matches_udf(spark):
-    """The JVM-expression bucketing (oracle-checkable) and the batched
-    numpy UDF (flagship scale path) must assign identical buckets — they
-    share one seeded plane matrix."""
+def test_lsh_bucket_sql_matches_udf(spark):
+    """The LSH oracles' bucket (`hyperplane_bucket_sql` on DuckDB) and
+    the LSH queries' bucket (`hyperplane_lsh_udf` on Spark) agree on
+    every fixture embedding — they share one seeded plane matrix."""
+    import duckdb
+
     from biomedical_el_spark.functions.embedder import (
-        hyperplane_bucket_expr,
+        hyperplane_bucket_sql,
         hyperplane_lsh_udf,
     )
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    both = emb.select(
-        hyperplane_bucket_expr(F.col("embedding"), num_planes=4, seed=7).alias("e"),
-        hyperplane_lsh_udf(num_planes=4, seed=7)(F.col("embedding")).alias("u"),
+    path = f"{SF_DIR}/embeddings.parquet"
+    bucket = hyperplane_lsh_udf(num_planes=4, seed=7)(F.col("embedding"))
+    emb = spark.read.parquet(path).select("vec_id", bucket.alias("b"))
+    spark_buckets = {r["vec_id"]: r["b"] for r in emb.collect()}
+    sql = hyperplane_bucket_sql("embedding", num_planes=4, seed=7)
+    duck_buckets = dict(
+        duckdb.connect().execute(f"SELECT vec_id, {sql} FROM '{path}'").fetchall()
     )
-    assert both.filter(F.col("e") != F.col("u")).count() == 0
+    assert len(spark_buckets) > 0
+    assert duck_buckets == spark_buckets
 
 
 def test_cosine_expr_zero_norm_ansi_safe(spark):

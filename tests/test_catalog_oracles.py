@@ -81,7 +81,7 @@ def test_fanout_skips_multi_split_scans(spark, tmp_path):
     """On a fixture with defaultParallelism files per table the scan
     already plans that many splits: the fanned-out queries carry no
     REPARTITION_BY_NUM and return the single-file fixture's rows.  The
-    split count is read without a Spark job."""
+    scan (`_t`) and its split count run no Spark job."""
     sc = spark.sparkContext
     n = sc.defaultParallelism
     for t in ("documents", "embeddings"):
@@ -91,11 +91,10 @@ def test_fanout_skips_multi_split_scans(spark, tmp_path):
         assert len(list((tmp_path / f"{t}.parquet").glob("*.parquet"))) >= n
     multi = str(tmp_path)
 
-    scans = [catalog._t(spark, sf, "embeddings") for sf in (SF_DIR, multi)]
     sc.setJobGroup("fanout", "split count")
     try:
-        for scan in scans:
-            catalog._fanout(scan, "vec_id")
+        for sf in (SF_DIR, multi):
+            catalog._fanout(catalog._t(spark, sf, "embeddings"), "vec_id")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("fanout") == []

@@ -132,6 +132,18 @@ def test_topk_and_hard_negatives(spark, corpus):
         seg_ms, ["segment_id", "start_index", "end_index"]
     ).filter(F.col("entity_id") == F.col("label_candidate_id"))
     assert j.count() == 0
+    # tied scores rank the lower entity_id first
+    tied = spark.createDataFrame(
+        [("s", 0, 1, "E2", 0.9), ("s", 0, 1, "E1", 0.9), ("s", 0, 1, "E3", 0.5)],
+        "segment_id string, start_index int, end_index int, entity_id string, score double",
+    )
+    ranked = [(r["entity_id"], r["rank"]) for r in L.topk_candidates(tied, k=3).collect()]
+    assert sorted(ranked, key=lambda x: x[1]) == [("E1", 1), ("E2", 2), ("E3", 3)]
+    gold = spark.createDataFrame(
+        [("s", 0, 1, "E3")],
+        "segment_id string, start_index int, end_index int, label_candidate_id string",
+    )
+    assert [r["entity_id"] for r in L.hard_negatives(tied, gold, k=1).collect()] == ["E1"]
 
 
 def test_gold_pred_sink(spark, corpus, tmp_path):

@@ -456,6 +456,24 @@ def test_store_reads_use_the_writers_schema(spark, tmp_path):
         assert got.count() == inferred.count() > 0, name
 
 
+def test_read_clusters_runs_no_job_before_its_action(spark, tmp_path):
+    """`read_clusters` reads the features and clusters stores with their
+    writers' schemas: building the frame runs no Spark job, and the
+    frame holds every ingested page."""
+    store = str(tmp_path / "clusters_read")
+    pages = generate_pages(spark, 60, cluster_size=4).drop("entity_id").cache()
+    process_linkage_batch(pages, 0, store, n_buckets=8)
+    assert os.path.isdir(os.path.join(store, "clusters"))
+    sc = spark.sparkContext
+    sc.setJobGroup("read-clusters", "read_clusters")
+    try:
+        clusters = read_clusters(spark, store)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("read-clusters") == []
+    assert clusters.count() == 60
+
+
 def test_store_leaves_hold_one_file(spark, tmp_path):
     """Each store write is repartitioned by its bucket column: after a
     2-shard run every (bucket, batch_id) leaf holds one parquet file,

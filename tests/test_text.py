@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from biomedical_el_spark.functions.text import (
     strip_accents_batch,
-    strip_accents_udf,
     wordpiece_tokens,
 )
 
@@ -38,18 +37,9 @@ def test_wordpiece_long_word_unk(spark):
     assert rows[0]["t"] == ["[UNK]"]
 
 
-def test_strip_accents_spark_udf(spark):
-    df = spark.createDataFrame(
-        [("café",), ("café",), ("naïve Über",), (None,)], "text string"
-    )
-    rows = df.select(strip_accents_udf(F.col("text")).alias("s")).collect()
-    got = [r["s"] for r in rows]
-    assert got[0] == "cafe"
-    assert got[1] == "cafe"  # pre-decomposed form normalizes identically
-    assert got[2] == "naive Uber"
-    assert got[3] == ""
-
-
 def test_strip_accents_batch_pure():
-    out = strip_accents_batch(pd.Series(["élan", "ascii only"]))
-    assert list(out) == ["elan", "ascii only"]
+    out = strip_accents_batch(
+        pd.Series(["élan", "ascii only", "caf\u00e9", "cafe\u0301", "naïve Über", None])
+    )
+    # the precomposed and the decomposed form strip alike; None -> ""
+    assert list(out) == ["elan", "ascii only", "cafe", "cafe", "naive Uber", ""]

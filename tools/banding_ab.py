@@ -13,8 +13,9 @@ weak-scaling curve pays for them at the gate step):
           stricter-banding alternative — taxes true and junk pairs
           alike (every band needs one more row to agree).
 
-Each arm runs the flagship in a fresh JVM pinned to 16 cores on the
-same materialized corpus, at EACH requested size, so the report shows
+Each arm runs the flagship in a fresh JVM pinned to the first
+min(16, available) CPUs of this process's affinity set, on the same
+materialized corpus, at EACH requested size, so the report shows
 not just the volume cut but the growth SLOPE.  Reports wall sec,
 distinct candidate pairs (+ per page), candidate recall (gold pairs
 surviving into the capped pair set), and unconditioned link P/R/F1.
@@ -39,14 +40,13 @@ from biomedical_el_spark.datagen.pages import gold_pairs
 from biomedical_el_spark import metrics as M
 from pyspark.sql import functions as F
 
-arm = sys.argv[1]; pages_dir = sys.argv[2]
+arm = sys.argv[1]; pages_dir = sys.argv[2]; cores = int(sys.argv[3])
 cfgs = {
     "base": LinkageConfig(),
     "min2": LinkageConfig(min_band_matches=2),
     "b12r3": LinkageConfig(num_hashes=36, bands=12, rows_per_band=3),
 }
 cfg = cfgs[arm]
-cores = 16
 spark = get_spark("banding-ab", cores=cores, shuffle_partitions=2 * cores)
 pages = spark.read.parquet(pages_dir)
 n_pages = pages.count()
@@ -88,9 +88,10 @@ print("RESULT " + json.dumps({
 def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    from tools.scaling_bench import ensure_corpora  # noqa: E402
+    from tools.scaling_bench import ensure_corpora, pinned_cpus  # noqa: E402
 
     sizes = [int(a) for a in sys.argv[1:]] or [1_000_000, 4_000_000]
+    cpus = pinned_cpus(min(16, len(os.sched_getaffinity(0))))
     root = os.environ.get("SCALING_CORPUS_ROOT", "/tmp/scaling_corpora")
     dirs = ensure_corpora(repo, sizes, root)
 
@@ -100,8 +101,8 @@ def main() -> None:
         # interleave arms per size so host drift hits all arms equally
         for arm in ("base", "min2", "b12r3"):
             proc = subprocess.run(
-                ["taskset", "-c", "0-15", sys.executable, "-c",
-                 RUNNER.replace("@REPO@", repo), arm, dirs[n_pages]],
+                ["taskset", "-c", ",".join(map(str, cpus)), sys.executable, "-c",
+                 RUNNER.replace("@REPO@", repo), arm, dirs[n_pages], str(len(cpus))],
                 capture_output=True, text=True, timeout=3600,
             )
             got = None

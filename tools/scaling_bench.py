@@ -208,6 +208,16 @@ def _disk_preflight(n_pages: int) -> None:
         )
 
 
+def pinned_cpus(n: int) -> list[int]:
+    """The first `n` CPUs of this process's affinity set: the CPUs a
+    pinned leg may run on.  Fails fast when fewer are available, rather
+    than running n task slots on fewer CPUs."""
+    cpus = sorted(os.sched_getaffinity(0))
+    if len(cpus) < n:
+        raise RuntimeError(f"{n} CPUs requested, {len(cpus)} available: {cpus}")
+    return cpus[:n]
+
+
 def run(cores: int, pages_dir: str, repo: str, repeats: int, n_pages: int) -> dict:
     """Run pinned to `cores` physical CPUs (taskset) — the faithful
     emulation of an N-core executor fleet: JVM task threads, Python UDF
@@ -217,20 +227,23 @@ def run(cores: int, pages_dir: str, repo: str, repeats: int, n_pages: int) -> di
     vCPUs stochastically run up to 1.9x slower than their neighbors)."""
     env = dict(os.environ)
     # Memory-fair legs: a 4N-executor fleet has 4N× the memory, so the
-    # pinned stand-in scales heap with cores (6 GB/core — the lo leg's
-    # 24 GB matches the default session).  Without this the hi leg of the
-    # biggest weak point runs 4× the data in a heap that only doubled and
+    # pinned stand-in scales heap with cores (6 GB/core), capped at half
+    # the host's memory as get_spark's own default is, so a small host's
+    # legs are not OOM-killed.  Without this the hi leg of the biggest
+    # weak point runs 4× the data in a heap that only doubled and
     # measures spill, not scaling.  (Young gen stays at the tuned 2 GB
     # for BOTH legs: scaling it per-core was A/B'd at 16c/16M —
     # Xmn8g 1365s vs Xmn2g 1197s — and lost.)
-    env.setdefault("SPARK_DRIVER_MEM", f"{6 * cores}g")
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    env.setdefault("SPARK_DRIVER_MEM", f"{min(6 * 1024 * cores, host_mb // 2)}m")
+    cpu_list = ",".join(map(str, pinned_cpus(cores)))
     best = None
     all_secs = []
     for _ in range(repeats):
         _clean_stale_tmp()
         _disk_preflight(n_pages)
         proc = subprocess.run(
-            ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c",
+            ["taskset", "-c", cpu_list, sys.executable, "-c",
              RUNNER.replace("@REPO@", repo), str(cores), pages_dir],
             capture_output=True, text=True, timeout=7200, env=env,
         )
@@ -275,7 +288,11 @@ def spin_control(cores: int = 16, secs: float = 3.0) -> dict:
         q.put(n / (time.time() - t0))
 
     q = mp.Queue()
-    ps = [mp.Process(target=spin, args=(q, i, secs)) for i in range(cores)]
+    # the first `cores` CPUs this process may run on: pinning a CPU
+    # outside its affinity mask raises in the child, and q.get() below
+    # would then wait forever
+    cpus = sorted(os.sched_getaffinity(0))[:cores]
+    ps = [mp.Process(target=spin, args=(q, c, secs)) for c in cpus]
     [p.start() for p in ps]
     rates = sorted(q.get() for _ in ps)
     [p.join() for p in ps]
@@ -326,6 +343,7 @@ def main() -> None:
     ]
     root = os.environ.get("SCALING_CORPUS_ROOT", "/tmp/scaling_corpora")
 
+    pinned_cpus(hi)  # fail fast, before any corpus is generated
     all_sizes = sorted({*base_sizes, *(x * factor for x in base_sizes)})
     dirs = ensure_corpora(repo, all_sizes, root)
 
