@@ -83,14 +83,13 @@ _MIN_ROUND_PARTITIONS = 8
 _MAX_ROUNDS = 20
 
 
-def _symmetrize(edges: DataFrame, dedup: bool = False) -> DataFrame:
-    """Both directions of every edge.  No distinct by default: the min
-    aggregation inside _star is duplicate-insensitive and each round ends
-    in its own distinct, so deduping here would just add a shuffle."""
+def _symmetrize(edges: DataFrame) -> DataFrame:
+    """Both directions of every edge.  No distinct: the min aggregation
+    inside _star is duplicate-insensitive and each round ends in its own
+    distinct, so deduping here would just add a shuffle."""
     fwd = edges.select(F.col("src"), F.col("dst"))
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    out = fwd.union(rev).filter(F.col("src") != F.col("dst"))
-    return out.distinct() if dedup else out
+    return fwd.union(rev).filter(F.col("src") != F.col("dst"))
 
 
 def _star(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:

@@ -194,12 +194,12 @@ def run_linkage(
     est = _estimate_rows(pages)
     cfg_fp = fingerprint(resolved_config(cfg, est), input_fingerprint)
 
-    def snap(stage: str, compute, partition_by=None) -> DataFrame:
+    def snap(stage: str, compute) -> DataFrame:
         if store is None:
             # no snapshot dir: cache stage outputs so downstream stages and
             # metrics don't recompute the whole upstream pipeline
             return compute().persist()
-        return store.get_or_compute(spark, stage, cfg_fp, compute, partition_by)
+        return store.get_or_compute(spark, stage, cfg_fp, compute)
 
     # Explicit repartition before the feature UDF: parquet split packing
     # can hand a small corpus to a handful of tasks; the CPU-bound encoder

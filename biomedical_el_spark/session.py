@@ -134,16 +134,10 @@ def get_spark(
         # in this container (measured 17× slower than ParallelGC at 32
         # threads on an allocation-heavy stage), and auto-sized young gen
         # (~heap/3) made minor GCs eat ~70% of shuffle-stage wall time —
-        # cap it.  (Measured: pairs stage 40.5s → 10.2s with -Xmn2g.)
-        # SPARK_GC_XMN overrides for memory-scaled bench legs.
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-XX:+UseParallelGC -Xmn{os.environ.get('SPARK_GC_XMN', '2g')}",
-        )
-        .config(
-            "spark.executor.extraJavaOptions",
-            f"-XX:+UseParallelGC -Xmn{os.environ.get('SPARK_GC_XMN', '2g')}",
-        )
+        # cap it.  (Measured: pairs stage 40.5s → 10.2s with -Xmn2g; a
+        # larger young gen lost at 16c/16M, 1365s with -Xmn8g vs 1197s.)
+        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC -Xmn2g")
+        .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC -Xmn2g")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -12,8 +12,8 @@ crash-consistency contract, plus time travel and `rewrite_data_files`
 compaction for free.
 
 The runtime jars are OPTIONAL (this container has none and no network):
-`configure_iceberg` wires the catalog confs onto a SparkSession builder
-when `SPARK_GRAFT_ICEBERG_JARS` points at the Iceberg Spark runtime jar;
+`iceberg_confs` gives the catalog confs to pass to `get_spark(extra_conf=
+...)`, with the Iceberg Spark runtime jar from `SPARK_GRAFT_ICEBERG_JARS`;
 `iceberg_available` probes the loaded JVM so callers (and the test,
 skipped-if-absent) degrade cleanly to the parquet store.
 """
@@ -70,14 +70,10 @@ class IcebergSnapshotStore(SnapshotStore):
     """SnapshotStore over Iceberg tables: one table per stage under
     `graft.<namespace>`, fingerprint committed as a table property in the
     SAME atomic snapshot as the data (`createOrReplace` is one metadata
-    swap), `bucket(url)` partitioning on url-keyed stages so downstream
-    url-equi-joins read co-located files (SURVEY.md: the features table
-    is the one worth bucketing).
+    swap).
 
     Drop-in for `run_linkage(store=...)`: committed/read/write keep the
-    parent signatures and get_or_compute is inherited; partition_by
-    accepts plain column names (identity partitions) — url gets
-    bucket(16) automatically.
+    parent signatures and get_or_compute is inherited.
     """
 
     FP_PROP = "graft.fingerprint"
@@ -108,29 +104,11 @@ class IcebergSnapshotStore(SnapshotStore):
             return False  # table absent (TABLE_OR_VIEW_NOT_FOUND)
         return bool(rows) and rows[0]["value"] == fp
 
-    def write(
-        self,
-        df: DataFrame,
-        stage: str,
-        fp: str,
-        partition_by: list[str] | None = None,
-    ) -> None:
-        from pyspark.sql.functions import bucket, col
-
-        writer = df.writeTo(self._table(stage)).using("iceberg").tableProperty(
-            self.FP_PROP, fp
-        )
-        # DataFrameWriterV2.partitionedBy REPLACES prior partitioning
-        # rather than appending — build the transform list and make ONE
-        # call so multi-column partition_by keeps every column.
-        transforms = [
-            bucket(16, col(c)) if c == "url" else col(c)
-            for c in (partition_by or [])
-        ]
-        if transforms:
-            writer = writer.partitionedBy(transforms[0], *transforms[1:])
+    def write(self, df: DataFrame, stage: str, fp: str) -> None:
         # one atomic metadata swap commits data + fingerprint together
-        writer.createOrReplace()
+        df.writeTo(self._table(stage)).using("iceberg").tableProperty(
+            self.FP_PROP, fp
+        ).createOrReplace()
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         return spark.read.table(self._table(stage))

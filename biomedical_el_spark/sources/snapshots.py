@@ -50,7 +50,7 @@ class SnapshotStore:
         except (OSError, KeyError, json.JSONDecodeError):
             return False
 
-    def write(self, df: DataFrame, stage: str, fp: str, partition_by: list[str] | None = None) -> None:
+    def write(self, df: DataFrame, stage: str, fp: str) -> None:
         """Materialize a stage output and commit it atomically.
 
         The old manifest is removed BEFORE the data overwrite starts: a
@@ -64,11 +64,7 @@ class SnapshotStore:
             os.unlink(self._manifest_path(stage))
         except FileNotFoundError:
             pass
-        path = os.path.join(self._dir(stage), "data")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        df.write.mode("overwrite").parquet(os.path.join(self._dir(stage), "data"))
         manifest = {
             "stage": stage,
             "fingerprint": fp,
@@ -90,11 +86,10 @@ class SnapshotStore:
         stage: str,
         fp: str,
         compute,
-        partition_by: list[str] | None = None,
     ) -> DataFrame:
         """The resume primitive: reuse the committed snapshot when the
         fingerprint matches, else compute + commit."""
         if self.committed(stage, fp):
             return self.read(spark, stage)
-        self.write(compute(), stage, fp, partition_by)
+        self.write(compute(), stage, fp)
         return self.read(spark, stage)

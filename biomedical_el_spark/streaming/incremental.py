@@ -9,28 +9,29 @@ cluster maintenance — without recomputing old blocks.  `run_linkage`'s
 streaming N batches equals `run_linkage` on their union under the same
 config; the stream implements band-key blocking, uncapped, only.
 
-Store layout is BUCKET-FIRST (`bucket=<b>/batch_id=<n>`): the per-batch
-accumulated join reads only the bucket directories the batch's keys can
-possibly match, so listing + rows-read scale with the batch's key
-coverage, not with how many batches the store has accumulated (the
-batch-first layout had to list every batch directory to prune).  On a
-cluster the store is an Iceberg table with a bloom filter on block_key;
-explicit bucket-directory selection is the local-parquet equivalent.
+Store layout is BUCKET-FIRST (`<col>=<b>/batch_id=<n>`): every store
+buckets its rows (`blocks` by block key, the others by `_bucket`,
+`pmod(xxhash64(cols), n_buckets)`), so a retried batch replaces its own
+(bucket, batch_id) leaves and compaction merges a bucket's leaves.  A
+batch reads each store whole (`_read_store`), not by bucket.  Each page
+writes 16 band keys, so a P-page batch touches 1 - (63/64)^(16P) of 64
+buckets: 92% at P = 10, 99.4% at P = 20, while the stream's input is
+crawl shards at `maxFilesPerTrigger=10`; on the 2,000-page batches of
+`mirror_dupes` a bucket-pruned read asked for every bucket, at 8 buckets
+and at 64.  The trade-off: a batch of about 10 pages or fewer, on a
+large store, reads the whole store where bucket pruning would have
+skipped part of it.  On a cluster the store is an Iceberg table with a
+bloom filter on block_key.
 The first batch writes `_store.json` (`STORE_FORMAT`, config
 fingerprint, `n_buckets`); a later batch that disagrees with it, or
 finds data without it, raises: a store keyed another way silently
 misses pairs, so it must be rebuilt from its pages.  The readers
 (`read_clusters`, `compact_blocks_store`) check its format too.
 
-Every store but `blocks` buckets rows by `_bucket` (`pmod(xxhash64(cols),
-n_buckets)`); a batch reads only the bucket directories its own rows
-hash into (`read_store_buckets`, ids from one collect per frame,
-`_bucket_ids`), never a whole store.
-
 Pairs are exactly-once ACROSS batches, not just per batch partition: a
 re-crawled url in a later micro-batch regenerates pairs an earlier batch
 already committed, so new pairs are anti-joined against the committed
-pairs store (pruned to the same pair-hash buckets) before writing.
+pairs store before writing.
 `process_block_batch` hands the pairs it committed to the scoring step
 directly, so the batch never reads its own output back.
 
@@ -62,10 +63,10 @@ COMPACTED_BATCH_ID = -1
 # The store's layout plus its band-key formula (`band_keys_from_sig`).
 # Bump it on any change to either: stores written before the change
 # then fail fast on their marker instead of silently missing pairs.
-STORE_FORMAT = 1
+# Format 2 drops format 1's component-keyed clusters mirror.
+STORE_FORMAT = 2
 STORE_MARKER = "_store.json"
 CLUSTERS = "clusters"
-CLUSTERS_MIRROR = "clusters_by_comp"
 # The schema each store's writer fixes: its data columns, then the
 # partition columns of its directories.  Every store read goes through
 # `_store_reader`, which reads with it; inferring it instead runs a
@@ -76,7 +77,6 @@ STORE_SCHEMAS = {
     "blocks": "url string, block_key bigint, bucket int, batch_id int",
     "pairs": "url_a string, url_b string, pbucket int, batch_id int",
     CLUSTERS: "node string, component string, nbucket int",
-    CLUSTERS_MIRROR: "node string, component string, cbucket int",
 }
 
 
@@ -91,16 +91,8 @@ def read_page_stream(spark: SparkSession, path: str, max_files: int = 10) -> Dat
 
 
 def _bucket(n_buckets: int, *cols: str) -> Column:
-    """The bucket of a row in the features, pairs, links and clusters
-    stores."""
+    """The bucket of a row in the features, pairs and clusters stores."""
     return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
-
-
-def _bucket_ids(df: DataFrame, *cols: str | Column) -> list[list[int]]:
-    """The distinct values of each bucket column (name or expression) of
-    `df`, in one collect of ≤ n_buckets ints per column, not data."""
-    row = df.agg(*[F.collect_set(c) for c in cols]).collect()[0]
-    return [sorted(ids) for ids in row]
 
 
 def _store_reader(spark: SparkSession, store: str) -> DataFrameReader:
@@ -108,6 +100,14 @@ def _store_reader(spark: SparkSession, store: str) -> DataFrameReader:
     entry (by directory name) and `store` as the partition base path."""
     schema = STORE_SCHEMAS[os.path.basename(store)]
     return spark.read.schema(schema).option("basePath", store)
+
+
+def _read_store(spark: SparkSession, store: str) -> DataFrame | None:
+    """The whole store directory `store`, read without a job
+    (`_store_reader`); None while the store holds no data."""
+    if not os.path.isdir(store):
+        return None
+    return _store_reader(spark, store).parquet(store)
 
 
 def _write_batch(df: DataFrame, store: str, col: str, batch_id: int) -> None:
@@ -126,31 +126,13 @@ def _write_batch(df: DataFrame, store: str, col: str, batch_id: int) -> None:
     )
 
 
-def read_store_buckets(
-    spark: SparkSession, store: str, buckets: list[int], col: str = "bucket"
-) -> DataFrame | None:
-    """Read ONLY the given bucket directories of a bucket-first store.
-
-    Explicit directory selection instead of a `.filter(bucket.isin(...))`
-    on the full store: pruning is then guaranteed by construction (and
-    directly testable as rows-read), not dependent on Catalyst partition
-    pruning, and the file listing never touches uncovered buckets.  The
-    read runs no job (`_store_reader`).  Returns None when none of the
-    buckets exist yet (empty store)."""
-    paths = [f"{store}/{col}={b}" for b in sorted(set(buckets))]
-    paths = [p for p in paths if os.path.isdir(p)]
-    if not paths:
-        return None
-    return _store_reader(spark, store).parquet(*paths)
-
-
 def process_block_batch(
     feats: DataFrame,
     batch_id: int,
     store_dir: str,
     cfg: LinkageConfig,
     n_buckets: int,
-) -> DataFrame | None:
+) -> DataFrame:
     """One micro-batch of incremental blocking over the batch's feature
     table.  Module-level (not a closure) so idempotency is directly
     testable: calling it twice with the same batch_id must leave the
@@ -159,9 +141,8 @@ def process_block_batch(
 
     Returns the pairs this batch committed (`url_a`, `url_b`,
     `pbucket`), already materialized (persisted, or checkpointed once
-    earlier batches have pairs in the same buckets), so the caller
-    scores them without reading the pairs store back and then
-    unpersists them; None for an empty batch.
+    earlier batches have committed pairs), so the caller scores them
+    without reading the pairs store back and then unpersists them.
 
     Idempotency: outputs are partitioned `bucket/batch_id` and written
     with DYNAMIC partition overwrite — a retried micro-batch REPLACES its
@@ -171,9 +152,7 @@ def process_block_batch(
     Exactly-once pairs: new pairs are anti-joined against pairs already
     committed by EARLIER batches (own batch_id excluded, so a retry that
     half-wrote its partition still re-emits its own pairs) before
-    writing.  The committed-pairs read is pruned to the new pairs'
-    pair-hash buckets, so this check also scales with the batch, not the
-    corpus.
+    writing.
     """
     _check_store_marker(store_dir, cfg, n_buckets)
     spark = feats.sparkSession
@@ -183,13 +162,9 @@ def process_block_batch(
         .persist()
     )
     _write_batch(keys, f"{store_dir}/blocks", "bucket", batch_id)
-    # incremental pairs: this batch's keys × accumulated keys, reading
-    # only the store buckets this batch can possibly match
-    [buckets] = _bucket_ids(keys, "bucket")
-    acc = read_store_buckets(spark, f"{store_dir}/blocks", buckets)
-    if acc is None:  # empty micro-batch: nothing to pair
-        keys.unpersist()
-        return None
+    # incremental pairs: this batch's keys × accumulated keys (the store
+    # holds this batch's own keys now, so it is never empty)
+    acc = _read_store(spark, f"{store_dir}/blocks")
     new_pairs = (
         keys.withColumnRenamed("url", "url_a")
         .join(acc.withColumnRenamed("url", "url_b"), "block_key")
@@ -200,18 +175,16 @@ def process_block_batch(
         )
         .distinct()
         .withColumn("pbucket", _bucket(n_buckets, "url_a", "url_b"))
-        .persist()  # read twice: bucket list, then the anti-join + write
     )
-    [pair_buckets] = _bucket_ids(new_pairs, "pbucket")
-    prev = read_store_buckets(spark, f"{store_dir}/pairs", pair_buckets, col="pbucket")
-    committed = new_pairs
-    if prev is not None:
+    prev = _read_store(spark, f"{store_dir}/pairs")
+    if prev is None:
+        committed = new_pairs.persist()  # read twice: the write, then scoring
+    else:
         earlier = prev.filter(F.col("batch_id") != batch_id).select("url_a", "url_b")
         # checkpointed, not persisted: the write below drops the cache of
         # every plan that reads the pairs store, this anti-join included
         committed = new_pairs.join(earlier, ["url_a", "url_b"], "left_anti")
         committed = committed.localCheckpoint()
-        new_pairs.unpersist()
     _write_batch(committed, f"{store_dir}/pairs", "pbucket", batch_id)
     keys.unpersist()
     return committed
@@ -316,32 +289,25 @@ def _write_journal(store_dir: str, spec: dict) -> None:
 
 
 def _commit_swaps(store_dir: str, spec: dict, fail_after: int | None = None) -> None:
-    """Apply a journaled bucket swap: for each store, rename staged
-    bucket dirs into place and drop buckets the update emptied.  Every
-    step is idempotent (src-missing ⇒ already swapped; rmtree tolerates
-    absence), so re-running after a crash at ANY point completes the
-    same commit.  `fail_after` (tests only) raises after N bucket
-    renames to simulate a crash mid-swap."""
+    """Apply a journaled clusters swap: rename each staged bucket dir
+    into place.  Every step is idempotent (src-missing ⇒ already
+    swapped; rmtree tolerates absence), so re-running after a crash at
+    ANY point completes the same commit.  `fail_after` (tests only)
+    raises after N bucket renames to simulate a crash mid-swap."""
+    base = os.path.join(store_dir, CLUSTERS)
+    staging = base + "_staging"
+    os.makedirs(base, exist_ok=True)
     done = 0
-    for sw in spec["swaps"]:
-        base = os.path.join(store_dir, sw["store"])
-        staging = os.path.join(store_dir, sw["store"] + "_staging")
-        os.makedirs(base, exist_ok=True)
-        for b in sw["swap"]:
-            src = os.path.join(staging, f"{sw['col']}={b}")
-            dst = os.path.join(base, f"{sw['col']}={b}")
-            if os.path.isdir(src):
-                shutil.rmtree(dst, ignore_errors=True)
-                os.rename(src, dst)
-                done += 1
-                if fail_after is not None and done >= fail_after:
-                    raise RuntimeError("injected crash mid-swap (test)")
-        for b in sw.get("drop", []):
-            shutil.rmtree(os.path.join(base, f"{sw['col']}={b}"), ignore_errors=True)
-    for sw in spec["swaps"]:
-        shutil.rmtree(
-            os.path.join(store_dir, sw["store"] + "_staging"), ignore_errors=True
-        )
+    for b in spec["swap"]:
+        src = os.path.join(staging, f"nbucket={b}")
+        dst = os.path.join(base, f"nbucket={b}")
+        if os.path.isdir(src):
+            shutil.rmtree(dst, ignore_errors=True)
+            os.rename(src, dst)
+            done += 1
+            if fail_after is not None and done >= fail_after:
+                raise RuntimeError("injected crash mid-swap (test)")
+    shutil.rmtree(staging, ignore_errors=True)
     os.remove(_journal_path(store_dir))
 
 
@@ -351,41 +317,33 @@ def _recover_clusters(store_dir: str) -> None:
     is never observed partially applied (the pre-round-5 dynamic
     overwrite could crash mid-way and leave a permanently split cluster
     when the replay's lifted edges all collapsed to src==dst).  No
-    journal ⇒ any staging dirs are pre-commit garbage from a crashed
-    write; remove them."""
+    journal ⇒ a staging dir is pre-commit garbage from a crashed write;
+    remove it."""
     j = _journal_path(store_dir)
     if os.path.exists(j):
         with open(j) as f:
             spec = json.load(f)
         _commit_swaps(store_dir, spec)
         return
-    for s in (CLUSTERS, CLUSTERS_MIRROR):
-        shutil.rmtree(os.path.join(store_dir, s + "_staging"), ignore_errors=True)
+    shutil.rmtree(os.path.join(store_dir, CLUSTERS + "_staging"), ignore_errors=True)
 
 
-def _stage(
-    spark: SparkSession,
-    store_dir: str,
-    store: str,
-    col: str,
-    updates: DataFrame,
-    buckets: list[int],
-) -> list[int]:
-    """Write `store`'s `buckets` with `updates` applied into
-    `<store>_staging`: read the buckets, drop the updated nodes, union in
-    their new rows.  Returns the buckets staged; an affected bucket whose
-    rows all moved elsewhere stages nothing."""
-    base = os.path.join(store_dir, store)
-    staging = base + "_staging"
+def _stage(store_dir: str, old: DataFrame | None, updates: DataFrame) -> list[int]:
+    """Write the clusters store with `updates` applied into
+    `clusters_staging`: `old` (the whole store, or None while it is
+    empty) without the updated nodes, plus their new rows.  Returns the
+    staged buckets, listed from the staging directory.  A node keeps its
+    bucket, so they cover every bucket of the store: the swap replaces
+    each one and leaves none behind."""
+    staging = os.path.join(store_dir, CLUSTERS + "_staging")
     shutil.rmtree(staging, ignore_errors=True)
-    out = updates.select("node", "component", col)
-    current = read_store_buckets(spark, base, buckets, col=col)
-    if current is not None:
-        keep = current.join(updates.select("node"), "node", "left_anti")
-        out = keep.select("node", "component", col).unionByName(out)
-    out.repartition(max(1, len(buckets)), col).write.partitionBy(col).parquet(staging)
+    out = updates.select("node", "component", "nbucket")
+    if old is not None:
+        keep = old.join(updates.select("node"), "node", "left_anti")
+        out = keep.select("node", "component", "nbucket").unionByName(out)
+    out.repartition("nbucket").write.partitionBy("nbucket").parquet(staging)
     return sorted(
-        int(d.split("=", 1)[1]) for d in os.listdir(staging) if d.startswith(f"{col}=")
+        int(d.split("=", 1)[1]) for d in os.listdir(staging) if d.startswith("nbucket=")
     )
 
 
@@ -394,24 +352,18 @@ def _update_clusters(
     store_dir: str,
     links: DataFrame,
     n_buckets: int,
-    node_buckets: list[int],
     checkpoint_dir: str | None = None,
 ) -> None:
     """Incremental connected-components maintenance over the clusters
     store (`clusters/nbucket=<_bucket(node)>` → (node, component),
     component = min node id of the cluster — the batch pipeline's id
-    convention, so incremental and batch agree exactly) plus a
-    component-keyed mirror (`clusters_by_comp/cbucket=
-    <_bucket(component)>`, same rows) so EVERY per-batch read is
-    bucket-pruned: the link-endpoint lift reads only `node_buckets` (a
-    superset of the nbuckets the links' endpoints hash into; the caller
-    passes its pairs' feature buckets), and the members-of-merged-
-    components lookup reads only the cbuckets of the components the
-    batch actually merges — no corpus-linear scan anywhere in the batch
-    path.  CC checkpoints into `checkpoint_dir` when given (reliable),
-    else locally.
+    convention, so incremental and batch agree exactly).  The store is
+    read once, whole, and persisted: that one read serves the
+    link-endpoint lift, the new-node anti-join and the members of the
+    components the batch merges.  CC checkpoints into `checkpoint_dir`
+    when given (reliable), else locally.
 
-    Crash consistency: both stores are updated through ONE staged,
+    Crash consistency: the store is updated through ONE staged,
     journaled, idempotent bucket swap (`_write_journal`/`_commit_swaps`,
     rolled forward by `_recover_clusters` at entry).  A crash before the
     journal rename leaves the old mapping fully intact (replay
@@ -424,11 +376,9 @@ def _update_clusters(
     merge order, so replaying a batch's links is always convergent."""
     _recover_clusters(store_dir)
     base = os.path.join(store_dir, CLUSTERS)
-    mirror = os.path.join(store_dir, CLUSTERS_MIRROR)
     # the swap renames files OUTSIDE Spark — drop any cached file
-    # listing for both stores before reading them
+    # listing for the store before reading it
     spark.catalog.refreshByPath(base)
-    spark.catalog.refreshByPath(mirror)
 
     li = links.select("url_a", "url_b").distinct().persist()
     link_nodes = (
@@ -438,9 +388,10 @@ def _update_clusters(
         .persist()
     )
     cached = [li, link_nodes]
-    old = read_store_buckets(spark, base, node_buckets, col="nbucket")
+    old = _read_store(spark, base)
     if old is not None:
-        old = old.select("node", "component")
+        old = old.persist()
+        cached.append(old)
         ca = old.select(F.col("node").alias("url_a"), F.col("component").alias("ca"))
         cb = old.select(F.col("node").alias("url_b"), F.col("component").alias("cb"))
         lifted = (
@@ -468,54 +419,32 @@ def _update_clusters(
 
     new_nodes = link_nodes
     affected_old = None
-    chg_cbuckets: list[int] = []
     if old is not None:
-        new_nodes = link_nodes.join(old, "node", "left_anti")
+        new_nodes = link_nodes.join(old.select("node"), "node", "left_anti")
         changed = comp_cc.filter(F.col("node") != F.col("component")).select(
             F.col("node").alias("component"), F.col("component").alias("newc")
-        ).persist()
-        cached.append(changed)
-        # members of merged components: read ONLY their cbuckets from the
-        # component-keyed mirror
-        [chg_cbuckets] = _bucket_ids(changed, _bucket(n_buckets, "component"))
-        members = read_store_buckets(spark, mirror, chg_cbuckets, col="cbucket")
-        if members is not None:
-            affected_old = members.select("node", "component").join(
-                changed, "component"
-            ).select("node", F.col("newc").alias("component"))
+        )
+        # members of merged components move to the merged component's id
+        affected_old = old.join(changed, "component").select(
+            "node", F.col("newc").alias("component")
+        )
     new_rows = new_nodes.join(comp_cc, "node", "left").select(
         F.col("node"), F.coalesce("component", "node").alias("component")
     )
     updates = (
         (new_rows if affected_old is None else affected_old.unionByName(new_rows))
         .withColumn("nbucket", _bucket(n_buckets, "node"))
-        .withColumn("cbucket", _bucket(n_buckets, "component"))
         .persist()
     )
     cached.append(updates)
 
-    # ---- stage both stores, then journal + atomic-equivalent swap ----
-    # affected cbuckets: where updated rows LAND (their new component)
-    # plus where members of merged components CURRENTLY sit (old comp);
-    # an affected bucket that stages nothing must be dropped, not left
-    # stale (every updated nbucket receives its own rows)
-    upd_nbuckets, upd_cbuckets = _bucket_ids(updates, "nbucket", "cbucket")
-    affected = {
-        CLUSTERS: upd_nbuckets,
-        CLUSTERS_MIRROR: sorted(set(upd_cbuckets) | set(chg_cbuckets)),
-    }
-    swaps = []
-    for store, col in ((CLUSTERS, "nbucket"), (CLUSTERS_MIRROR, "cbucket")):
-        staged = _stage(spark, store_dir, store, col, updates, affected[store])
-        drop = sorted(set(affected[store]) - set(staged))
-        swaps.append({"store": store, "col": col, "swap": staged, "drop": drop})
-    spec = {"swaps": swaps}
+    # ---- stage the store, then journal + atomic-equivalent swap ----
+    spec = {"swap": _stage(store_dir, old, updates)}
     _write_journal(store_dir, spec)
     _commit_swaps(store_dir, spec)
-    spark.catalog.refreshByPath(base)
-    spark.catalog.refreshByPath(mirror)
     for df in cached:
         df.unpersist()
+    spark.catalog.refreshByPath(base)
 
 
 def read_clusters(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -528,16 +457,16 @@ def read_clusters(spark: SparkSession, store_dir: str) -> DataFrame:
     ValueError."""
     _check_store_marker(store_dir)
     _recover_clusters(store_dir)
-    base = f"{store_dir}/clusters"
+    base = os.path.join(store_dir, CLUSTERS)
     spark.catalog.refreshByPath(base)
     feats = f"{store_dir}/features"
     nodes = _store_reader(spark, feats).parquet(feats).select(
         F.col("url").alias("node")
     ).distinct()
-    if not os.path.isdir(base):
+    mapped = _read_store(spark, base)
+    if mapped is None:
         return nodes.withColumn("component", F.col("node"))
-    mapped = _store_reader(spark, base).parquet(base).select("node", "component")
-    return with_singletons(mapped, nodes)
+    return with_singletons(mapped.select("node", "component"), nodes)
 
 
 def _stream_config(cfg: LinkageConfig | None) -> LinkageConfig:
@@ -605,7 +534,8 @@ def process_linkage_batch(
     micro-batch therefore updates `clusters`, not just candidate pairs —
     the streaming pipeline ends where the batch pipeline ends.  The
     pairs scored are the ones process_block_batch returns (the ones this
-    batch committed), not a read of the pairs store.
+    batch committed), not a read of the pairs store, and the links they
+    yield go straight to the clusters update: no store keeps them.
 
     `cfg` is run_linkage's config (default: band keys only, uncapped);
     its `checkpoint_dir` is where the clusters update checkpoints CC.
@@ -617,7 +547,6 @@ def process_linkage_batch(
     leaf is one file, not one per writing task):
       features/fbucket/batch_id — narrow hydration relation
       blocks/bucket/batch_id, pairs/pbucket/batch_id — as before
-      links/pbucket/batch_id   — scored ≥ τ edges of this batch's pairs
       clusters/nbucket         — mutable (node → component) mapping
 
     Exactly-once links follow from exactly-once pairs (links are a pure
@@ -636,24 +565,14 @@ def process_linkage_batch(
         feats.drop("fbucket"), batch_id, store_dir, cfg, n_buckets
     )
     feats.unpersist()
-    if pairs is None:
-        return
-    fbuckets_a, fbuckets_b = _bucket_ids(
-        pairs, _bucket(n_buckets, "url_a"), _bucket(n_buckets, "url_b")
-    )
-    hydr = read_store_buckets(
-        spark, f"{store_dir}/features", fbuckets_a + fbuckets_b, col="fbucket"
-    )
-    if hydr is None:
-        pairs.unpersist()
-        return
     # a re-crawled url exists under several batch_ids in the features
     # store; NEW pairs must score against its LATEST features only
     # (pairs committed by earlier batches keep their at-ingest scores —
     # the incremental contract)
     latest = Window.partitionBy("url").orderBy(F.col("batch_id").desc())
     hydr = (
-        hydr.withColumn("_rn", F.row_number().over(latest))
+        _read_store(spark, f"{store_dir}/features")
+        .withColumn("_rn", F.row_number().over(latest))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
@@ -662,16 +581,8 @@ def process_linkage_batch(
         hydr.select("url", "vec", "sig", "prefix"),
         cfg.weights,
     )
-    links = match_links(scored, cfg.tau).persist()
-    _write_batch(
-        links.withColumn("pbucket", _bucket(n_buckets, "url_a", "url_b")),
-        f"{store_dir}/links", "pbucket", batch_id,
-    )
-    # the links' endpoints are pair endpoints, and a url's node bucket is
-    # its feature bucket: the lift's nbuckets need no collect of their own
-    node_buckets = sorted(set(fbuckets_a) | set(fbuckets_b))
-    _update_clusters(spark, store_dir, links, n_buckets, node_buckets, cfg.checkpoint_dir)
-    links.unpersist()
+    links = match_links(scored, cfg.tau)
+    _update_clusters(spark, store_dir, links, n_buckets, cfg.checkpoint_dir)
     pairs.unpersist()
 
 

@@ -2,7 +2,6 @@
 page-file drops, its store, and watermarked windowed aggregation."""
 
 import os
-import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -99,46 +98,6 @@ def test_incremental_batch_retry_is_idempotent(spark, tmp_path):
     raw = spark.read.parquet(store + "/pairs").count()
     dedup = spark.read.parquet(store + "/pairs").distinct().count()
     assert raw == dedup
-
-
-def test_incremental_store_rows_read_scales_with_coverage(spark, tmp_path):
-    """The accumulated-store join must NOT read the whole corpus per
-    batch.  With the bucket-first layout, a small batch covering k of
-    n_buckets buckets reads ~k/n of the store's rows (and lists only
-    those bucket directories) — rows read scale with the batch's key
-    coverage, not with corpus size.  Fixture: a 10× corpus already in
-    the store, then a small batch."""
-    from biomedical_el_spark.streaming.incremental import read_store_buckets
-
-    store = str(tmp_path / "store_prune")
-    n_buckets = 256
-    corpus = generate_pages(spark, 600, cluster_size=4).drop("entity_id").cache()
-    small = corpus.limit(8).cache()
-    # 10× corpus committed first; bands=4 keeps the small batch's bucket
-    # coverage well under n_buckets (8 pages × 4 band keys ≤ 32 buckets)
-    cfg = _stream_cfg(bands=4, rows_per_band=8)
-    _block_batch(corpus, 0, store, n_buckets, cfg)
-    _block_batch(small, 1, store, n_buckets, cfg)
-    blocks = spark.read.parquet(store + "/blocks")
-    total_rows = blocks.count()
-    covered = [
-        r["bucket"]
-        for r in blocks.filter(F.col("batch_id") == 1)
-        .select("bucket")
-        .distinct()
-        .collect()
-    ]
-    assert 0 < len(covered) <= 32
-    acc = read_store_buckets(spark, store + "/blocks", covered)
-    rows_read = acc.count()
-    # every listed file is under a covered bucket directory …
-    assert all(
-        any(f"/bucket={b}/" in f for b in covered) for f in acc.inputFiles()
-    )
-    # … and the read is a small, coverage-proportional slice of the store
-    frac = len(covered) / n_buckets
-    assert rows_read <= total_rows * frac * 2.5
-    assert rows_read < total_rows / 2
 
 
 def test_recrawled_url_pairs_exactly_once(spark, tmp_path):
@@ -405,37 +364,11 @@ def test_stream_checkpoints_cc_into_checkpoint_dir(spark, tmp_path):
     assert [f for _, _, fs in os.walk(ckpt) for f in fs]
 
 
-def test_batch_reads_only_bucket_directories(spark, tmp_path, monkeypatch):
-    """Every parquet read a micro-batch makes under its store names
-    `<col>=<b>` bucket directories, never a store root such as
-    `store/pairs`: a batch's reads scale with its buckets, not with how
-    many batches the store holds."""
-    from pyspark.sql.readwriter import DataFrameReader
-
-    store = str(tmp_path / "store_dirs")
-    pages = generate_pages(spark, 60, cluster_size=4).drop("entity_id").cache()
-    read = []
-    real = DataFrameReader.parquet
-
-    def spy(self, *paths, **options):
-        read.extend(paths)
-        return real(self, *paths, **options)
-
-    monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    for i in range(2):
-        shard = pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == i)
-        process_linkage_batch(shard, i, store, n_buckets=8)
-    monkeypatch.undo()
-    under = [os.path.relpath(p, store) for p in read if p.startswith(store)]
-    assert {p.split("/")[0] for p in under} >= {"blocks", "pairs", "features", "clusters"}
-    assert all(re.fullmatch(r"\w+/[a-z]+=\d+", p) for p in under), under
-
-
 def test_store_reads_use_the_writers_schema(spark, tmp_path):
-    """`read_store_buckets` reads every store with the schema its writer
+    """`_read_store` reads every store whole with the schema its writer
     fixes: the one parquet inference finds, without the job inference
     runs."""
-    from biomedical_el_spark.streaming.incremental import STORE_SCHEMAS, read_store_buckets
+    from biomedical_el_spark.streaming.incremental import STORE_SCHEMAS, _read_store
 
     store = str(tmp_path / "store_schema")
     pages = generate_pages(spark, 60, cluster_size=4).drop("entity_id").cache()
@@ -443,17 +376,16 @@ def test_store_reads_use_the_writers_schema(spark, tmp_path):
     sc = spark.sparkContext
     for name in STORE_SCHEMAS:
         base = os.path.join(store, name)
-        leaf = next(d for d in sorted(os.listdir(base)) if "=" in d)
-        col, bucket = leaf.split("=")
         sc.setJobGroup("store-schema", name)
         try:
-            got = read_store_buckets(spark, base, [int(bucket)], col=col)
+            got = _read_store(spark, base)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert sc.statusTracker().getJobIdsForGroup("store-schema") == [], name
-        inferred = spark.read.option("basePath", base).parquet(os.path.join(base, leaf))
+        inferred = spark.read.parquet(base)
         assert got.schema == inferred.schema, name
         assert got.count() == inferred.count() > 0, name
+    assert _read_store(spark, os.path.join(store, "empty")) is None
 
 
 def test_read_clusters_runs_no_job_before_its_action(spark, tmp_path):
@@ -476,18 +408,21 @@ def test_read_clusters_runs_no_job_before_its_action(spark, tmp_path):
 
 def test_store_leaves_hold_one_file(spark, tmp_path):
     """Each store write is repartitioned by its bucket column: after a
-    2-shard run every (bucket, batch_id) leaf holds one parquet file,
-    not one per writing task."""
+    2-shard run every (bucket, batch_id) leaf, and every bucket of the
+    restaged clusters store, holds one parquet file, not one per
+    writing task."""
     store = str(tmp_path / "store_files")
     pages = generate_pages(spark, 200, cluster_size=4).drop("entity_id").cache()
     for i in range(2):
         shard = pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == i)
         process_linkage_batch(shard, i, store, n_buckets=8)
-    for name in ("features", "blocks", "pairs", "links"):
+    leaves = {"features": "batch_id=", "blocks": "batch_id=", "pairs": "batch_id=",
+              "clusters": "nbucket="}
+    for name, leaf in leaves.items():
         files = {
             root: sum(f.endswith(".parquet") for f in names)
             for root, _, names in os.walk(os.path.join(store, name))
-            if "batch_id=" in root
+            if leaf in root
         }
         assert files and set(files.values()) == {1}, (name, files)
 
@@ -603,85 +538,51 @@ def test_crash_mid_cluster_swap_recovers_to_batch_result(
     assert streamed == expected
 
 
-def test_clusters_mirror_pruned_member_scan(spark, tmp_path, monkeypatch):
-    """r4 verdict #4: the members-of-merged-components lookup must read
-    only the affected component buckets of the component-keyed mirror
-    (and the link-endpoint lift only the batch's node buckets) — not
-    the whole mapping.  Fixture: 600-page corpus committed first, then
-    an 8-page batch whose pages are each the MIN-url member of their
-    cluster, forcing 8 component renames; with n_buckets=256 both reads
-    must cover a small bucket subset.  The mirror must stay
-    row-identical to the primary store after every batch."""
+def test_min_url_batch_renames_components(spark, tmp_path):
+    """A batch that brings the MIN-url page of existing clusters renames
+    their components: commit a 600-page batch, then a batch holding the
+    held-out min-url page of 8 clusters.  Every member of those clusters
+    must move to the held-out url's id, and the streamed clusters must
+    equal run_linkage's on the union corpus."""
     from pyspark.sql import Window
 
-    import biomedical_el_spark.streaming.incremental as inc
-
-    store = str(tmp_path / "store_mirror")
-    n_buckets = 256
+    store = str(tmp_path / "store_rename")
     pages = generate_pages(spark, 600, cluster_size=4).cache()
-    w = Window.partitionBy("entity_id").orderBy("url")
-    ranked = pages.withColumn("rn", F.row_number().over(w))
-    holdout_entities = [
+    ranked = pages.withColumn(
+        "rn", F.row_number().over(Window.partitionBy("entity_id").orderBy("url"))
+    )
+    holdout = [
         r["entity_id"]
-        for r in pages.select("entity_id").distinct().limit(8).collect()
+        for r in pages.select("entity_id").distinct().orderBy("entity_id").limit(8).collect()
     ]
-    held = ranked.filter(
-        (F.col("rn") == 1) & F.col("entity_id").isin(holdout_entities)
-    ).drop("rn", "entity_id").cache()
-    rest = ranked.filter(
-        (F.col("rn") > 1) | ~F.col("entity_id").isin(holdout_entities)
-    ).drop("rn", "entity_id").cache()
-    assert held.count() == 8
-
-    inc.process_linkage_batch(rest, 0, store, n_buckets=n_buckets)
-
-    def mapping(path):
-        if not os.path.isdir(path):
-            return set()
-        return {
-            (r["node"], r["component"])
-            for r in spark.read.parquet(path)
-            .select("node", "component")
-            .collect()
-        }
-
-    prim = mapping(store + "/clusters")
-    assert prim == mapping(store + "/clusters_by_comp")
-
-    calls = []
-    real = inc.read_store_buckets
-
-    def spy(spark_, st, buckets, col="bucket"):
-        calls.append((st, sorted(set(buckets)), col))
-        return real(spark_, st, buckets, col)
-
-    monkeypatch.setattr(inc, "read_store_buckets", spy)
-    inc.process_linkage_batch(held, 1, store, n_buckets=n_buckets)
-    monkeypatch.setattr(inc, "read_store_buckets", real)
-
-    lift_reads = [c for c in calls if c[0].endswith("/clusters") and c[2] == "nbucket"]
-    member_reads = [c for c in calls if c[2] == "cbucket"]
-    assert lift_reads and member_reads
-    # lift: endpoints of the batch's links only (≤ ~40 nodes ≪ 256)
-    assert all(len(b) <= 64 for _, b, _ in lift_reads)
-    # member scan: cbuckets of the ≤8 merged components only
-    assert all(len(b) <= 16 for _, b, _ in member_reads[:1])
-
-    after = mapping(store + "/clusters")
-    assert after == mapping(store + "/clusters_by_comp")
-    # the renames actually happened: every held-out page is now a
-    # component id covering its cluster members
-    comps = {c for _, c in after}
+    is_held = (F.col("rn") == 1) & F.col("entity_id").isin(holdout)
+    held = ranked.filter(is_held).drop("rn", "entity_id").cache()
+    rest = ranked.filter(~is_held).drop("rn", "entity_id").cache()
     held_urls = {r["url"] for r in held.select("url").collect()}
-    assert held_urls & comps
+    assert len(held_urls) == 8
+
+    process_linkage_batch(rest, 0, store, n_buckets=8)
+    before = dict(_mapping(spark, store))
+    assert not held_urls & set(before.values())
+    process_linkage_batch(held, 1, store, n_buckets=8)
+    after = _mapping(spark, store)
+
+    expected = {
+        (r["node"], r["component"])
+        for r in run_linkage(spark, pages.drop("entity_id"), cfg=_stream_cfg())[
+            "clusters"
+        ].collect()
+    }
+    assert after == expected
+    renamed = {before[n] for n, c in after if c in held_urls and n in before}
+    assert len(renamed) == 8 and held_urls <= {c for _, c in after}
 
 
 def test_stream_kill_after_links_restart_equals_batch(
     spark, tmp_path, monkeypatch
 ):
-    """r4 verdict #5: kill the STREAM itself mid-batch — after the batch's
-    links are written but before _update_clusters touches the clusters
-    store — then restart `incremental_linkage` against the same
+    """r4 verdict #5: kill the STREAM itself mid-batch — after scoring,
+    before `_update_clusters` — then restart `incremental_linkage` against the same
     checkpoint.  The failed batch was never committed to the streaming
     checkpoint, so the engine replays it; replay must converge to
     exactly the batch pipeline's clusters on the union corpus (the
@@ -705,8 +606,8 @@ def test_stream_kill_after_links_restart_equals_batch(
 
     def dying(*args, **kwargs):
         calls["n"] += 1
-        if calls["n"] == 2:  # links of micro-batch 1 are already on disk
-            raise RuntimeError("injected kill after links write")
+        if calls["n"] == 2:  # micro-batch 1's pairs are already on disk
+            raise RuntimeError("injected kill before the clusters update")
         return real(*args, **kwargs)
 
     monkeypatch.setattr(inc, "_update_clusters", dying)

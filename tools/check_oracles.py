@@ -6,11 +6,13 @@ hash.  Usage: python tools/check_oracles.py [sf_dir] [name ...]"""
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, ".")
+# the repo root, so the tool runs from any directory
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -47,7 +49,7 @@ def main():
     from biomedical_el_spark.plans import catalog
     from biomedical_el_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle-check", cores=8, shuffle_partitions=8)
+    spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
