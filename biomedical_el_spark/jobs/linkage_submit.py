@@ -28,9 +28,14 @@ from __future__ import annotations
 import argparse
 import json
 
-from ..plans.linkage import LinkageConfig, _estimate_rows, resolved_config, run_linkage
+from ..plans.linkage import (
+    STAGES,
+    LinkageConfig,
+    resolved_config,
+    run_linkage,
+    stage_fingerprint,
+)
 from ..session import get_spark
-from ..sources.snapshots import SnapshotStore, fingerprint
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -72,9 +77,6 @@ def config_from_args(args: argparse.Namespace) -> LinkageConfig:
     return cfg
 
 
-STAGES = ("features", "blocks", "pairs", "scored", "links", "clusters")
-
-
 def main(argv: list[str] | None = None) -> dict:
     args = build_parser().parse_args(argv)
     spark = get_spark(
@@ -93,12 +95,11 @@ def main(argv: list[str] | None = None) -> dict:
     cfg = config_from_args(args)
 
     if args.dry_run:
-        cfg_dict = resolved_config(cfg, _estimate_rows(pages))
-        cfg_fp = fingerprint(cfg_dict, args.input_fingerprint)
+        cfg_fp = stage_fingerprint(cfg, args.input_fingerprint)
         report = {
             "dry_run": True,
             "store": type(store).__name__,
-            "resolved_config": cfg_dict,
+            "resolved_config": resolved_config(cfg, 0),
             "stage_fingerprint": cfg_fp,
             "stages": {
                 s: ("committed" if store.committed(s, cfg_fp) else "pending")

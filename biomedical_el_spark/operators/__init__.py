@@ -1,2 +1,2 @@
 """Dataflow operators: blocking, pair generation, scoring, clustering,
-dedup, ANN, text analysis, multimodal plumbing."""
+dedup, ANN, text analysis."""

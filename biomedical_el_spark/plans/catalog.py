@@ -913,15 +913,23 @@ def ann_label_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _components_sql(edges: str) -> str:
     """Connected components of the `edges` SELECT's (src, dst) graph as a
-    recursive CTE: each node labeled with the min node it reaches."""
+    recursive CTE: each node labeled with the min node it reaches.
+
+    A label only travels to a node larger than itself (`r.comp < s.src`).
+    That prunes the closure without changing any `min(comp)`: the
+    component's minimum is smaller than every other node in it, so it
+    still reaches each of them along any path, and no node gains a label
+    from outside its component.  `edges` is MATERIALIZED: inlined, DuckDB
+    re-runs the edge query in every round of the recursion."""
     return f"""
-    WITH RECURSIVE edges AS ({edges}
+    WITH RECURSIVE edges AS MATERIALIZED ({edges}
     ), sym AS (
         SELECT src, dst FROM edges UNION SELECT dst, src FROM edges
     ), reach(node, comp) AS (
         SELECT src, src FROM sym
         UNION
         SELECT s.src, r.comp FROM sym s JOIN reach r ON s.dst = r.node
+        WHERE r.comp < s.src
     )
     SELECT node, min(comp) AS component FROM reach GROUP BY node
     """
@@ -1338,6 +1346,21 @@ def t_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Multimodal plumbing (binary columns + typed metadata)
 # =====================================================================
 
+def binary_metadata(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
+    """Typed metadata over an opaque binary column — pure JVM exprs
+    (length, content hash, routing tag).  No Python in this path."""
+    n = F.length(F.col(bin_col))
+    return df.select(
+        F.col(id_col),
+        n.alias("n_bytes"),
+        F.md5(F.col(bin_col)).alias("content_hash"),
+        F.when(n % 3 == 0, "image")
+        .when(n % 3 == 1, "audio")
+        .otherwise("video")
+        .alias("media_type"),
+    )
+
+
 @register(
     "mm_binary_meta",
     """
@@ -1351,12 +1374,9 @@ def t_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal column plumbing: treat content as opaque binary +
-    typed metadata.  The decode/feature-extract step is a mapInPandas
-    stub (operators/multimodal.py); here the Spark-side schema/metadata
-    path is exercised end-to-end against SQL."""
-    from ..operators.multimodal import binary_metadata
-
+    """Multimodal column plumbing: document text treated as an opaque
+    binary column and given typed metadata by `binary_metadata`, checked
+    end-to-end against SQL.  No payload is decoded."""
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "utf-8").alias("payload")
     )

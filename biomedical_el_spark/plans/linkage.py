@@ -10,11 +10,16 @@ SURVEY.md §3.3, restated Spark-first):
               (finished in one vectorized task once the edge frontier
               fits one partition)
 
-Each stage commits a snapshot (features, blocks, pairs, scored, links,
-clusters + lineage/score metrics) keyed by config+upstream fingerprint;
-a killed run resumes from the last committed stage with identical output
-(tested: resume == fresh).  On a cluster these are Iceberg tables; the
-features table is the one worth bucketing by url.
+Every stage is materialized, in order, before the next one starts, on
+both paths.  With a snapshot store each stage (features, blocks, pairs,
+scored, links, clusters + lineage/score metrics) commits a snapshot
+keyed by config+upstream fingerprint, and a killed run resumes from the
+last committed stage with identical output (tested: resume == fresh).
+On a cluster these are Iceberg tables; the features table is the one
+worth bucketing by url.  Without a store each stage is persisted and
+computed by a `noop` write, so a returned frame never re-runs its
+upstream.  Either way the session's shuffle width is handed back as it
+was found.
 """
 
 from __future__ import annotations
@@ -41,8 +46,8 @@ class LinkageConfig:
     ADDING a semantic field (or changing a default) intentionally
     invalidates pre-change snapshot stores: a resumed run recomputes
     rather than silently mixing outputs from two different pipeline
-    definitions.  Execution-only fields (checkpoint_dir, num_partitions)
-    are excluded and never invalidate.
+    definitions.  Execution-only fields (checkpoint_dir, num_partitions,
+    pairs_single_exchange) are excluded and never invalidate.
     """
     num_hashes: int = 32
     bands: int = 16
@@ -83,7 +88,7 @@ class LinkageConfig:
     # reliable CC checkpoint dir (HDFS/object store on a cluster);
     # None = localCheckpoint (local-mode speed, not executor-loss safe)
     checkpoint_dir: str | None = None
-    # partition count for the CPU-bound feature stage (and the session's
+    # partition count for the CPU-bound feature stage (and the stages'
     # shuffle width follows it on big corpora): None = data-proportional,
     # ~TASK_PAGES pages per task floored at 2×parallelism.  Tasks stay
     # minutes-bounded as the corpus grows — a fixed 2×cores width at 16M+
@@ -180,6 +185,17 @@ def featurize(pages: DataFrame, cfg: LinkageConfig) -> DataFrame:
     )
 
 
+# the stages run_linkage returns, in the order it materializes them
+STAGES = ("features", "blocks", "pairs", "scored", "links", "clusters")
+
+
+def stage_fingerprint(cfg: LinkageConfig, input_fingerprint: str = "") -> str:
+    """The fingerprint every snapshot of a run under `cfg` over the input
+    named `input_fingerprint` commits under.  It reads no data:
+    `resolved_config` ignores its row estimate."""
+    return fingerprint(resolved_config(cfg, 0), input_fingerprint)
+
+
 def run_linkage(
     spark: SparkSession,
     pages: DataFrame,
@@ -187,19 +203,20 @@ def run_linkage(
     cfg: LinkageConfig | None = None,
     input_fingerprint: str = "",
 ) -> dict[str, DataFrame]:
-    """Run (or resume) the full pipeline; returns all stage DataFrames."""
+    """Run (or resume) the full pipeline; returns all stage DataFrames,
+    each already materialized."""
     cfg = cfg or LinkageConfig()
     assert cfg.bands * cfg.rows_per_band == cfg.num_hashes
-    # footer-based row estimate: metadata-only, never executes the lineage
-    est = _estimate_rows(pages)
-    cfg_fp = fingerprint(resolved_config(cfg, est), input_fingerprint)
+    cfg_fp = stage_fingerprint(cfg, input_fingerprint)
 
     def snap(stage: str, compute) -> DataFrame:
-        if store is None:
-            # no snapshot dir: cache stage outputs so downstream stages and
-            # metrics don't recompute the whole upstream pipeline
-            return compute().persist()
-        return store.get_or_compute(spark, stage, cfg_fp, compute)
+        if store is not None:
+            return store.get_or_compute(spark, stage, cfg_fp, compute)
+        df = compute().persist()
+        # a noop write computes every partition into the cache without
+        # count()'s extra one-partition aggregate exchange
+        df.write.format("noop").mode("overwrite").save()
+        return df
 
     # Explicit repartition before the feature UDF: parquet split packing
     # can hand a small corpus to a handful of tasks; the CPU-bound encoder
@@ -208,81 +225,72 @@ def run_linkage(
     # cluster this is repartition(N, "url") against bucketed Iceberg.
     n_part = cfg.num_partitions
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    widened = False
-    if n_part is None:
-        floor = spark.sparkContext.defaultParallelism * 2
-        n_part = max(floor, min(est // TASK_PAGES, 32 * floor))
-        # widen shuffles to match: pair-gen/scoring move similar volume
-        if n_part > floor:
-            spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-            widened = True
-    paged = pages.repartition(n_part, "url")
-    features = snap("features", lambda: featurize(paged, cfg))
+    try:
+        if n_part is None:
+            # footer-based row estimate: metadata-only, never executes
+            # the lineage
+            floor = spark.sparkContext.defaultParallelism * 2
+            n_part = max(floor, min(_estimate_rows(pages) // TASK_PAGES, 32 * floor))
+            # widen shuffles to match: pair-gen/scoring move similar volume
+            if n_part > floor:
+                spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
+        paged = pages.repartition(n_part, "url")
+        features = snap("features", lambda: featurize(paged, cfg))
 
-    def compute_blocks() -> DataFrame:
-        blk = band_keys_from_sig(features, cfg.bands, cfg.rows_per_band)
-        if cfg.use_embedding_blocks:
-            key = hyperplane_lsh_udf(cfg.hyperplanes)(F.col("vec"))
-            # shift hyperplane buckets into their own bigint key space
-            blk = blk.unionByName(
-                features.select(
-                    "url",
-                    (F.lit(1 << 40) + key.cast("bigint")).alias("block_key"),
+        def compute_blocks() -> DataFrame:
+            blk = band_keys_from_sig(features, cfg.bands, cfg.rows_per_band)
+            if cfg.use_embedding_blocks:
+                key = hyperplane_lsh_udf(cfg.hyperplanes)(F.col("vec"))
+                # shift hyperplane buckets into their own bigint key space
+                blk = blk.unionByName(
+                    features.select(
+                        "url",
+                        (F.lit(1 << 40) + key.cast("bigint")).alias("block_key"),
+                    )
                 )
+            return blk
+
+        blocks = snap("blocks", compute_blocks)
+
+        def compute_pairs() -> DataFrame:
+            cand, oversized = P.candidate_pairs_grouped(
+                blocks,
+                cfg.max_block_size,
+                escape=cfg.oversized_escape,
+                single_exchange=cfg.pairs_single_exchange,
+                min_matches=cfg.min_band_matches,
             )
-        return blk
+            if store is not None:
+                store.write(oversized, "oversized_blocks", cfg_fp)  # never silent
+            return cand
 
-    blocks = snap("blocks", compute_blocks)
+        pairs = snap("pairs", compute_pairs)
 
-    def compute_pairs() -> DataFrame:
-        cand, oversized = P.candidate_pairs_grouped(
-            blocks,
-            cfg.max_block_size,
-            escape=cfg.oversized_escape,
-            single_exchange=cfg.pairs_single_exchange,
-            min_matches=cfg.min_band_matches,
+        scored = snap(
+            "scored",
+            lambda: S.score_pairs_from_features(pairs, features, cfg.weights),
         )
         if store is not None:
-            store.write(oversized, "oversized_blocks", cfg_fp)  # never silent
-        return cand
+            # commit-once like every stage: a resumed run must not re-scan
+            # the scored snapshot just to rewrite identical metric tables
+            if not store.committed("metrics_score_hist", cfg_fp):
+                store.write(M.score_histogram(scored), "metrics_score_hist", cfg_fp)
+            if not store.committed("metrics_lineage", cfg_fp):
+                store.write(
+                    M.partition_lineage(scored, "scored"), "metrics_lineage", cfg_fp
+                )
 
-    pairs = snap("pairs", compute_pairs)
+        links = snap("links", lambda: S.match_links(scored, cfg.tau))
 
-    scored = snap(
-        "scored",
-        lambda: S.score_pairs_from_features(pairs, features, cfg.weights),
-    )
-    if store is not None:
-        # commit-once like every stage: a resumed run must not re-scan
-        # the scored snapshot just to rewrite identical metric tables
-        if not store.committed("metrics_score_hist", cfg_fp):
-            store.write(M.score_histogram(scored), "metrics_score_hist", cfg_fp)
-        if not store.committed("metrics_lineage", cfg_fp):
-            store.write(
-                M.partition_lineage(scored, "scored"), "metrics_lineage", cfg_fp
+        def compute_clusters() -> DataFrame:
+            comp = CC.connected_components(links, checkpoint_dir=cfg.checkpoint_dir)
+            # node ids come from the (cached/snapshotted, narrow) features
+            # table — 1:1 with pages, avoids re-scanning the wide pages relation
+            return CC.with_singletons(
+                comp, features.select(F.col("url").alias("node"))
             )
 
-    links = snap("links", lambda: S.match_links(scored, cfg.tau))
-
-    def compute_clusters() -> DataFrame:
-        comp = CC.connected_components(links, checkpoint_dir=cfg.checkpoint_dir)
-        # node ids come from the (cached/snapshotted, narrow) features
-        # table — 1:1 with pages, avoids re-scanning the wide pages relation
-        return CC.with_singletons(comp, features.select(F.col("url").alias("node")))
-
-    clusters = snap("clusters", compute_clusters)
-    # Eager path (snapshot store): every stage is already materialized,
-    # so restore the session shuffle width instead of leaking the widened
-    # setting into whatever the caller runs next.  Lazy path (store=None,
-    # stages persist()ed but not yet computed): the width must stay until
-    # the caller materializes them, so it is intentionally left in place.
-    if widened and store is not None:
+        clusters = snap("clusters", compute_clusters)
+    finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    return {
-        "features": features,
-        "blocks": blocks,
-        "pairs": pairs,
-        "scored": scored,
-        "links": links,
-        "clusters": clusters,
-    }
+    return dict(zip(STAGES, (features, blocks, pairs, scored, links, clusters)))

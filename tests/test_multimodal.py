@@ -1,10 +1,9 @@
-"""Multimodal plumbing: binary metadata exprs + mapInPandas feature
-extraction stub (schema, batch shape, determinism)."""
+"""Multimodal plumbing: typed metadata over an opaque binary column."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from biomedical_el_spark.operators.multimodal import binary_metadata, extract_features
+from biomedical_el_spark.plans.catalog import binary_metadata
 
 
 @pytest.fixture(scope="module")
@@ -21,127 +20,3 @@ def test_binary_metadata(spark, payloads):
     assert rows[7]["n_bytes"] == len(b"payload-7")
     assert rows[7]["media_type"] in {"image", "audio", "video"}
     assert len(rows[7]["content_hash"]) == 32
-
-
-def test_extract_features_stub(spark, payloads):
-    feats = extract_features(payloads, "id", "payload", dim=16, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 50
-    assert all(len(r["features"]) == 16 for r in rows)
-    # deterministic across runs
-    again = {r["id"]: r["features"] for r in extract_features(payloads, "id", "payload", dim=16).collect()}
-    for r in rows:
-        assert again[r["id"]] == r["features"]
-
-
-def test_extract_features_real_decoder_is_stubbed(spark, payloads):
-    with pytest.raises(Exception):
-        extract_features(payloads, "id", "payload", fake=False).collect()
-
-
-def _make_png(w: int, h: int) -> bytes:
-    """Minimal valid RGB PNG, stdlib only (zlib + struct)."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    raw = b"".join(b"\x00" + bytes([(x * 7 + y * 13) % 256 for x in range(w * 3)]) for y in range(h))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _make_gif(w: int, h: int) -> bytes:
-    import struct
-
-    return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00" * 20
-
-
-def _make_bmp(w: int, h: int) -> bytes:
-    import struct
-
-    return b"BM" + b"\x00" * 16 + struct.pack("<ii", w, h) + b"\x00" * 20
-
-
-def test_decode_image_meta_real_formats(spark):
-    """REAL container decode: width/height/format parsed from actual
-    PNG/GIF/BMP bytes generated on the fly — wrong bytes would yield
-    wrong dimensions, so this is not exercising a stub."""
-    from biomedical_el_spark.operators.multimodal import decode_image_meta
-
-    rows = [
-        (0, bytearray(_make_png(17, 9))),
-        (1, bytearray(_make_gif(320, 200))),
-        (2, bytearray(_make_bmp(64, 48))),
-        (3, bytearray(_make_bmp(64, -48))),  # top-down DIB: negative height
-        (4, bytearray(b"not an image at all")),
-    ]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    got = {r["id"]: r for r in decode_image_meta(df, "id", "payload").collect()}
-    assert (got[0]["format"], got[0]["width"], got[0]["height"]) == ("png", 17, 9)
-    assert (got[1]["format"], got[1]["width"], got[1]["height"]) == ("gif", 320, 200)
-    assert (got[2]["format"], got[2]["width"], got[2]["height"]) == ("bmp", 64, 48)
-    assert (got[3]["format"], got[3]["width"], got[3]["height"]) == ("bmp", 64, 48)
-    assert got[4]["format"] == "unknown" and got[4]["width"] == -1
-
-
-def test_extract_features_pil_pixel_decode(spark):
-    """Full pixel decode via PIL — SKIPPED (not faked) when Pillow is
-    absent from the container."""
-    from biomedical_el_spark.operators.multimodal import HAS_PIL
-
-    if not HAS_PIL:
-        pytest.skip("Pillow not installed — real pixel decode unavailable")
-    rows = [(0, bytearray(_make_png(32, 8)))]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    out = extract_features(df, "id", "payload", dim=8, use_pil=True).collect()
-    assert len(out) == 1 and len(out[0]["features"]) == 8
-    assert all(0.0 <= v <= 1.0 for v in out[0]["features"])
-
-
-def _make_jpeg(w, h, fill_before_sof=0, leading_segments=True):
-    """Minimal structurally-valid JPEG header stream: SOI, APP0, DQT,
-    optional 0xFF fill padding and standalone markers, then SOF0."""
-    import struct as _s
-
-    out = b"\xff\xd8"  # SOI
-    if leading_segments:
-        app0 = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-        out += b"\xff\xe0" + _s.pack(">H", 2 + len(app0)) + app0
-        dqt = bytes(65)
-        out += b"\xff\xdb" + _s.pack(">H", 2 + len(dqt)) + dqt
-    out += b"\xff" * fill_before_sof  # ITU T.81 B.1.1.2 fill bytes
-    out += b"\xff\x01"  # TEM: standalone, no length field
-    out += b"\xff\xd0"  # RST0: standalone, no length field
-    sof = b"\x08" + _s.pack(">HH", h, w) + b"\x03" + bytes(9)
-    out += b"\xff\xc0" + _s.pack(">H", 2 + len(sof)) + sof
-    return out
-
-
-def test_decode_image_meta_jpeg_variants(spark):
-    """JPEG SOF walk handles fill bytes and length-less standalone
-    markers (TEM/RSTn) — a naive 'read 2-byte length after every 0xFF'
-    walker mis-parses both."""
-    from biomedical_el_spark.operators.multimodal import decode_image_meta
-
-    rows = [
-        (0, bytearray(_make_jpeg(640, 480))),
-        (1, bytearray(_make_jpeg(31, 7, fill_before_sof=5))),
-        (2, bytearray(b"\xff\xd8\xff\xd9")),  # SOI+EOI only: no SOF
-    ]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    got = {r["id"]: r for r in decode_image_meta(df, "id", "payload").collect()}
-    assert (got[0]["format"], got[0]["width"], got[0]["height"]) == ("jpeg", 640, 480)
-    assert (got[1]["format"], got[1]["width"], got[1]["height"]) == ("jpeg", 31, 7)
-    assert (got[2]["format"], got[2]["width"]) == ("jpeg", -1)

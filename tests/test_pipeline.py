@@ -153,3 +153,35 @@ def test_estimate_rows_metadata_only(spark, tmp_path, pages):
     scan = spark.read.parquet(p)
     assert _estimate_rows(scan) == pages.count()
     assert _estimate_rows(spark.range(10).toDF("id")) == 0
+
+
+@pytest.mark.parametrize("snapshots", [False, True], ids=["in_memory", "store"])
+def test_run_linkage_hands_back_shuffle_width(spark, tmp_path, monkeypatch, snapshots):
+    """A corpus that widens the run's shuffle width (TASK_PAGES patched
+    to 1 page per task) leaves the caller's width as it found it on both
+    paths, and every returned stage is already computed: with the input
+    deleted, an action on each stage still runs."""
+    import shutil
+
+    from biomedical_el_spark.plans import linkage
+    from biomedical_el_spark.sources.snapshots import SnapshotStore
+
+    d = str(tmp_path / "pages_wide")
+    generate_pages(spark, 60, cluster_size=4).write.parquet(d)
+    monkeypatch.setattr(linkage, "TASK_PAGES", 1)
+    seen, featurize = [], linkage.featurize
+
+    def spy(pages, cfg):
+        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        return featurize(pages, cfg)
+
+    monkeypatch.setattr(linkage, "featurize", spy)
+    store = SnapshotStore(str(tmp_path / "snap")) if snapshots else None
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    out = run_linkage(spark, spark.read.parquet(d), store=store)
+    assert seen == ["60"] and width != "60"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    shutil.rmtree(d)
+    for df in out.values():
+        df.write.format("noop").mode("overwrite").save()
+        df.unpersist()
